@@ -35,7 +35,7 @@ from cpdd_spark.assemble import assemble_documents
 from cpdd_spark.cc import connected_components
 from cpdd_spark.config import DedupConfig
 from cpdd_spark.exact import exact_clusters, exact_pairs
-from cpdd_spark.lsh import candidate_pairs, simhash_candidates
+from cpdd_spark.lsh import simhash_candidates
 from cpdd_spark.multimodal import (
     audio_features,
     extract_features,
@@ -43,7 +43,7 @@ from cpdd_spark.multimodal import (
     text_to_image_media,
 )
 from cpdd_spark.ngram import decontaminate, jaccard_pairs
-from cpdd_spark.pipeline import DedupPipeline
+from cpdd_spark.pipeline import DedupPipeline, cascade, near_pairs, session_cache
 from cpdd_spark.rangejoin import interval_join
 from cpdd_spark.sampling import hash_bucket, hash_bucket_sql, hash_split, stratified_sample
 from cpdd_spark.session import ship_package
@@ -67,7 +67,6 @@ from cpdd_spark.textfuncs import (
     token_frequencies,
     ws_tokens,
 )
-from cpdd_spark.verify import verify_pairs, verify_pairs_sets
 
 CFG = DedupConfig()
 TURN_TOKENS = 10
@@ -304,54 +303,32 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     above tau), but this query is VALUE-HASH-checked against the exhaustive
     n-gram oracle — one deterministic miss on a future corpus would read as
     an engine bug. So the exact inverted-index pairs are unioned into the
-    CANDIDATE set as a recall backstop before the shared verify tier: the
-    full LSH path still runs and is still verified, while the emitted set is
-    deterministically all pairs with J >= tau (what the oracle computes).
-    The scale pipeline (pipeline.py / scripts/two_scale.py) runs LSH-only.
+    verified LSH pairs as a recall backstop: the full LSH path still runs
+    and is still verified, while the emitted set is deterministically all
+    pairs with J >= tau (what the oracle computes). The scale pipeline
+    (pipeline.py / scripts/two_scale.py) runs LSH-only.
     """
-    # persist: docs feeds the signature path AND the ngram backstop —
-    # uncached it assembles twice
-    docs = _assembled(spark, sf_dir).persist()
-    # with_sets + set-verify (r8): the one fused Arrow pass also emits each
-    # doc's distinct shingle set, so verification is pure-JVM
-    # array_intersect over stored sets instead of a second Python kernel
-    # re-shingling both texts per candidate pair. Jaccard is bit-identical
-    # (both paths intersect the same distinct 64-bit hash sets; LSH
-    # candidates are screened to n_shingles > 0 — verify.py docstring).
-    # with_simhash=False: nothing downstream reads simhash here, and the
-    # bit-plane accumulation is the priciest piece of the fused kernel
-    # (signatures.py docstring); minhash/sets are bit-identical without it.
-    sigs = compute_signatures(
-        docs, CFG, with_sets=True, with_simhash=False
-    ).persist()
-    # candidate_pairs stays EAGER (r8 A/B): its checkpoint action is what
-    # materializes the lazily-persisted sigs cache via ONE subtree before
-    # the verify's two probe sides read it — with a lazy candidate list
-    # all three sigs consumers land in one job and compute the kernel
-    # concurrently before the cache fills (mins 7.1 lazy vs 5.2 eager).
-    verified = verify_pairs_sets(
-        candidate_pairs(sigs, CFG),
-        sigs.select("conv_id", "shingles"),
-        CFG,
-    )
-    # result-level union: a verified LSH pair carries the SAME exact
-    # Jaccard double the inverted index computes (both paths use one
-    # tokenizer — the explicit-whitespace-class split, see
-    # cpdd_spark.textfuncs.WS_* — over the same distinct 5-gram sets, equal
-    # modulo 64-bit shingle-hash collisions). Duplicates collapse on the
-    # PAIR KEY (groupBy + min), not distinct(): even if a pathological
-    # corpus ever made the two jaccard doubles diverge (hash collision),
-    # the output still has one deterministic row per pair instead of two.
-    backstop = jaccard_pairs(docs, "conv_id", "doc", n=5, tau=CFG.tau, eager=False)
-    result = (
-        verified.unionByName(backstop)
-        .groupBy("a", "b")
-        .agg(F.min("jaccard").alias("jaccard"))
-        .localCheckpoint(eager=True)
-    )
-    docs.unpersist()  # hygiene for the multi-query driver session
-    sigs.unpersist()
-    return result
+    with session_cache() as store:
+        docs = store("documents", lambda: _assembled(spark, sf_dir))
+        # result-level union: a verified LSH pair carries the SAME exact
+        # Jaccard double the inverted index computes (both paths use one
+        # tokenizer — the explicit-whitespace-class split, see
+        # cpdd_spark.textfuncs.WS_* — over the same distinct 5-gram sets,
+        # equal modulo 64-bit shingle-hash collisions). Duplicates collapse
+        # on the PAIR KEY (groupBy + min), not distinct(): even if a
+        # pathological corpus ever made the two jaccard doubles diverge
+        # (hash collision), the output still has one deterministic row per
+        # pair instead of two.
+        backstop = jaccard_pairs(
+            docs, "conv_id", "doc", n=5, tau=CFG.tau, store=store
+        )
+        return (
+            near_pairs(docs, CFG, store)
+            .unionByName(backstop)
+            .groupBy("a", "b")
+            .agg(F.min("jaccard").alias("jaccard"))
+            .localCheckpoint(eager=True)
+        )
 
 
 def q_minhash_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -364,24 +341,10 @@ def q_minhash_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     HEADLINE), not oracle-gated; :func:`q_minhash_pairs` is the
     deterministic oracle-mode twin (bit-identical jaccard doubles — see
     tests/test_lsh_verify.py::test_verify_pairs_sets_matches_kernel)."""
-    docs = _assembled(spark, sf_dir)
-    # persist: the fused pass feeds both the band generator and the verify
-    # join (in the pipeline this is a materialized stage table instead).
-    # with_simhash=False: simhash is never read on this route (guide §1.2
-    # "don't compute things you throw away"); minhash/sets bit-identical.
-    sigs = compute_signatures(
-        docs, CFG, with_sets=True, with_simhash=False
-    ).persist()
-    # EAGER candidates (r8 A/B): the checkpoint action fills the sigs
-    # cache through one subtree before the verify fan-out — see
-    # q_minhash_pairs.
-    result = verify_pairs_sets(
-        candidate_pairs(sigs, CFG),
-        sigs.select("conv_id", "shingles"),
-        CFG,
-    ).localCheckpoint(eager=True)
-    sigs.unpersist()
-    return result
+    with session_cache() as store:
+        return near_pairs(_assembled(spark, sf_dir), CFG, store).localCheckpoint(
+            eager=True
+        )
 
 
 def q_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,9 +379,9 @@ def q_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The AT-SCALE flagship: full dedup clustering with near edges from
     the production MinHash+LSH route (banded candidates over exact-tier
     representatives, pure-JVM set verify) instead of q_clusters's
-    exhaustive inverted-index generator — exactly the tier cascade
-    DedupPipeline.run ships (pipeline.py:132), here as a benched,
-    oracle-checked query.
+    exhaustive inverted-index generator — the one batch cascade
+    (cpdd_spark.pipeline.cascade) DedupPipeline.run ships, here without the
+    substring pass as a benched, oracle-checked query.
 
     Same oracle as ``clusters``: on every shipped correctness corpus the
     LSH route's verified pairs connect the identical components (banded
@@ -429,61 +392,10 @@ def q_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     connectivity because an exact member's shingle set is its rep's
     (reference analogue: the tiered cascade computes the same clusters
     cheaper, README:46-73)."""
-    # cache the exact tier: ec is consumed three times (the reps filter,
-    # exact_pairs, and the CC vertex set) and its window sorts the FULL
-    # document text by (length, md5, doc) — uncached, every consumer
-    # replays that sort. persist(), NOT localCheckpoint: warm alternating
-    # A/B at sf0.1 measured persist 5.9-6.5s vs plain 6.9-8.6s vs eager
-    # checkpoint 9.4-16s (the checkpoint's blocking job + stats-bearing
-    # leaf cost more than the saved recompute; cf. the streaming meltdown
-    # note in BENCH/BASELINE.md). lazy_hash=False: identical clusters, one
-    # full text sort fewer (see q_clusters). keep=("doc",) (r8): the doc
-    # column rides the exact window, so the representative table is a
-    # FILTER of this frame instead of a conv_id join back onto a separately
-    # persisted corpus — the docs cache, its fill job, and the two-sided
-    # reps-join exchange are gone from the plan (guide §2.4), and the CC
-    # vertex set reads the same cache (ec's conv_id set == the corpus's).
-    ec = exact_clusters(
-        _assembled(spark, sf_dir), lazy_hash=False, keep=("doc",)
-    ).persist()
-    reps = ec.filter(F.col("conv_id") == F.col("cluster_id")).select(
-        "conv_id", "doc"
-    )
-    # materialize the fused Arrow pass ONCE: banding, the set-verify join,
-    # and CC all read `sigs` — unmaterialized, each consumer re-runs the
-    # Python kernel (measured 13.2 s -> one-pass shape in BENCH_r06).
-    # Same discipline as DedupPipeline's signatures stage table and the
-    # streaming tier's per-batch checkpoint. with_simhash=False: simhash
-    # is never read on this route; minhash/sets bit-identical without it.
-    # persist(), not localCheckpoint (r8): same reuse across the three
-    # consumers, but releasable — the checkpointed RDD of an intermediate
-    # cannot be unpersisted from the DataFrame API, so across the driver's
-    # ~36-query session those blocks accumulate in the block manager until
-    # a JVM GC notices; the persisted form is dropped explicitly below
-    # once the clusters checkpoint (which severs the lineage) lands.
-    # In-session A/B: wall parity (mins 8.4 vs 9.9 s inside a 2x noise
-    # band); hygiene decides.
-    sigs = compute_signatures(
-        reps, CFG, with_sets=True, with_simhash=False
-    ).persist()
-    # EAGER candidates (r8 A/B, 3 rounds alternating): the candidate
-    # checkpoint action fills the lazily-persisted sigs cache through one
-    # subtree before the verify/CC fan-out reads it; with a lazy list all
-    # three sigs consumers share one job and the Arrow kernel runs
-    # concurrently per subtree before the cache fills (mins 17.7/40/25.9
-    # lazy vs 13.5/20.1/12.6 eager round-for-round).
-    verified = verify_pairs_sets(
-        candidate_pairs(sigs, CFG),
-        sigs.select("conv_id", "shingles"),
-        CFG,
-    )
-    edges = exact_pairs(ec).unionByName(verified.select("a", "b"))
-    clusters = connected_components(
-        edges, vertices=ec.select("conv_id")
-    ).localCheckpoint(eager=True)
-    sigs.unpersist()
-    ec.unpersist()
-    return clusters
+    with session_cache() as store:
+        return cascade(
+            _assembled(spark, sf_dir), CFG, store, substring=False
+        ).localCheckpoint(eager=True)
 
 
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:

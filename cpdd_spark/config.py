@@ -33,7 +33,6 @@ class DedupConfig:
     lsh_rows: int = 4           # r ; b*r must equal num_perm
     tau: float = 0.7            # exact-Jaccard acceptance threshold (tier 3)
     # --- SimHash ---
-    simhash_bits: int = 64
     simhash_hamming_max: int = 6   # near-dup screen: popcount(a^b) <= t
     # SimHash blocking auto-escalation (pairs -> triples of bit-blocks):
     # escalate when pair blocking's expected RANDOM-collision load exceeds
@@ -52,8 +51,8 @@ class DedupConfig:
                                 # see substring.py)
     winnow_window: int = 8      # winnowing window (fingerprints kept per w positions)
     # --- skew handling ---
-    max_band_bucket: int = 200  # cap: LSH buckets larger than this are salted/sampled
-    salt_buckets: int = 16      # L salt shards for hot bands
+    max_band_bucket: int = 200  # bucket expansion cap: each member pairs with
+                                # at most this many sorted neighbours
     # --- exact tier verify mode (R7/R8 trade, see exact.exact_clusters) ---
     exact_verify: str = "bytes"  # 'bytes': cpdd-parity string-identity
                                  # grouping (shuffles doc text); 'fingerprint':
@@ -69,21 +68,12 @@ class DedupConfig:
     # --- determinism ---
     seed: int = 42              # matches /root/reference/test_cpdd.sh:28
 
-    # --- spark-level ---
-    shuffle_partitions: int = 32
-
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.num_perm:
             raise ValueError(
                 f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
                 f"must equal num_perm ({self.num_perm})"
             )
-
-    @property
-    def lsh_threshold(self) -> float:
-        """Approximate Jaccard at which LSH collision probability is 0.5:
-        (1/b)^(1/r)."""
-        return (1.0 / self.lsh_bands) ** (1.0 / self.lsh_rows)
 
 
 DEFAULT_CONFIG = DedupConfig()

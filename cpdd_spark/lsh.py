@@ -9,20 +9,17 @@ Jaccard (the same never-trust-the-hash discipline as matching.c:77-83).
 Skew is THE scale hazard here (BASELINE.json: "salted repartitioning to
 defuse hot LSH bands at 10^12-turn scale"). Defenses, layered:
 
-1. **Dedupe before LSH**: signatures are computed over exact-cluster
-   representatives only, so a million byte-identical boilerplate transcripts
-   collapse to ONE row before any band hashing (the reference's layering:
-   cheap exact tier screens before expensive tiers).
-2. **Bounded buckets**: bucket sizes are counted first (one cheap agg);
-   buckets <= ``max_band_bucket`` emit all C(n,2) pairs via a self-join that
-   AQE's skew-join splitting parallelizes; larger ("hot") buckets switch to
-   a salted star topology — members are salted into shards of bounded size,
-   full pairs are emitted only within a shard, and shard representatives are
-   chained so the bucket stays connected. Connectivity through the verify
-   tier is preserved for true duplicate blobs (every edge still gets exact
-   Jaccard verification) while the pair count per bucket drops from O(n^2)
-   to O(n * cap).
-3. **AQE**: adaptive skew-join splitting + partition coalescing handle the
+1. **Dedupe before LSH**: the batch cascade signs exact-cluster
+   representatives only (cpdd_spark.pipeline.cascade), so a million
+   byte-identical boilerplate transcripts collapse to ONE row before any
+   band hashing (the reference's layering: cheap exact tier first).
+2. **Bounded expansion**: :func:`pairs_from_buckets` collects each bucket's
+   sorted members once and pairs member i with its next ``max_band_bucket``
+   neighbours. Small buckets emit all C(n,2) pairs; hot buckets emit
+   O(n * cap) pairs and stay chained, so a true-duplicate blob remains one
+   component through CC. Degenerate buckets are pre-salted into shards of
+   ~``SHARD_TARGET`` members whose representatives are chained.
+3. **AQE**: partition coalescing and skew-join splitting absorb the
    residual imbalance at runtime (session.py).
 """
 
@@ -240,19 +237,11 @@ def pairs_from_buckets(
     return result
 
 
-def candidate_pairs(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    eager: bool = True,
-    release: list | None = None,
-) -> DataFrame:
-    """Distinct candidate ``(a, b)`` pairs with a < b from band collisions."""
+def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Distinct candidate ``(a, b)`` pairs with a < b from band collisions,
+    checkpointed (the bucket-member cache is released before returning)."""
     return pairs_from_buckets(
-        band_buckets(signatures, cfg),
-        ["band_id", "band_hash"],
-        cfg,
-        eager=eager,
-        release=release,
+        band_buckets(signatures, cfg), ["band_id", "band_hash"], cfg
     )
 
 

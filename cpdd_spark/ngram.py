@@ -16,6 +16,8 @@ exactly how the driver's DuckDB oracle cross-checks it.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -89,7 +91,7 @@ def jaccard_pairs(
     n: int = 5,
     tau: float = 0.7,
     max_doc_freq: int | None = None,
-    eager: bool = True,
+    store: Callable[[str, Callable[[], DataFrame]], DataFrame] | None = None,
 ) -> DataFrame:
     """``(a, b, jaccard)`` for all pairs with exact n-gram Jaccard >= tau.
 
@@ -113,8 +115,17 @@ def jaccard_pairs(
       has no df blind spot.
 
     ``max_doc_freq=None`` keeps exact semantics (the DuckDB oracle twin).
+
+    ``store`` (a :data:`cpdd_spark.pipeline.Store`, e.g. a
+    ``session_cache()``) keeps the index and the result stays lazy, so it
+    can join the caller's job. Without one, the pairs are checkpointed and
+    the index released before returning.
     """
-    sets = ngram_sets(df, id_col, text_col, n).persist()  # self-join input
+    # the self-join reads the index twice
+    if store:
+        sets = store("ngram_sets", lambda: ngram_sets(df, id_col, text_col, n))
+    else:
+        sets = ngram_sets(df, id_col, text_col, n).persist()
     postings = sets
     if max_doc_freq is not None:
         # df-cap via a WINDOW over the shingle key (r8): the previous
@@ -153,15 +164,12 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= tau)
         .select("a", "b", "jaccard")
     )
-    if eager:
-        # materialize now (pairs are O(duplicates), tiny next to the index)
-        # so the persisted index can be released immediately — repeated
-        # invocations in one session must not accumulate cached blocks.
-        # eager=False composes this as one lazy branch of a bigger DAG
-        # (e.g. the minhash recall backstop) at the cost of the leaked
-        # (small) index cache for the session's remainder.
-        result = result.localCheckpoint(eager=True)
-        sets.unpersist()
+    if store:
+        return result
+    # pairs are O(duplicates), tiny next to the index: materialize them so
+    # repeated calls in one session accumulate no cached blocks
+    result = result.localCheckpoint(eager=True)
+    sets.unpersist()
     return result
 
 

@@ -1,32 +1,38 @@
-"""End-to-end dedup pipeline: checkpointed stages, lineage + metrics (P12).
+"""The batch dedup cascade and its resumable pipeline (P12).
 
-Plays the role of the reference's top-level driver ``copy_directory``
-(/root/reference/src/cpdd/copy.c:444-573): build the reference index once,
-probe with every source, track statistics. The Spark translation:
+One cascade clusters exact and near-duplicate documents::
 
-- each stage materializes to a table (Iceberg on a cluster, parquet here via
-  :class:`cpdd_spark.io.TableIO`); a stage whose output table exists and
-  committed is SKIPPED on rerun — checkpoint-resume with exactly the
-  reference's no-clobber semantics (``should_overwrite``, copy.c:73-96: the
-  existing destination is kept);
-- a killed run leaves no committed table for the in-flight stage (parquet
-  ``_SUCCESS`` marker / Iceberg snapshot atomicity), so the rerun recomputes
-  exactly that stage — the analogue of ``cleanup_incomplete_file``
-  (copy.c:28-67);
-- per-stage metrics rows (rows out, wall seconds) and per-partition lineage
-  rows generalize ``stats_t`` (include/cpdd.h:61-69) and feed the
-  scaling-efficiency benches.
+    docs -> exact_clusters -> reps -> signatures -> verified_pairs -+
+                                  +-> [substring_pairs] ------------+-> clusters
 
-Stage DAG::
+:func:`cascade` runs it and :func:`near_pairs` its signatures -> LSH
+candidates -> exact-Jaccard verify core. Both take a ``store(name,
+compute)`` callable that decides how each named intermediate is kept; it is
+the only thing that differs between callers:
 
-    turns -> documents -> exact_clusters -> reps -+-> signatures -> verified_pairs -+
-                                                  +-> substring_pairs --------------+-> clusters
+- :class:`DedupPipeline` stores each intermediate as a committed stage
+  table (Iceberg on a cluster, parquet here via :class:`cpdd_spark.io.TableIO`).
+  A stage whose table is committed is reused on rerun — the reference's
+  no-clobber semantics (``should_overwrite``, copy.c:73-96) — and a killed
+  run leaves no commit for the in-flight stage, so the rerun recomputes
+  exactly that stage and everything downstream (``cleanup_incomplete_file``,
+  copy.c:28-67). Per-stage metrics and per-partition lineage rows
+  generalize ``stats_t`` (include/cpdd.h:61-69);
+- queries and benchmark scripts use :func:`session_cache`, which persists
+  each intermediate and releases all of them once the caller's result is
+  materialized.
+
+The fuzzy tiers run over exact-cluster representatives only, so identical
+documents collapse before any signature work (the reference scans its
+reference set once for all sources, copy.c:465-483).
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +47,88 @@ from cpdd_spark.signatures import compute_signatures
 from cpdd_spark.substring import substring_pairs
 from cpdd_spark.textfuncs import human_bytes
 from cpdd_spark.verify import verify_pairs_sets
+
+# store(name, compute) -> the kept intermediate compute() builds
+Store = Callable[[str, Callable[[], DataFrame]], DataFrame]
+
+
+@contextmanager
+def session_cache() -> Iterator[Store]:
+    """A :data:`Store` that persists each intermediate and, when the block
+    exits, unpersists every one of them — materialize the caller's result
+    (e.g. ``localCheckpoint(eager=True)``) inside the block. A long-lived
+    session running many queries thus accumulates no cached blocks."""
+    kept: list[DataFrame] = []
+
+    def store(name: str, compute: Callable[[], DataFrame]) -> DataFrame:
+        kept.append(compute().persist())
+        return kept[-1]
+
+    try:
+        yield store
+    finally:
+        # dependents first, so no release re-plans a still-cached consumer
+        for df in reversed(kept):
+            df.unpersist()
+
+
+def near_pairs(docs: DataFrame, cfg: DedupConfig, store: Store) -> DataFrame:
+    """``documents(conv_id, doc)`` -> verified ``(a, b, jaccard)`` pairs with
+    jaccard >= ``cfg.tau``.
+
+    One fused Arrow pass emits each doc's MinHash signature and its distinct
+    shingle-hash set (no SimHash: nothing here reads it, and it is the
+    priciest part of the kernel). Band collisions give the candidates, and
+    the verify is pure JVM ``array_intersect`` over the stored sets. The
+    candidate list is checkpointed eagerly: that one job fills the kept
+    signatures before both verify join sides read them."""
+    sigs = store(
+        "signatures",
+        lambda: compute_signatures(docs, cfg, with_sets=True, with_simhash=False),
+    )
+    return store(
+        "verified_pairs",
+        lambda: verify_pairs_sets(
+            candidate_pairs(sigs, cfg), sigs.select("conv_id", "shingles"), cfg
+        ),
+    )
+
+
+def representatives(docs: DataFrame, exact: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Each exact cluster's canonical document ``(conv_id, doc, ..)``. In
+    ``bytes`` mode the exact tier carries the doc text (it is in the window
+    key anyway), so this is a filter; in ``fingerprint`` mode the text never
+    shuffles through that window and is joined back instead."""
+    reps = exact.filter(F.col("conv_id") == F.col("cluster_id"))
+    if cfg.exact_verify == "bytes":
+        return reps.select("conv_id", "doc")
+    return docs.join(reps.select("conv_id"), "conv_id")
+
+
+def cascade(
+    docs: DataFrame, cfg: DedupConfig, store: Store, substring: bool = True
+) -> DataFrame:
+    """``documents(conv_id, n_turns, doc_len, doc)`` ->
+    ``clusters(conv_id, cluster_id)``: exact tier, near pairs over its
+    representatives, the optional winnowed substring pass, and connected
+    components over the union of their edges. Exact members are spliced
+    back through the exact edges: a member's shingle set is its rep's."""
+    carry = ("doc",) if cfg.exact_verify == "bytes" else ()
+    exact = store(
+        "exact_clusters",
+        lambda: exact_clusters(
+            docs, lazy_hash=False, verify=cfg.exact_verify, keep=carry
+        ),
+    )
+    reps = representatives(docs, exact, cfg)
+    edges = exact_pairs(exact).unionByName(near_pairs(reps, cfg, store).select("a", "b"))
+    if substring:
+        substr = store("substring_pairs", lambda: substring_pairs(reps, cfg))
+        edges = edges.unionByName(substr.select("a", "b"))
+    return store(
+        "clusters",
+        lambda: connected_components(edges, vertices=exact.select("conv_id")),
+    )
 
 
 def materialize_clusters(clusters: DataFrame, docs: DataFrame) -> DataFrame:
@@ -142,81 +230,32 @@ class DedupPipeline:
             raise ValueError(f"link_mode must be 'edges' or 'materialize', got {link_mode!r}")
         cfg = self.cfg
 
+        def store(name: str, compute: Callable[[], DataFrame]) -> DataFrame:
+            if name == "clusters":
+                # R15 dest-tree analogue (copy.c:196-239): the clusters
+                # table lands hash-bucketed on conv_id (Iceberg
+                # bucket(conv_id) spec via io.write(partition_by)), so
+                # member lookups and conv_id joins prune to one bucket
+                return self._stage(
+                    name,
+                    lambda: compute().withColumn(
+                        "part_bucket",
+                        F.pmod(F.crc32("conv_id"), F.lit(cfg.output_buckets)).cast("int"),
+                    ),
+                    resume,
+                    partition_by=["part_bucket"],
+                )
+            table = self._stage(name, compute, resume)
+            if name == "signatures" and "shingles" not in table.columns:
+                # a committed table from a run before signatures carried
+                # shingle sets: recompute it (and, as for any recompute,
+                # everything downstream) instead of failing in verify
+                self.stage_log.pop()
+                table = self._stage(name, compute, resume=False)
+            return table
+
         docs = self._stage("documents", lambda: assemble_documents(turns), resume)
-        # cfg.exact_verify='fingerprint' is the production scale mode: the
-        # exact tier groups on (n_turns, doc_len, md5, xxh64) and never
-        # shuffles document text (~50 B/doc instead of the corpus) — same
-        # clusters, proven equivalent in tests/test_exact.py
-        exact = self._stage(
-            "exact_clusters",
-            lambda: exact_clusters(docs, verify=cfg.exact_verify),
-            resume,
-        )
-
-        # fuzzy tiers run over exact-cluster representatives only: identical
-        # docs collapse before any signature work (tier layering == skew
-        # defense #1; the reference scans refs once for all sources,
-        # copy.c:465-483 — we persist the rep set once for all fuzzy tiers)
-        reps = docs.join(
-            exact.filter(F.col("conv_id") == F.col("cluster_id")).select("conv_id"),
-            "conv_id",
-        )
-
-        # with_sets: the one fused Arrow pass also materializes each rep's
-        # distinct shingle-hash set next to its signature, so the verify
-        # stage below is pure JVM (array_intersect over the stored table —
-        # no text joins, no Python workers; verify_pairs_sets docstring).
-        # Band generation reads only (conv_id, n_shingles, minhash): the
-        # set column is pruned at that scan.
-        sig_compute = lambda: compute_signatures(reps, cfg, with_sets=True)  # noqa: E731
-        sigs = self._stage("signatures", sig_compute, resume)
-        if "shingles" not in sigs.columns:
-            # a committed signatures table from a pre-with_sets run lacks
-            # the set column the verify stage reads: recompute instead of
-            # failing with an unresolved-column error (downstream stages go
-            # dirty with it, as for any recompute)
-            self.stage_log.pop()
-            self._dirty = True
-            sigs = self._stage("signatures", sig_compute, resume=False)
-        verified = self._stage(
-            "verified_pairs",
-            lambda: verify_pairs_sets(
-                candidate_pairs(sigs, cfg),
-                sigs.select("conv_id", "shingles"),
-                cfg,
-            ),
-            resume,
-        )
-
-        edge_frames = [
-            exact_pairs(exact),
-            verified.select("a", "b"),
-        ]
-        if self.enable_substring:
-            substr = self._stage(
-                "substring_pairs", lambda: substring_pairs(reps, cfg), resume
-            )
-            edge_frames.append(substr.select("a", "b"))
-
-        edges = edge_frames[0]
-        for e in edge_frames[1:]:
-            edges = edges.unionByName(e)
-
-        # R15 dest-tree analogue (copy.c:196-239): the clusters table lands
-        # hash-bucketed on conv_id (part_bucket == Iceberg bucket(conv_id)
-        # spec via io.write(partition_by)) so member lookups and downstream
-        # conv_id joins prune to one bucket instead of scanning the table
-        clusters = self._stage(
-            "clusters",
-            lambda: connected_components(
-                edges, vertices=docs.select("conv_id")
-            ).withColumn(
-                "part_bucket",
-                F.pmod(F.crc32("conv_id"), F.lit(cfg.output_buckets)).cast("int"),
-            ),
-            resume,
-            partition_by=["part_bucket"],
-        )
+        clusters = cascade(docs, cfg, store, self.enable_substring)
         if link_mode == "materialize":
             self._stage(
                 "clusters_docs",

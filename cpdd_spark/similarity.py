@@ -69,32 +69,16 @@ def _norm(a, dim: int | None = None):
 
 
 def with_cosine(
-    pairs: DataFrame,
-    va: str = "emb_a",
-    vb: str = "emb_b",
-    dim: int | None = None,
-    na: str | None = None,
-    nb: str | None = None,
+    pairs: DataFrame, va: str = "emb_a", vb: str = "emb_b", dim: int | None = None
 ) -> DataFrame:
     """``dim`` unrolls the fold for codegen (see :func:`_dot`) — pass it
     whenever the embedding width is statically known; semantics (and the
     emitted doubles) are identical for arrays of exactly that length,
-    which every caller's schema guarantees.
-
-    ``na``/``nb`` name PRECOMPUTED norm columns (built with :func:`_norm`
-    over the same arrays, attached once per VECTOR on the slim side of the
-    verify joins). A candidate list verifies millions of pairs against a
-    corpus of thousands of vectors, so recomputing each side's norm per
-    PAIR did ~2/3 of the verify arithmetic redundantly (guide §1.2 "don't
-    compute things you throw away"). Bit-identical cosines: the attached
-    norm is the same left-to-right fold over the same array, and
-    ``dot / (na * nb)`` multiplies and divides the same doubles in the
-    same order as the inline form."""
-    norm_a = F.col(na) if na else _norm(F.col(va), dim)
-    norm_b = F.col(nb) if nb else _norm(F.col(vb), dim)
+    which every caller's schema guarantees."""
     return pairs.withColumn(
         "cosine",
-        _dot(F.col(va), F.col(vb), dim) / (norm_a * norm_b),
+        _dot(F.col(va), F.col(vb), dim)
+        / (_norm(F.col(va), dim) * _norm(F.col(vb), dim)),
     )
 
 

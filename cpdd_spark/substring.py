@@ -100,7 +100,6 @@ def fingerprints(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 def substring_pairs(
     docs: DataFrame,
     cfg: DedupConfig,
-    eager: bool = True,
     complete: bool = False,
 ) -> DataFrame:
     """Verified substring-duplicate pairs ``(a, b, n_common_runs)``:
@@ -139,13 +138,10 @@ def substring_pairs(
             .filter(F.col("a") < F.col("b"))
             .select("a", "b")
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        if eager:
-            cands = cands.localCheckpoint(eager=True)
     else:
-        # eager: see pairs_from_buckets — hygiene barrier for long-lived
-        # sessions, skippable in single-job runs
-        cands = pairs_from_buckets(fps, ["fp"], cfg, eager=eager)
+        cands = pairs_from_buckets(fps, ["fp"], cfg)
 
     # Verify against PRECOMPUTED per-doc R-gram hash sets instead of
     # re-shingling both documents per candidate pair (a doc in k pairs was

@@ -3,14 +3,18 @@
 Mirrors the reference's non-negotiable rule that a hash match is never
 trusted without verification (MD5 collision guard,
 /root/reference/src/cpdd/matching.c:77-83; byte compare 30-59): every LSH /
-SimHash candidate pair is re-checked with EXACT w-shingle Jaccard on the
-document text, and only pairs >= tau survive.
+SimHash candidate pair is re-checked with EXACT w-shingle Jaccard, and only
+pairs >= tau survive.
 
-Batch-vectorized: one Arrow pass per batch re-uses the signature kernel's
-shingle hasher (64-bit hashes; collision odds ~2^-64 per shingle pair), with
-``np.intersect1d`` per pair. Scale note: at 10^12 turns you'd verify against
-stored shingle-hash arrays instead of re-tokenizing raw text; the operator
-is isolated behind this function so that swap touches nothing else.
+Two forms compute the same Jaccard over the same distinct 64-bit shingle
+hashes (collision odds ~2^-64 per shingle pair):
+
+- :func:`verify_pairs_sets`, the production form, intersects shingle-hash
+  sets stored once per document next to its signature
+  (``compute_signatures(with_sets=True)``) — pure JVM, no document text;
+- :func:`verify_pairs` re-shingles both documents' text per pair in an
+  Arrow kernel. It is the independent reference the set form is tested
+  against.
 """
 
 from __future__ import annotations
@@ -48,12 +52,8 @@ def verify_pairs(
     # builds from (pairs JOIN doc_a) — candidate-count x doc_a bytes per
     # hash partition — and streams the docs again. Sort-merge would instead
     # sort the full rep-corpus text twice per verify, which measures worse
-    # at every shipped scale. Caveat on a dup-HEAVY corpus: join 2's build
-    # side grows with candidates x doc size; the valves are (a) shuffle
-    # partition count (build is per-partition), and (b) at 10^12 turns the
-    # verify tier should join stored shingle-hash arrays instead of raw
-    # text (see module docstring) — the swap is isolated behind this
-    # function.
+    # at every shipped scale. On a dup-HEAVY corpus join 2's build side
+    # grows with candidates x doc size — verify_pairs_sets avoids that.
     joined = (
         pairs.hint("shuffle_hash")
         .join(da, "a")
@@ -92,7 +92,7 @@ def verify_pairs(
 def verify_pairs_sets(
     pairs: DataFrame, sets: DataFrame, cfg: DedupConfig, keep_all: bool = False
 ) -> DataFrame:
-    """The 10^12-turn form of :func:`verify_pairs`: verification against
+    """The production form of :func:`verify_pairs`: verification against
     PRECOMPUTED shingle-hash sets (:func:`cpdd_spark.signatures.shingle_sets`)
     instead of raw text — ``(a, b, jaccard)`` with jaccard >= cfg.tau.
 

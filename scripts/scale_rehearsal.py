@@ -52,20 +52,15 @@ def ensure_fixture(num_convs: int) -> str:
 
 
 def run_stages(num_convs: int) -> dict:
-    from pyspark.sql import functions as F
-
     from cpdd_spark.assemble import assemble_documents
-    from cpdd_spark.cc import connected_components
     from cpdd_spark.config import DedupConfig
-    from cpdd_spark.exact import exact_clusters, exact_pairs
-    from cpdd_spark.lsh import candidate_pairs, simhash_candidates
+    from cpdd_spark.lsh import simhash_candidates
     from cpdd_spark.ngram import jaccard_pairs
+    from cpdd_spark.pipeline import cascade, representatives, session_cache
     from cpdd_spark.session import get_spark
     from cpdd_spark.signatures import compute_signatures
-    from cpdd_spark.substring import substring_pairs
-    from cpdd_spark.verify import verify_pairs_sets
 
-    cfg = DedupConfig()
+    cfg = DedupConfig(exact_verify="fingerprint")
     spark = get_spark(
         master="local[32]",
         app_name=f"rehearsal_{num_convs}",
@@ -90,72 +85,56 @@ def run_stages(num_convs: int) -> dict:
     laps: dict[str, float] = {}
 
     def lap(label: str, fn):
+        # fn constructs AND materializes inside the timer: some operators
+        # (eager candidate checkpoints) do their work at construction
         print(f"# stage {label} ...", file=sys.stderr, flush=True)
         t0 = time.time()
         out = fn()
         laps[label] = round(time.time() - t0, 2)
-        print(f"# stage {label}: {laps[label]}s (n={out})", file=sys.stderr, flush=True)
+        print(f"# stage {label}: {laps[label]}s", file=sys.stderr, flush=True)
         return out
 
-    docs = assemble_documents(turns).persist()
-    lap("assemble", docs.count)
-    exact = exact_clusters(docs, lazy_hash=False, verify="fingerprint").persist()
-    lap("exact", exact.count)
-    reps = docs.join(
-        exact.filter(F.col("conv_id") == F.col("cluster_id")).select("conv_id"),
-        "conv_id",
-    ).persist()
-    n_reps = reps.count()
-    sigs = compute_signatures(reps, cfg, with_sets=True).persist()
-    lap("signatures", sigs.count)
+    with session_cache() as cache:
+        kept = {}
 
-    # every stage lambda CONSTRUCTS and materializes inside the timer —
-    # several operators (jaccard_pairs eager mode) do their work at
-    # construction via localCheckpoint, which a count-only lap would miss
-    verified = verify_pairs_sets(
-        candidate_pairs(sigs, cfg, eager=False),
-        sigs.select("conv_id", "shingles"),
-        cfg,
-    ).persist()
-    lap("lsh_verify", verified.count)
+        def store(name, compute):
+            # keep each stage, and fill it inside its own lap
+            def keep():
+                kept[name] = cache(name, compute)
+                kept[name].count()
+                return kept[name]
 
-    # auto (what the pipeline runs: the escalation valve picks pairs or
-    # triples from n_reps) plus the FORCED pair form, so the valve's
-    # saving is a measured delta at every rehearsed size
-    lap(
-        "simhash_auto",
-        lambda: simhash_candidates(sigs, cfg, n_docs=n_reps).count(),
-    )
-    lap(
-        "simhash_pairs_forced",
-        lambda: simhash_candidates(sigs, cfg, n_docs=None).count(),
-    )
+            return lap(name, keep)
 
-    lap(
-        "ngram_capped",
-        lambda: jaccard_pairs(
-            reps, "conv_id", "doc", n=5, tau=cfg.tau, max_doc_freq=200,
-            eager=False,
-        ).count(),
-    )
+        docs = store("documents", lambda: assemble_documents(turns))
+        cascade(docs, cfg, store)
 
-    substr = substring_pairs(reps, cfg, eager=False).persist()
-    lap("substring", substr.count)
-
-    edges = (
-        exact_pairs(exact)
-        .unionByName(verified.select("a", "b"))
-        .unionByName(substr.select("a", "b"))
-    )
-    lap(
-        "cc",
-        lambda: connected_components(
-            edges, vertices=docs.select("conv_id"), n_partitions=16
+        reps = store(
+            "reps", lambda: representatives(docs, kept["exact_clusters"], cfg)
         )
-        .select("cluster_id")
-        .distinct()
-        .count(),
-    )
+        n_reps = reps.count()
+        # the SimHash screen signs the reps itself: the cascade's signatures
+        # carry no simhash
+        simsigs = store(
+            "simhash_signatures", lambda: compute_signatures(reps, cfg, with_minhash=False)
+        )
+        # auto (the escalation valve picks pairs or triples from n_reps)
+        # plus the FORCED pair form, so the valve's saving is a measured
+        # delta at every rehearsed size
+        lap(
+            "simhash_auto",
+            lambda: simhash_candidates(simsigs, cfg, n_docs=n_reps).count(),
+        )
+        lap(
+            "simhash_pairs_forced",
+            lambda: simhash_candidates(simsigs, cfg, n_docs=None).count(),
+        )
+        lap(
+            "ngram_capped",
+            lambda: jaccard_pairs(
+                reps, "conv_id", "doc", n=5, tau=cfg.tau, max_doc_freq=200
+            ).count(),
+        )
     total = round(sum(laps.values()), 2)
     out = {
         "num_convs": num_convs,

@@ -18,7 +18,9 @@ Usage:
     python scripts/two_scale.py               # full protocol -> BENCH/BASELINE.md
     python scripts/two_scale.py --run 8       # single measurement (JSON line)
     SPARK_GRAFT_LEGS=8,32 python scripts/two_scale.py   # saturated pair
-    SPARK_GRAFT_STAGE_LAPS=1 ... --run 8      # per-stage diagnostics
+
+Per-stage laps come from scripts/scale_rehearsal.py, which materializes
+each stage on its own; this job runs the cascade unbroken.
 """
 
 from __future__ import annotations
@@ -55,19 +57,17 @@ def ensure_fixture() -> str:
 
 
 def run_once(cores: int) -> dict:
-    from pyspark.sql import functions as F
-
     from cpdd_spark.assemble import assemble_documents
-    from cpdd_spark.cc import connected_components
     from cpdd_spark.config import DedupConfig
-    from cpdd_spark.exact import exact_clusters, exact_pairs
-    from cpdd_spark.lsh import candidate_pairs
+    from cpdd_spark.pipeline import cascade, session_cache
     from cpdd_spark.session import get_spark
-    from cpdd_spark.signatures import compute_signatures
-    from cpdd_spark.substring import substring_pairs
-    from cpdd_spark.verify import verify_pairs_sets
 
-    cfg = DedupConfig()
+    # fingerprint verify: the exact tier groups on (n_turns, doc_len, md5,
+    # xxhash64) so the corpus TEXT shuffles exactly once (in assembly) —
+    # round-1 shuffled it three times and the shared host disk was the
+    # measured scaling floor. Clusters are identical to byte-verify mode
+    # (tests/test_exact.py::test_fingerprint_mode_matches_bytes).
+    cfg = DedupConfig(exact_verify="fingerprint")
     # N vs 4N EXECUTORS, literally: local-cluster spawns separate executor
     # JVMs (up to 4 cores / 8g heap each — a realistic executor shape). A
     # single local[32] JVM measures one JVM's GC/scheduler contention at 32
@@ -129,63 +129,11 @@ def run_once(cores: int) -> dict:
         _noop, "id long"
     ).write.format("noop").mode("overwrite").save()
 
-    instrument = bool(os.environ.get("SPARK_GRAFT_STAGE_LAPS"))
-
-    def lap(label, t_prev):
-        if not instrument:
-            return t_prev
-        now = time.time()
-        print(f"# stage {label}: {now - t_prev:.1f}s", file=sys.stderr)
-        return now
-
     t0 = time.time()
-    t = t0
-    # fingerprint verify: the exact tier groups on (n_turns, doc_len, md5,
-    # xxhash64) so the corpus TEXT shuffles exactly once (in assembly) —
-    # round-1 shuffled it three times and the shared host disk was the
-    # measured scaling floor. Clusters are identical to byte-verify mode
-    # (tests/test_exact.py::test_fingerprint_mode_matches_bytes).
-    docs = assemble_documents(turns).persist()
-    exact = exact_clusters(docs, lazy_hash=False, verify="fingerprint").persist()
-    if instrument:
-        docs.count(); t = lap("assemble", t)
-        exact.count(); t = lap("exact", t)
-    reps = docs.join(
-        exact.filter(F.col("conv_id") == F.col("cluster_id")).select("conv_id"),
-        "conv_id",
-    ).persist()
-    # with_sets: one fused Arrow pass emits signatures AND shingle sets;
-    # verification below is then pure JVM (array_intersect over the
-    # persisted sets — no text joins, no Python workers in the verify
-    # stage), matching what DedupPipeline ships
-    sigs = compute_signatures(reps, cfg, with_sets=True).persist()
-    if instrument:
-        sigs.count(); t = lap("signatures", t)
-    # eager=False: this is a one-job session — skip the cache-hygiene
-    # materialization barrier so pair expansion pipelines into the verify
-    # join (the barrier is pure serial time, identical at every cluster
-    # size; see pairs_from_buckets)
-    cands = candidate_pairs(sigs, cfg, eager=False)
-    verified = verify_pairs_sets(
-        cands, sigs.select("conv_id", "shingles"), cfg
-    ).persist()
-    if instrument:
-        verified.count(); t = lap("candidates+verify", t)
-    # substring tier: part of the mandated pipeline (north rule lists the
-    # suffix/substring pass alongside MinHash+LSH), so the benchmark runs it
-    substr = substring_pairs(reps, cfg, eager=False).persist()
-    if instrument:
-        substr.count(); t = lap("substring", t)
-    edges = (
-        exact_pairs(exact)
-        .unionByName(verified.select("a", "b"))
-        .unionByName(substr.select("a", "b"))
-    )
-    clusters = connected_components(
-        edges, vertices=docs.select("conv_id"), n_partitions=max(8, cores // 2)
-    )
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    t = lap("cc", t)
+    with session_cache() as store:
+        docs = store("documents", lambda: assemble_documents(turns))
+        clusters = cascade(docs, cfg, store)
+        n_clusters = clusters.select("cluster_id").distinct().count()
     seconds = time.time() - t0
 
     out = {

@@ -147,7 +147,7 @@ def test_bench_query_keys_resolve():
         assert callable(queries[name])
 
 
-def test_clusters_lsh_equals_ngram_route_sf01(spark):
+def test_clusters_lsh_equals_ngram_route_sf01(spark, tmp_path):
     """The production LSH route (q_clusters_lsh: banded candidates over
     exact reps + pure-JVM set verify) must produce IDENTICAL clusters to
     the exhaustive inverted-index route (q_clusters) on the sf0.1 bench
@@ -155,19 +155,63 @@ def test_clusters_lsh_equals_ngram_route_sf01(spark):
     at-scale flagship story (same clusters, cheaper candidates;
     reference README:46-73 tiered-cascade discipline). Deterministic:
     MinHash/banding are seeded, so recall on a fixed corpus is a fixed
-    fact, not a probability."""
+    fact, not a probability. The third side runs the same cascade through
+    DedupPipeline's stage tables instead of the session cache, pinning
+    both stores to the same clusters."""
     import os
 
+    from cpdd_spark.pipeline import DedupPipeline
+
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    a = {(r["conv_id"], r["cluster_id"]) for r in entry_mod.q_clusters(spark, sf).collect()}
-    b = {
-        (r["conv_id"], r["cluster_id"])
-        for r in entry_mod.q_clusters_lsh(spark, sf).collect()
+    pipeline = DedupPipeline(spark, str(tmp_path / "work"), enable_substring=False)
+    routes = {
+        "ngram": entry_mod.q_clusters(spark, sf),
+        "lsh": entry_mod.q_clusters_lsh(spark, sf),
+        "pipeline": pipeline.run(entry_mod.derived_transcripts(spark, sf)),
     }
-    assert a == b, (
-        f"routes diverge: {len(a - b)} ngram-only, {len(b - a)} lsh-only "
-        f"of {len(a)}/{len(b)} rows"
-    )
+    got = {
+        route: {(r["conv_id"], r["cluster_id"]) for r in df.select("conv_id", "cluster_id").collect()}
+        for route, df in routes.items()
+    }
+    a = got["ngram"]
+    for route in ("lsh", "pipeline"):
+        b = got[route]
+        assert a == b, (
+            f"routes diverge: {len(a - b)} ngram-only, {len(b - a)} {route}-only "
+            f"of {len(a)}/{len(b)} rows"
+        )
+
+
+def _cache_entries(spark) -> set:
+    """Identities of the entries in the session's CacheManager (a private
+    field, read by reflection: no public API lists them)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    return {spark._jvm.System.identityHashCode(entries.apply(i)) for i in range(entries.size())}
+
+
+def test_cascade_callers_release_cache(spark, tmp_path):
+    """Every caller of the batch cascade leaves the session cache as it
+    found it: after each call the CacheManager holds no entry it did not
+    hold before (the session-cache store's release contract — a driver
+    session runs dozens of queries in one JVM)."""
+    from cpdd_spark.pipeline import DedupPipeline
+
+    callers = {
+        "DedupPipeline.run": lambda: DedupPipeline(spark, str(tmp_path / "work")).run(
+            entry_mod.derived_transcripts(spark, SF_DIR)
+        ),
+        "clusters_lsh": lambda: entry_mod.q_clusters_lsh(spark, SF_DIR),
+        "minhash_pairs_lsh": lambda: entry_mod.q_minhash_pairs_lsh(spark, SF_DIR),
+        "minhash_pairs": lambda: entry_mod.q_minhash_pairs(spark, SF_DIR),
+    }
+    for name, call in callers.items():
+        before = _cache_entries(spark)
+        assert call().count() > 0, name
+        leaked = _cache_entries(spark) - before
+        assert not leaked, f"{name} left {len(leaked)} cache entries behind"
 
 
 def test_assembled_direct_matches_assembly(spark):

@@ -87,7 +87,7 @@ def test_hot_bucket_capped(spark):
     from cpdd_spark.fixtures import FixtureParams, generate
 
     fx = generate(FixtureParams(num_convs=20, skew_block=150, seed=5))
-    cfg = DedupConfig(max_band_bucket=20, salt_buckets=4)
+    cfg = DedupConfig(max_band_bucket=20)
     turns = spark.createDataFrame(fx.transcripts)
     docs = assemble_documents(turns).cache()
     # identical docs collapse at the exact tier; force them through LSH to
