@@ -501,9 +501,13 @@ def q_embed_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     200-member near-duplicate blobs, so the value-hash comparison is
     stable; a corpus stressing either regime belongs with the rows-only
     approximate queries instead."""
-    return cosine_dup_pairs_lsh(
-        _read(spark, sf_dir, "embeddings"), threshold=0.8, dim=64
-    )
+    caches: list = []
+    result = cosine_dup_pairs_lsh(
+        _read(spark, sf_dir, "embeddings"), threshold=0.8, dim=64, release=caches
+    ).localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()
+    return result
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:

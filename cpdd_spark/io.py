@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
@@ -57,17 +58,12 @@ class TableIO:
         return self.spark.read.parquet(self.path(name))
 
     def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> None:
+        """Create or replace table ``name`` with ``df``."""
         if self.iceberg:
             w = df.writeTo(f"cpdd.{name}")
             if partition_by:
-                from pyspark.sql import functions as F
-
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
             return
@@ -80,8 +76,6 @@ class TableIO:
             # Iceberg fixes the partition spec at table creation — apply it
             # on the first append (create), inherit it afterwards
             if partition_by and not self.spark.catalog.tableExists(f"cpdd.{name}"):
-                from pyspark.sql import functions as F
-
                 df.writeTo(f"cpdd.{name}").partitionedBy(
                     *[F.col(c) for c in partition_by]
                 ).create()
@@ -93,24 +87,17 @@ class TableIO:
     def _write_parquet(
         self, df: DataFrame, name: str, mode: str, partition_by: list[str] | None
     ) -> None:
-        """Parquet write with empty-output guards — a degenerate write must
-        still commit a READABLE (schema-bearing) table:
-
-        - a ZERO-partition DataFrame (empty input relation) writes no
-          parquet part files at all, only _SUCCESS, and read-back then
-          fails schema inference → force one empty file (getNumPartitions
-          is plan metadata, no job);
-        - a dynamic-partitioned write of ZERO rows creates no partition
-          directories (same unreadable result). Detected AFTER the write by
-          a filesystem walk (no part file anywhere under the table dir) —
-          an upfront ``isEmpty()`` would re-execute the full upstream plan
-          once per non-degenerate partitioned write just to prove it
-          non-empty; the walk costs ~zero and only the degenerate shape
-          pays the rewrite. The rewrite commits the empty table
-          unpartitioned: the partition column stays as a data column, so
-          the read-back schema is unchanged."""
-        if df.rdd.getNumPartitions() == 0:
-            df = df.repartition(1)
+        """Parquet write that always commits a READABLE (schema-bearing)
+        table. A zero-partition input still writes one empty part file
+        (Spark does that itself), but a dynamic-partitioned write of ZERO
+        rows creates no partition directories, only ``_SUCCESS``, and the
+        read-back then fails schema inference. That shape is detected
+        AFTER the write by a filesystem walk (no part file anywhere under
+        the table dir) — an upfront ``isEmpty()`` would re-execute the
+        upstream plan just to prove it non-empty; the walk costs ~zero and
+        only the degenerate shape pays the rewrite. The rewrite commits the
+        empty table unpartitioned: the partition column stays as a data
+        column, so the read-back schema is unchanged."""
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -138,8 +125,6 @@ class TableIO:
 
     @staticmethod
     def _has_part_files_hadoop(path: str) -> bool:
-        from pyspark.sql import SparkSession
-
         spark = SparkSession.getActiveSession()
         jvm = spark._jvm
         jsc = spark._jsc

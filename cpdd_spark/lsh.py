@@ -58,7 +58,6 @@ def pairs_from_buckets(
     buckets: DataFrame,
     key_cols: list[str],
     cfg: DedupConfig,
-    eager: bool = True,
     id_col: str = "conv_id",
     distinct: bool = True,
     payload_cols: list[str] | None = None,
@@ -97,6 +96,12 @@ def pairs_from_buckets(
     - degenerate buckets (n > SHARD_TARGET) are pre-salted into shards of
       ~SHARD_TARGET members to bound the collect_list row, and shard
       representatives are chained to keep the bucket connected.
+
+    The result is checkpointed and the bucket-member cache released before
+    returning, unless the caller passes a ``release`` list: then the result
+    stays lazy (the expansion pipelines into the caller's consumer, one job
+    fewer) and the cache goes on ``release`` for the caller to unpersist
+    once its own result is materialized.
     """
     cap = cfg.max_band_bucket
     # bucket size as a WINDOW over the bucket key (r8): the previous
@@ -212,28 +217,11 @@ def pairs_from_buckets(
         )
     if distinct:
         result = result.distinct()
-    if eager:
-        # materialize the (small, O(candidates)) result now so `grouped`'s
-        # cache can be released right away — leaked persists across a
-        # multi-query session otherwise accumulate until storage eviction
-        # pressure builds. The default because the driver's correctness
-        # session runs ~25 queries in one JVM.
-        result = result.localCheckpoint(eager=True)
-        grouped.unpersist()
-        return result
-    # eager=False: single-job sessions (the two-scale benchmark, one
-    # pipeline stage per table write) skip the materialization barrier —
-    # the pair expansion pipelines straight into the verify join and the
-    # persisted `grouped` dies with the short-lived session/stage. This is
-    # measured SERIAL time: the barrier job costs ~10-15 s on the 6.7M-turn
-    # fixture at every cluster size, pure Amdahl loss.
-    # `release`: long-lived multi-query sessions (the driver's) get the
-    # same pipelining WITHOUT the cache leak — the persisted `grouped` is
-    # appended for the caller to unpersist once its own final result is
-    # materialized (r8: deletes one candidate-list-sized materialization
-    # job per query while keeping the session-hygiene contract).
     if release is not None:
         release.append(grouped)
+        return result
+    result = result.localCheckpoint(eager=True)
+    grouped.unpersist()
     return result
 
 
@@ -363,12 +351,7 @@ def simhash_candidates(
     # passes `release`, the intermediate candidate checkpoint is skipped
     # and the whole screen pipelines into one job
     cand = pairs_from_buckets(
-        keyed,
-        ["block_id", "block_val"],
-        cfg,
-        payload_cols=["simhash"],
-        eager=release is None,
-        release=release,
+        keyed, ["block_id", "block_val"], cfg, payload_cols=["simhash"], release=release
     )
     return (
         cand.withColumn(

@@ -16,8 +16,9 @@ the only thing that differs between callers:
   no-clobber semantics (``should_overwrite``, copy.c:73-96) — and a killed
   run leaves no commit for the in-flight stage, so the rerun recomputes
   exactly that stage and everything downstream (``cleanup_incomplete_file``,
-  copy.c:28-67). Per-stage metrics and per-partition lineage rows
-  generalize ``stats_t`` (include/cpdd.h:61-69);
+  copy.c:28-67). Per-partition lineage rows and per-stage metrics
+  generalize ``stats_t`` (include/cpdd.h:61-69): one lineage append over
+  the committed table per stage, whose observed row sum is the metrics row;
 - queries and benchmark scripts use :func:`session_cache`, which persists
   each intermediate and releases all of them once the caller's result is
   materialized.
@@ -34,7 +35,7 @@ import uuid
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cpdd_spark.assemble import assemble_documents
@@ -171,27 +172,37 @@ class DedupPipeline:
 
     # ---- bookkeeping ----------------------------------------------------
 
-    def _record(self, stage: str, t0: float) -> None:
-        """Append metrics (stage totals) + lineage (per-partition rows) —
-        stats_t generalized (include/cpdd.h:61-69, increments copy.c:267-333).
+    def _record(self, stage: str, table: DataFrame, t0: float) -> None:
+        """Append lineage (per-partition row counts of the committed
+        ``table``) and metrics (the stage total) — stats_t generalized
+        (include/cpdd.h:61-69, increments copy.c:267-333). The lineage
+        append is the only action over the stage table: an
+        :class:`Observation` on it sums the rows, so the metrics row needs
+        no second aggregate and equals the lineage sum by construction.
         """
+        total = Observation()
         lineage = (
-            self.io.read(stage)
-            .groupBy(F.spark_partition_id().alias("partition_id"))
+            table.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count(F.lit(1)).alias("rows"))
             .withColumn("run_id", F.lit(self.run_id))
             .withColumn("stage", F.lit(stage))
             .select("run_id", "stage", "partition_id", "rows")
+            .observe(total, F.sum("rows").alias("rows"))
         )
         # run_id partitioning: appends only ever CREATE a new partition
         # directory (never touch prior runs' files), and reading one run's
         # rows partition-prunes every other run
         self.io.append(lineage, "lineage", partition_by=["run_id"])
-        n = lineage.agg(F.sum("rows")).collect()[0][0] or 0
-        metrics = self.spark.createDataFrame(
-            [(self.run_id, stage, int(n), float(t0), time.time())],
-            "run_id string, stage string, rows long, t_start double, t_end double",
-        ).withColumn("seconds", F.col("t_end") - F.col("t_start"))
+        t1 = time.time()
+        # literals over one range row: no Python-side rows, no worker
+        metrics = self.spark.range(1).select(
+            F.lit(self.run_id).alias("run_id"),
+            F.lit(stage).alias("stage"),
+            F.lit(total.get["rows"] or 0).cast("long").alias("rows"),
+            F.lit(t0).alias("t_start"),
+            F.lit(t1).alias("t_end"),
+            F.lit(t1 - t0).alias("seconds"),
+        )
         self.io.append(metrics, "metrics", partition_by=["run_id"])
 
     def _stage(
@@ -211,9 +222,10 @@ class DedupPipeline:
         self._dirty = True
         t0 = time.time()
         self.io.write(compute(), name, partition_by=partition_by)
-        self._record(name, t0)
+        table = self.io.read(name)
+        self._record(name, table, t0)
         self.stage_log.append((name, "computed"))
-        return self.io.read(name)
+        return table
 
     # ---- the pipeline ----------------------------------------------------
 

@@ -206,6 +206,7 @@ def cosine_dup_pairs_lsh(
     seed: int = 42,
     cfg: DedupConfig | None = None,
     broadcast_vectors: bool = True,
+    release: list | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs WITHOUT the crossJoin: multi-table sign-LSH
     candidates -> exact-cosine verification (the dedup tiers' screen-then-
@@ -216,6 +217,12 @@ def cosine_dup_pairs_lsh(
     fits executor memory — tens of millions of rows at dim 64). At 10^9+
     vectors pass ``False`` and let the planner shuffle-join against the
     bucketed vector table instead.
+
+    ``release``: as in :func:`cpdd_spark.lsh.pairs_from_buckets` — when
+    given, the candidate expansion pipelines into the verify and the
+    bucket-member cache (and the vector broadcast) go on the list for the
+    caller to unpersist once the result is materialized; without it the
+    candidate list is checkpointed first.
 
     Recall: a pair at angle theta collides in one table w.p.
     ``p^n_planes`` with ``p = 1 - theta/pi``; across ``n_tables`` independent
@@ -232,20 +239,13 @@ def cosine_dup_pairs_lsh(
     sk = sign_sketches(corpus, dim, n_planes, n_tables, seed, id_col, vec_col)
     # typed id path: the bucket machinery pairs/chains on the native long
     # vector ids — no string casts, 8-byte shuffle keys end to end
-    # eager=False: the candidate list here is O(collisions) — tens of
-    # millions of rows on random-vector corpora — and the default eager
-    # localCheckpoint would serialize all of it into storage memory as a
-    # separate blocking job before the verify even starts. Lazy lets the
-    # expansion pipeline straight into the verify in one job; the
-    # persisted bucket-member table it protects is ~MB-sized and dies
-    # with the session.
     # distinct=False: candidates stay multiset-shaped through the verify
     # (cosine is deterministic, so duplicate candidates yield bit-identical
     # verified rows) and the final .distinct() below dedups the tiny
     # survivor set instead of the tens-of-millions candidate set — one
     # candidate-sized exchange + hash aggregate removed from the plan.
     cands = pairs_from_buckets(
-        sk, ["t", "bucket"], cfg, eager=False, id_col="id", distinct=False
+        sk, ["t", "bucket"], cfg, id_col="id", distinct=False, release=release
     ).select(F.col("a").alias("ia"), F.col("b").alias("ib"))
     if broadcast_vectors:
         # Verify in a VECTORIZED Arrow kernel against a task-local copy of
@@ -287,6 +287,8 @@ def cosine_dup_pairs_lsh(
         bc = corpus.sparkSession.sparkContext.broadcast(
             (sorted_ids, sorted_rows, mat, norms)
         )
+        if release is not None:
+            release.append(bc)
         thr = float(threshold)
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -92,18 +92,11 @@ class IncrementalDedup:
         near_index_dir: str | None = None,
         cfg: DedupConfig | None = None,
         cache_state: bool = True,
-        cc_strategy: str = "driver",
     ):
         self.spark = spark
         self.clusters_dir = clusters_dir
         self.near_index_dir = near_index_dir
         self.cfg = cfg or DedupConfig()
-        # Within-batch near-dup components live on a graph bounded by the
-        # micro-batch size (and by the LSH bucket caps), so the driver
-        # union-find — a single Arrow collect, no sizing aggregate — is
-        # the right default; pass "auto" to re-enable the byte-bound
-        # check for deployments with huge maxFilesPerTrigger batches.
-        self.cc_strategy = cc_strategy
         # Per-batch state-read optimization. The round-5 bench traced a
         # large fixed cost per micro-batch to re-reading the clusters table
         # and both near-index tables from parquet with mergeSchema — a
@@ -522,7 +515,9 @@ class IncrementalDedup:
         comp = connected_components(
             batch_edges,
             vertices=fresh_sets.select("conv_id"),
-            strategy=self.cc_strategy,
+            # the graph is bounded by the micro-batch size (and the LSH
+            # bucket caps): driver union-find, one Arrow collect
+            strategy="driver",
         ).withColumnRenamed("cluster_id", "comp_label")
         self.last_timings["cc"] = time.perf_counter() - t0
 

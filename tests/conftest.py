@@ -14,6 +14,27 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(action)`` runs ``action()`` under a fresh job group and
+    returns how many Spark jobs it issued."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(action) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def smoke_fixture():
     """100-conversation smoke corpus (FIXTURES.md tier `smoke`)."""

@@ -73,6 +73,32 @@ def test_parquet_mode_requires_success_marker(spark, tmp_path):
     assert not io.exists("torn")
 
 
+def test_parquet_write_runs_the_plan_once(spark, tmp_path, count_jobs):
+    """A TableIO write issues exactly the jobs of a plain ``df.write`` of
+    the same plan: no probe action re-runs the plan's shuffle map stage."""
+    def grouped():
+        return spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+    plain = count_jobs(lambda: grouped().write.parquet(str(tmp_path / "plain")))
+    io = TableIO(spark, str(tmp_path))
+    assert count_jobs(lambda: io.write(grouped(), "t")) == plain
+    assert io.read("t").count() == 7
+
+
+def test_parquet_write_zero_partitions_reads_back(spark, tmp_path):
+    """A zero-partition frame (an empty relation) commits a table that
+    reads back with its schema, unpartitioned and with ``partition_by``."""
+    empty = spark.sql("SELECT * FROM VALUES (1, 'a') AS t(k, v) WHERE false")
+    assert empty.rdd.getNumPartitions() == 0
+    io = TableIO(spark, str(tmp_path))
+    io.write(empty, "flat")
+    io.write(empty, "parted", partition_by=["k"])
+    for name in ("flat", "parted"):
+        back = io.read(name)
+        assert sorted(back.columns) == ["k", "v"], name
+        assert back.count() == 0, name
+
+
 # ---- R14: metadata preservation -------------------------------------------
 
 def test_assemble_keep_metadata_roundtrip(spark, turns_df):

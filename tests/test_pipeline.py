@@ -98,6 +98,22 @@ def test_metrics_and_lineage_written(spark, turns_df, workdir):
         assert by_stage[r["stage"]] == r["rows"]
 
 
+def test_record_jobs_per_stage(spark, turns_df, workdir, count_jobs, monkeypatch):
+    """Stage bookkeeping is one lineage append (aggregate + write) and one
+    metrics-row write: at most 3 Spark jobs per computed stage."""
+    record = DedupPipeline._record
+    jobs = []
+
+    def counted(self, *args):
+        jobs.append(count_jobs(lambda: record(self, *args)))
+
+    monkeypatch.setattr(DedupPipeline, "_record", counted)
+    pipe = DedupPipeline(spark, workdir, CFG)
+    pipe.run(turns_df)
+    assert len(jobs) == len(pipe.stage_log)
+    assert max(jobs) <= 3, jobs
+
+
 def test_pipeline_partitioned_output_layout(spark, turns_df, workdir):
     """R15: clusters land hash-bucketed on conv_id, metrics/lineage
     partitioned by run_id — and resume still sees the committed stages."""

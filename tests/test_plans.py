@@ -183,12 +183,24 @@ def test_embed_dup_pairs_no_string_casts(spark):
     pairs_from_buckets(id_col='id')) must keep native LONG vector ids end
     to end: a reintroduced string cast would triple the shuffle key bytes
     and silently regress the r5 typed-id work. No cast-to-string may
-    appear anywhere in the executed plan."""
+    appear anywhere in the lazy plan, and no cross join either (the entry
+    query checkpoints its result, so the all-queries guard above sees only
+    a scan)."""
     import re
 
-    import __spark_entry__ as entry_mod
+    from cpdd_spark.similarity import cosine_dup_pairs_lsh
 
-    df = entry_mod.queries()["embed_dup_pairs"](spark, SF)
-    plan = _plan(df).lower()
-    casts = re.findall(r"cast\([^)]*as string\)", plan)
+    caches: list = []
+    df = cosine_dup_pairs_lsh(
+        spark.read.parquet(f"{SF}/embeddings.parquet"),
+        threshold=0.8,
+        dim=64,
+        release=caches,
+    )
+    plan = _plan(df)
+    for c in caches:
+        c.unpersist()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    casts = re.findall(r"cast\([^)]*as string\)", plan.lower())
     assert not casts, casts[:5]
