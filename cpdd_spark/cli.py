@@ -97,8 +97,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--compact-index", action="store_true",
         help="with --stream + --near-index: after the stream drains, "
         "compact the near index (dedupe representatives, rebuild bands "
-        "from stored shingle sets, persist any legacy-layout migration) — "
-        "run between streaming runs, never concurrently with one",
+        "from stored shingle sets) — run between streaming runs, never "
+        "concurrently with one",
     )
     p.add_argument(
         "-i", "--interactive", action="store_true",

@@ -193,12 +193,29 @@ class DedupPipeline:
         # directory (never touch prior runs' files), and reading one run's
         # rows partition-prunes every other run
         self.io.append(lineage, "lineage", partition_by=["run_id"])
+        rows = total.get["rows"] or 0
         t1 = time.time()
         # literals over one range row: no Python-side rows, no worker
-        metrics = self.spark.range(1).select(
-            F.lit(self.run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.lit(total.get["rows"] or 0).cast("long").alias("rows"),
+        stage_row = self.spark.range(1).select(
+            F.lit(self.run_id).alias("run_id"), F.lit(stage).alias("stage")
+        )
+        if rows == 0:
+            # no rows means no partition group above: one row of 0 keeps
+            # the stage in the lineage
+            self.io.append(
+                stage_row.select(
+                    "run_id",
+                    "stage",
+                    F.lit(0).alias("partition_id"),
+                    F.lit(0).cast("long").alias("rows"),
+                ),
+                "lineage",
+                partition_by=["run_id"],
+            )
+        metrics = stage_row.select(
+            "run_id",
+            "stage",
+            F.lit(rows).cast("long").alias("rows"),
             F.lit(t0).alias("t_start"),
             F.lit(t1).alias("t_end"),
             F.lit(t1 - t0).alias("seconds"),
@@ -257,14 +274,7 @@ class DedupPipeline:
                     resume,
                     partition_by=["part_bucket"],
                 )
-            table = self._stage(name, compute, resume)
-            if name == "signatures" and "shingles" not in table.columns:
-                # a committed table from a run before signatures carried
-                # shingle sets: recompute it (and, as for any recompute,
-                # everything downstream) instead of failing in verify
-                self.stage_log.pop()
-                table = self._stage(name, compute, resume=False)
-            return table
+            return self._stage(name, compute, resume)
 
         docs = self._stage("documents", lambda: assemble_documents(turns), resume)
         clusters = cascade(docs, cfg, store, self.enable_substring)

@@ -280,38 +280,6 @@ def compute_signatures(
     return docs.select(*sel).mapInPandas(kernel, schema=schema)
 
 
-SHINGLE_SET_SCHEMA = "conv_id string, shingles array<long>"
-
-
-def shingle_sets(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """``documents(conv_id, .., doc)`` -> ``(conv_id, shingles)`` with
-    ``shingles`` the DISTINCT sorted 64-bit shingle hashes (int64 view).
-
-    The precomputed form of what the verify tier's Arrow kernel derives
-    from raw text on every invocation: at index-build time each document's
-    shingle set is materialized ONCE, and verification becomes a pure-JVM
-    ``array_intersect`` over slim hash arrays (see
-    cpdd_spark.verify.verify_pairs_sets) — no document text, and no Python
-    worker, anywhere in the verify hot path. Docs with < w tokens emit an
-    empty array (the exact tier's jurisdiction, as everywhere)."""
-    w = cfg.shingle_w
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            h, offsets = shingle_hashes(pdf["doc"], w)
-            sets = [
-                np.unique(h[offsets[i] : offsets[i + 1]]).view(np.int64)
-                for i in range(len(pdf))
-            ]
-            yield pd.DataFrame(
-                {"conv_id": pdf["conv_id"].to_numpy(), "shingles": sets}
-            )
-
-    return docs.select("conv_id", "doc").mapInPandas(
-        kernel, schema=SHINGLE_SET_SCHEMA
-    )
-
-
 def minhash_from_sets(sets: DataFrame, cfg: DedupConfig) -> DataFrame:
     """``(conv_id, shingles)`` -> ``(conv_id, n_shingles, minhash)``:
     recompute the MinHash signature from a STORED distinct shingle-hash set

@@ -1,23 +1,30 @@
-"""Structured Streaming: incremental exact dedup of arriving transcripts.
+"""Structured Streaming: incremental exact and near dedup of arriving transcripts.
 
-The reference is single-pass batch over a frozen snapshot
-(/root/reference/README:250); its incrementality story is "rerun with
-no-clobber" (copy.c:73-96). This module upgrades that to a streaming
-micro-batch pipeline: new turn files land in a directory (stand-in for a
-Kafka/Iceberg CDC source), each micro-batch assembles ONLY complete new
-conversations, exact-matches them against the already-clustered corpus
-(the reference index probe, matching.c:320-375), and appends cluster
-assignments — arriving duplicates link to existing canonicals.
+New turn files land in a directory (a stand-in for a Kafka/Iceberg CDC
+source). Each micro-batch assembles only the complete new conversations,
+probes them against the already-clustered corpus (the reference's index
+probe, matching.c:320-375) and appends their cluster assignments, so an
+arriving duplicate links to its existing canonical. The reference itself is
+single-pass batch over a frozen snapshot; its incremental story is a rerun
+with no-clobber (copy.c:73-96).
 
-Uses ``foreachBatch`` because the dedup probe needs a join against the
-mutable clusters table — the documented pattern for stateful sinks that
-Structured Streaming's append-only model can't express natively. Watermarks
-are not needed for exact dedup of whole conversations (a conversation is
-complete by construction when its file lands); for turn-level streams with
-LATE/out-of-order arrivals, :func:`assemble_stream` (watermark +
-session_window, all built-in) and :func:`assemble_stream_stateful`
-(``applyInPandasWithState``, EventTimeTimeout) assemble documents upstream
-of the same dedup scaffold.
+``foreachBatch`` carries the dedup because the probe joins against mutable
+state tables, which Structured Streaming's append-only model cannot express.
+Whole-conversation files need no watermark: a conversation is complete when
+its file lands. For turn-level streams with late or out-of-order arrivals,
+:func:`assemble_stream` (watermark + session_window) and
+:func:`assemble_stream_stateful` (``applyInPandasWithState``) assemble
+documents upstream of the same probe.
+
+The stream's state is three parquet tables with one declared schema each:
+:data:`CLUSTERS_SCHEMA`, and the near index's :data:`INDEX_DOCS_SCHEMA` and
+:data:`INDEX_BANDS_SCHEMA`. Every batch reads them with that schema, so a
+read is a directory listing and no Spark job. A directory in an older
+layout is not migrated: the batch fails, before any table gains a row, with
+an error naming the rebuild (:data:`REBUILD_COMMAND`). The rebuild replays
+the turn files into fresh directories in the batches they arrived in, which
+reproduces the assignments because the dedup rules are first-match-wins
+and min-conv_id.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -33,56 +40,68 @@ from cpdd_spark.assemble import assemble_documents
 from cpdd_spark.cc import connected_components
 from cpdd_spark.config import DedupConfig
 from cpdd_spark.lsh import band_buckets, pairs_from_buckets
-from cpdd_spark.signatures import (
-    compute_signatures,
-    minhash_from_sets,
-    shingle_sets,
-)
+from cpdd_spark.signatures import compute_signatures, minhash_from_sets
 from cpdd_spark.verify import verify_pairs_sets
 
 TURNS_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
     "ts timestamp"
 )
+CLUSTERS_SCHEMA = (
+    "conv_id string, n_turns long, doc_len long, md5 string, xxh64 long, "
+    "cluster_id string"
+)
+INDEX_DOCS_SCHEMA = "conv_id string, shingles array<bigint>, cluster_id string"
+INDEX_BANDS_SCHEMA = "conv_id string, band_id int, band_hash int"
+# state table -> (declared schema, the column an older layout lacks)
+STATE_TABLES = {
+    "clusters": (CLUSTERS_SCHEMA, "xxh64"),
+    "docs": (INDEX_DOCS_SCHEMA, "shingles"),
+    "bands": (INDEX_BANDS_SCHEMA, None),
+}
+REBUILD_COMMAND = (
+    "python -m cpdd_spark --stream --input <turns dir> --workdir <fresh>"
+)
+
+
+def _has_parquet(d: str) -> bool:
+    try:
+        return any(f.endswith(".parquet") for f in os.listdir(d))
+    except FileNotFoundError:
+        return False
 
 
 class IncrementalDedup:
-    """Streaming exact-dedup into a clusters directory.
+    """Streaming exact and near dedup into a clusters directory.
 
-    ``clusters_dir`` holds the accumulated ``(conv_id, n_turns, doc_len,
-    md5, xxh64, cluster_id)`` assignments; each micro-batch probes it and appends
-    rows for new conversations (first-seen conv of new content becomes its
-    own canonical — min-key-wins within the batch for determinism).
+    ``clusters_dir`` accumulates ``(conv_id, n_turns, doc_len, md5, xxh64,
+    cluster_id)`` rows. Each micro-batch probes it and appends rows for its
+    new conversations: new content's first-seen conversation becomes its own
+    canonical, and within a batch the minimum conv_id wins.
 
-    ``near_index_dir`` enables the NEAR-duplicate tier (round-2 verdict
-    item 6): alongside the exact probe, each micro-batch's fresh canonicals
-    are MinHash-signed, LSH-probed against a persistent band index of every
-    previously stored representative, exact-Jaccard verified, and linked to
-    the matched representative's cluster — so an arriving near-duplicate
-    (not byte-identical) joins the existing cluster instead of founding a
-    new one. The index is append-only: ``{near_index_dir}/docs`` holds
-    ``(conv_id, shingles, cluster_id)`` per stored representative — the
-    doc's DISTINCT shingle-hash set (~8 B/shingle), never its text —
-    ``{near_index_dir}/bands`` its ``(conv_id, band_id, band_hash)`` rows.
-    Verification is therefore pure JVM (``verify_pairs_sets``:
-    ``array_intersect`` over the stored arrays): no document text in the
-    index, and no Python worker in the per-batch probe — the same shape the
-    batch pipeline's verify stage uses (the stored set IS the digest cache,
-    the analogue of cpdd never re-reading a reference file per probe,
-    matching.c:320-375). A legacy round-3 index that stored raw ``doc``
-    text is migrated transparently at read time (sets recomputed from the
-    stored text) and persistently by :meth:`compact_index`.
-    Scale shape: the probe is an equi-join on ``(band_id, band_hash)`` —
-    at 10^12 turns the two directories become Iceberg tables bucketed on
-    ``band_hash`` / ``conv_id`` and the join stays bucket-local; per-batch
-    cost is O(batch x band collisions), never O(index).
+    ``near_index_dir`` enables the near-duplicate tier. The batch's fresh
+    canonicals are MinHash-signed, LSH-probed against a band index of every
+    stored representative, exact-Jaccard verified, and linked to the matched
+    representative's cluster. The index is append-only: ``docs`` holds
+    ``(conv_id, shingles, cluster_id)`` per stored representative (its
+    distinct shingle-hash set, never its text) and ``bands`` its ``(conv_id,
+    band_id, band_hash)`` rows. Verification is pure JVM
+    (``verify_pairs_sets``: ``array_intersect`` over the stored sets), the
+    same shape as the batch pipeline's verify. The probe is an equi-join on
+    ``(band_id, band_hash)``, so per-batch cost is O(batch x band
+    collisions), never O(index); at 10^12 turns the directories become
+    Iceberg tables bucketed on ``band_hash`` / ``conv_id``.
 
-    Determinism/immutability rules, mirroring the batch tiers: existing
-    assignments are never rewritten (first-match-wins across time,
-    matching.c:320-375); multi-matches resolve to the MINIMUM stored
-    cluster_id; within-batch near-dup components (connected_components
-    over verified batch edges) anchor on the minimum stored cluster any
-    member linked to, else the minimum batch conv_id.
+    The state is re-read from disk every batch rather than kept as
+    checkpointed frames, because a checkpointed leaf keeps its origin plan's
+    estimated size and chained join estimates then compound across batches
+    until the driver stalls in the statistics walk.
+
+    Determinism: existing assignments are never rewritten (first match wins
+    across time, matching.c:320-375); multi-matches resolve to the minimum
+    stored cluster_id; a within-batch near-duplicate component anchors on
+    the minimum stored cluster any member linked to, else its minimum
+    conv_id.
     """
 
     def __init__(
@@ -91,74 +110,42 @@ class IncrementalDedup:
         clusters_dir: str,
         near_index_dir: str | None = None,
         cfg: DedupConfig | None = None,
-        cache_state: bool = True,
     ):
         self.spark = spark
         self.clusters_dir = clusters_dir
         self.near_index_dir = near_index_dir
         self.cfg = cfg or DedupConfig()
-        # Per-batch state-read optimization. The round-5 bench traced a
-        # large fixed cost per micro-batch to re-reading the clusters table
-        # and both near-index tables from parquet with mergeSchema — a
-        # footer scan of EVERY file in an ever-growing directory, repeated
-        # per table per batch. With cache_state=True each table's column
-        # set is resolved once (mergeSchema only on first contact) and
-        # remembered, so steady-state batches issue plain schema-stable
-        # reads: one directory listing, zero footer scans.
-        #
-        # DESIGN NOTE — why this is a schema cache and NOT a DataFrame
-        # cache. The obvious stronger optimization (keep each state table
-        # as a localCheckpointed DataFrame and union in the rows each batch
-        # appends, never touching the filesystem) was built and then
-        # REVERTED after profiling: Dataset.localCheckpoint STORES the
-        # origin plan's estimated statistics into the new leaf, and
-        # Catalyst's size estimator upper-bounds a join as the PRODUCT of
-        # its children's sizeInBytes — so chaining checkpoint -> join ->
-        # checkpoint across batches compounds the estimate doubly
-        # exponentially. By batch ~9 of a 20k-conv drain the driver sat in
-        # BigInteger.multiplyToomCook3 on numbers with millions of digits
-        # (199 s of driver CPU in one stats walk; jstack-verified), every
-        # broadcast decision re-paying it. Disk-backed reads keep leaf
-        # stats equal to real file sizes, which is also the only honest
-        # number at 10^12-turn scale.
-        self.cache_state = cache_state
-        self._schema_cache: dict[str, object] = {}
-        # wall-clock attribution of the last processed batch, keyed by
-        # stage (exact_out, sigs_kernel, bands, resolve, rep_docs,
-        # index_append, clusters_append, total) — the per-batch metrics
-        # the fixed-cost profiling works from; a few perf_counter calls,
-        # zero plan impact
+        # wall seconds of the last batch per phase (docs_ckpt, exact_out,
+        # sigs_kernel, cc, resolve, index_append, clusters_append, total):
+        # perf_counter reads around actions the batch runs anyway
         self.last_timings: dict[str, float] = {}
 
-    def _invalidate_cache(self) -> None:
-        self._schema_cache = {}
+    def _read_state(self, path: str, table: str) -> DataFrame:
+        """State ``table`` at ``path``, read with its declared schema: a
+        listing, no job.
+
+        The column an older layout lacks (``xxh64`` in md5-only clusters
+        rows, ``shingles`` in raw-text index docs) is read as
+        ``coalesce(col, raise_error(..))``, so the first job of the batch
+        that reads such a row fails before any table gains a row: the exact
+        probe's aggregate reads every clusters row, and the verify exchange
+        every index docs row."""
+        schema, required = STATE_TABLES[table]
+        df = self.spark.read.schema(schema).parquet(path)
+        if required is None:
+            return df
+        msg = (
+            f"{path} has rows without {required}, an older stream state "
+            "layout. Rebuild the state by replaying the turn files, in the "
+            "batches they arrived in, into fresh directories: "
+            f"{REBUILD_COMMAND}, plus --near-index <fresh> for a near index"
+        )
+        return df.withColumn(required, F.coalesce(required, F.raise_error(msg)))
 
     def _existing(self) -> DataFrame | None:
-        try:
-            if any(f.endswith(".parquet") for f in os.listdir(self.clusters_dir)):
-                schema = self._schema_cache.get("clusters")
-                if schema is not None:
-                    return self.spark.read.schema(schema).parquet(self.clusters_dir)
-                # mergeSchema: a directory migrated from the md5-only layout
-                # mixes files with and without xxh64 — a plain read could
-                # pick the narrow schema and silently drop the column
-                df = self.spark.read.option("mergeSchema", "true").parquet(
-                    self.clusters_dir
-                )
-                if "xxh64" not in df.columns:  # pure-legacy directory
-                    # legacy rows exist (e.g. the directory was swapped
-                    # out-of-band): the probe must keep the null-tolerant
-                    # match + legacy-collapse aggregate
-                    self._fresh_dir = False
-                    df = df.withColumn("xxh64", F.lit(None).cast("long"))
-                elif self.cache_state:
-                    # full modern schema: every later batch (which only
-                    # ever appends this schema) may skip the footer scans
-                    self._schema_cache["clusters"] = df.schema
-                return df
-        except FileNotFoundError:
-            pass
-        return None
+        if not _has_parquet(self.clusters_dir):
+            return None
+        return self._read_state(self.clusters_dir, "clusters")
 
     def process_batch(self, turns: DataFrame, batch_id: int = 0) -> None:
         """Micro-batch of TURNS (whole conversations per file): assemble,
@@ -183,78 +170,44 @@ class IncrementalDedup:
 
     def _process_docs_inner(self, documents: DataFrame, batch_id: int) -> None:
         # dual fingerprints: the cross-batch probe joins on BOTH hash
-        # families (+ exact length/turn counts) — the same relaxed-verify
-        # guarantee as exact_clusters(verify='fingerprint'): a wrong
-        # assignment needs simultaneous md5+xxhash64 collisions at equal
-        # length (~2^-192), vs the raw-md5 probe this replaces, which
-        # silently trusted a single 128-bit family
+        # families plus exact length and turn count, the guarantee of
+        # exact_clusters(verify='fingerprint'): a wrong assignment needs
+        # simultaneous md5 and xxhash64 collisions at equal length (~2^-192)
         docs = (
             documents
             .withColumn("md5", F.md5("doc"))
             .withColumn("xxh64", F.xxhash64("doc"))
         )
         existing = self._existing()
-        if existing is None:
-            # a directory THIS instance saw empty can never hold legacy
-            # md5-only rows: every row it will ever contain is a dual-hash
-            # append from this code path — the probe below may then use
-            # plain key equality and skip the legacy-collapse aggregate
-            # (one exchange + hash aggregate per probing batch, r8)
-            self._fresh_dir = True
         if existing is not None:
             # no-clobber: conversations already assigned are skipped
             docs = docs.join(
                 existing.select("conv_id"), "conv_id", "left_anti"
             )
-        # materialize the batch's assembled+hashed+filtered docs ONCE: the
-        # exact-tier window/probe AND the near tier both consume this
-        # frame, and its lineage (parquet scan -> assembly groupBy -> dual
-        # hash -> anti-join) was being replayed per consumer — the largest
-        # share of the per-batch fixed cost the r7 profile attributed
-        # (micro-batch sized, so the checkpoint is cheap). When the near
-        # tier is on, the batch's ONE Python pass — the minhash+sets
-        # signature kernel — is FUSED into this same materialization
-        # (passthrough columns), so no later stage of the batch dispatches
-        # a Python worker at all: per-batch fixed cost is dominated by
-        # driver action count (r7 event log: ~43 jobs x ~170 ms), and the
-        # fusion deletes one Python stage + one checkpoint action.
-        # Speculative cost: exact-duplicate rows get signed too; for
-        # typical fresh-heavy batches that is zero waste, and a
-        # pure-duplicate batch pays ~1.7 s single-core, parallelized.
         if self.near_index_dir is not None:
-            # NOTE on partitioning: three A/Bs tried to force this stage
-            # wider (explicit repartition to 32, shuffle_partitions=8,
-            # AQE minPartitionSize=64k) and every one LOST to the
-            # AQE-natural 4-8 partition layout — the extra text shuffle
-            # plus more concurrent Python tasks cost more than the
-            # parallelism buys at micro-batch sizes
+            # the exact-tier window/probe and the near tier both consume
+            # docs: materialize it once, with the batch's one Python pass
+            # (the minhash + shingle-set kernel) fused in as passthrough
+            # columns, so no later plan of the batch starts a Python worker.
+            # Exact duplicates get signed too; a fresh-heavy batch wastes
+            # nothing by it.
             docs = compute_signatures(
                 docs, self.cfg, with_sets=True, with_simhash=False,
                 passthrough=["n_turns", "doc_len", "md5", "xxh64", "doc"],
             )
-        if self.near_index_dir is not None:
-            # near tier on: docs (with the fused signature columns) is
-            # consumed by BOTH the exact-tier window/probe and the near
-            # tier — materialize once so neither replays the lineage
             t0 = time.perf_counter()
             docs = docs.localCheckpoint(eager=True)
             self.last_timings["docs_ckpt"] = time.perf_counter() - t0
-        # exact-only tier: docs flows through window -> probe -> append in
-        # ONE action; the checkpoint here bought no reuse — it only added
-        # a full extra materialization + driver action per micro-batch
-        # (r8: one of the named per-batch fixed costs)
-        # within-batch canonical: min conv_id per content (exact tier key)
-        from pyspark.sql import Window
-
+        # within-batch canonical: min conv_id per content (exact tier key).
+        # Without the near tier, window -> probe -> append is one action.
         grp = Window.partitionBy("n_turns", "doc_len", "md5", "doc")
         batch_assigned = docs.withColumn(
             "batch_canon", F.min("conv_id").over(grp)
         )
         if existing is not None:
-            # probe the existing index on the exact key; prefer the existing
-            # canonical (first-match-wins across time, matching.c:320-375)
-            # min() (not dropDuplicates) so a replayed/duplicated index row
-            # can never flip the assignment — deterministic across retries
+            # probe the stored assignments on the exact key; the stored
+            # canonical wins (first match wins across time). min(), not
+            # dropDuplicates, so a replayed row never flips an assignment
             probe = (
                 existing.groupBy(
                     F.col("n_turns").alias("e_nt"),
@@ -264,43 +217,14 @@ class IncrementalDedup:
                 )
                 .agg(F.min("cluster_id").alias("e_cluster"))
             )
-            if getattr(self, "_fresh_dir", False):
-                # pure dual-hash directory (created empty by this
-                # instance): the probe's groupBy key is unique per content
-                # key and the equality join matches at most once, so no
-                # legacy-collapse aggregate is needed — one exchange +
-                # hash aggregate fewer per probing batch
-                batch_assigned = batch_assigned.join(
-                    probe,
-                    (F.col("n_turns") == F.col("e_nt"))
-                    & (F.col("doc_len") == F.col("e_dl"))
-                    & (F.col("md5") == F.col("e_md5"))
-                    & (F.col("xxh64") == F.col("e_xxh")),
-                    "left",
-                )
-            else:
-                batch_assigned = batch_assigned.join(
-                    probe,
-                    (F.col("n_turns") == F.col("e_nt"))
-                    & (F.col("doc_len") == F.col("e_dl"))
-                    & (F.col("md5") == F.col("e_md5"))
-                    # legacy (pre-xxh64) index rows carry a null e_xxh:
-                    # accept the md5-only match for those — the original
-                    # guarantee — instead of null-comparing to false and
-                    # re-canonicalizing known content under a new
-                    # cluster_id
-                    & (
-                        F.col("e_xxh").isNull()
-                        | (F.col("xxh64") == F.col("e_xxh"))
-                    ),
-                    "left",
-                )
-                # a content key present both as a legacy row and a
-                # dual-hash row would match twice — collapse to the
-                # minimum existing canonical
-                batch_assigned = batch_assigned.groupBy(
-                    "conv_id", "n_turns", "doc_len", "md5", "xxh64", "batch_canon"
-                ).agg(F.min("e_cluster").alias("e_cluster"))
+            batch_assigned = batch_assigned.join(
+                probe,
+                (F.col("n_turns") == F.col("e_nt"))
+                & (F.col("doc_len") == F.col("e_dl"))
+                & (F.col("md5") == F.col("e_md5"))
+                & (F.col("xxh64") == F.col("e_xxh")),
+                "left",
+            )
         else:
             batch_assigned = batch_assigned.withColumn("e_cluster", F.lit(None))
         out = batch_assigned.select(
@@ -333,18 +257,11 @@ class IncrementalDedup:
         cannot recreate the live dir beside it and shadow the stored
         representatives (a read-only fallback would reopen that recall
         hole one batch later)."""
-
-        def has_parquet(d: str) -> bool:
-            try:
-                return any(f.endswith(".parquet") for f in os.listdir(d))
-            except FileNotFoundError:
-                return False
-
         base = os.path.join(self.near_index_dir, sub)
-        if has_parquet(base):
+        if _has_parquet(base):
             return base
         for cand in (base + "__compact", base + "__old"):
-            if has_parquet(cand):
+            if _has_parquet(cand):
                 try:
                     os.rename(cand, base)
                     return base
@@ -353,49 +270,9 @@ class IncrementalDedup:
         return None
 
     def _read_index(self, sub: str) -> DataFrame | None:
+        """Index table ``docs`` or ``bands``, None before its first append."""
         path = self._index_dir(sub)
-        return self.spark.read.parquet(path) if path is not None else None
-
-    def _read_index_docs(self) -> DataFrame | None:
-        """The stored-representative table ``(conv_id, shingles,
-        cluster_id)``. A legacy round-3 index stored ``(conv_id, doc,
-        cluster_id)`` raw text — migrate at read time by recomputing the
-        shingle sets from the stored text (same one-time-migration
-        discipline as the md5->dual-hash clusters upgrade above);
-        :meth:`compact_index` makes the migration persistent. A directory
-        that received new-format appends on top of legacy files is MIXED —
-        mergeSchema surfaces both columns and each row converts by which
-        one it carries.
-
-        Once the directory is seen to be pure-modern, its schema is
-        remembered (``cache_state``): every later read in this object's
-        lifetime is a plain schema-stable scan — one listing, no
-        mergeSchema footer scan of the whole growing directory per
-        micro-batch (the dominant fixed cost the r5 stream bench
-        measured). Appends only ever write the modern schema, so the
-        pinned schema cannot go stale; compact_index() resets it anyway."""
-        path = self._index_dir("docs")
-        if path is None:
-            return None
-        schema = self._schema_cache.get("idx_docs")
-        if schema is not None:
-            return self.spark.read.schema(schema).parquet(path)
-        idx = self.spark.read.option("mergeSchema", "true").parquet(path)
-        if "doc" not in idx.columns:
-            if self.cache_state:
-                self._schema_cache["idx_docs"] = idx.schema
-            return idx
-        legacy = idx.filter(F.col("doc").isNotNull())
-        migrated = shingle_sets(legacy.select("conv_id", "doc"), self.cfg).join(
-            legacy.select("conv_id", "cluster_id"), "conv_id"
-        )
-        if "shingles" not in idx.columns:  # pure-legacy directory
-            return migrated
-        return (
-            idx.filter(F.col("shingles").isNotNull())
-            .select("conv_id", "shingles", "cluster_id")
-            .unionByName(migrated)
-        )
+        return self._read_state(path, sub) if path is not None else None
 
     def _near_resolve(self, out: DataFrame, docs_sigs: DataFrame) -> DataFrame:
         """Near-dup tier over the exact tier's output: link this batch's
@@ -410,18 +287,11 @@ class IncrementalDedup:
         ``verify_pairs_sets``, CC, index append) is pure JVM over stored
         arrays. No document text enters the index or the probe joins."""
         cfg = self.cfg
-        from pyspark.sql import Observation
 
         t0 = time.perf_counter()
-        # barrier: `out` feeds the fresh-canonical filter, the remap join,
-        # and the final write — materialize once (micro-batch sized; the
-        # r7 profile A/B'd removing this checkpoint and the three replays
-        # of the window+probe plan cost MORE than the one action saved).
-        # The fresh-canonical count rides the SAME action as an
-        # Observation (r8): the old form spent one more driver action per
-        # batch on `sigs.rdd.isEmpty()` (plus an RDD conversion) just to
-        # decide the empty-batch fast path — per-batch fixed cost IS
-        # action count (the r7 event-log attribution).
+        # barrier: `out` feeds the fresh-canonical filter, the remap join
+        # and the final write, so it is materialized once. The
+        # fresh-canonical count rides the same action as an Observation.
         obs = Observation()
         out = out.observe(
             obs,
@@ -441,29 +311,21 @@ class IncrementalDedup:
         self.last_timings["sigs_kernel"] = time.perf_counter() - t0
         if (obs.get["n_fresh"] or 0) == 0:
             # pure-duplicate batch: no fresh canonicals, so there is
-            # nothing to probe, cluster, or index — skip the whole near
-            # tier (the empty-frame probe/CC/append jobs cost ~2 s of pure
-            # scheduler fixed cost per batch otherwise)
+            # nothing to probe, cluster or index
             self.last_timings["near_skipped"] = 1.0
             return out
         fresh_sets = sigs.select("conv_id", "shingles")
-        # bands derive from the checkpointed sigs by pure JVM array ops —
-        # cheap enough to recompute per consumer; checkpointing them was
-        # one more per-batch driver action for no saved work
+        # bands derive from the checkpointed sigs by pure JVM array ops,
+        # cheap enough to recompute per consumer
         bands = band_buckets(sigs, cfg)
 
-        # --- cross-batch probe: batch bands vs stored representative bands
-        idx_docs = self._read_index_docs()
-        # a crash between the two index appends can leave bands without
-        # docs (or, in a legacy pre-fix index, docs without bands): probe
-        # only when BOTH halves exist; the replay re-appends the missing
-        # half (see the write-order note below)
+        # --- cross-batch probe: batch bands vs stored representative bands.
+        # Bands are appended before docs, so stored docs imply stored bands.
+        idx_docs = self._read_index("docs")
         idx_bands = self._read_index("bands") if idx_docs is not None else None
 
         # --- ONE fused verify over both candidate families (cross-batch
-        # links tagged 'x', within-batch pairs tagged 'w'): the verify
-        # join pipeline — the batch's most expensive JVM work — executes
-        # once and is persisted; the old two-call form ran it twice
+        # links tagged 'x', within-batch pairs tagged 'w'), persisted
         batch_pairs = pairs_from_buckets(
             bands.select("conv_id", "band_id", "band_hash"),
             ["band_id", "band_hash"],
@@ -540,7 +402,7 @@ class IncrementalDedup:
             )
         # barrier: `final` feeds three consumers (two index appends + the
         # remap mapping), each of which would otherwise replay the
-        # links/anchors join pipeline — A/B'd, the checkpoint wins
+        # links/anchors join pipeline
         t0 = time.perf_counter()
         final = final.localCheckpoint(eager=True)
         self.last_timings["resolve"] = time.perf_counter() - t0
@@ -611,9 +473,10 @@ class IncrementalDedup:
         2. ``bands``: REBUILT from the compacted sets via
            :func:`cpdd_spark.signatures.minhash_from_sets` (bit-identical
            to the originally stored rows; also heals any band loss) — the
-           reference's rebuild-per-run discipline (matching.c:255-318);
-        3. a legacy raw-text index is persistently migrated to the
-           ``shingles`` schema as a side effect.
+           reference's rebuild-per-run discipline (matching.c:255-318).
+
+        An index in an older layout fails here as in a batch, before
+        anything is written.
 
         Both tables write to temp dirs first, then swap (live dir renamed
         aside before the promote). The two renames are not one atomic op,
@@ -625,7 +488,7 @@ class IncrementalDedup:
         row counts (None when no index exists)."""
         import shutil
 
-        idx_docs = self._read_index_docs()
+        idx_docs = self._read_index("docs")
         if idx_docs is None:
             return None
         idx_bands = self._read_index("bands")
@@ -649,8 +512,8 @@ class IncrementalDedup:
         docs_tmp, bands_tmp = docs_dir + "__compact", bands_dir + "__compact"
         docs.write.mode("overwrite").parquet(docs_tmp)
         bands.write.mode("overwrite").parquet(bands_tmp)
-        n_docs = self.spark.read.parquet(docs_tmp).count()
-        n_bands = self.spark.read.parquet(bands_tmp).count()
+        n_docs = self._read_state(docs_tmp, "docs").count()
+        n_bands = self._read_state(bands_tmp, "bands").count()
         # swap: move the LIVE dir aside first, then promote the compacted
         # one, then delete the old — a crash at any point leaves either the
         # live dir, the __old dir, or the fully-built __compact dir on disk,
@@ -667,9 +530,6 @@ class IncrementalDedup:
                 os.rename(dst, old)
             os.rename(tmp, dst)
             shutil.rmtree(old, ignore_errors=True)
-        # the on-disk tables just changed under the cross-batch cache:
-        # drop it wholesale; the next batch reloads the compacted tables
-        self._invalidate_cache()
         return {
             "docs_before": docs_before,
             "docs_after": n_docs,
@@ -766,8 +626,6 @@ def assemble_stream(turns_stream: DataFrame, gap: str = "10 minutes") -> DataFra
     the watermark dropped with metrics — the preferred form at 10^12-turn
     scale.
     """
-    from pyspark.sql import functions as F
-
     w = turns_stream.withWatermark("ts", gap)
     return (
         w.groupBy(F.session_window("ts", gap).alias("sw"), F.col("conv_id"))
@@ -807,8 +665,7 @@ def assemble_stream_stateful(
     Spark's state-schema compatibility check rejects a resume from such a
     checkpoint. Discard the old checkpoint dir (or point the stream at a
     fresh one, e.g. ``checkpoint_v2``) and reprocess the input — the dedup
-    tier's anti-join replay makes the reprocessing idempotent. (The near
-    INDEX migrates transparently; the in-flight assembly STATE cannot.)
+    tier's anti-join replay makes the reprocessing idempotent.
     """
     import pandas as pd
 

@@ -93,7 +93,7 @@ def verify_pairs_sets(
     pairs: DataFrame, sets: DataFrame, cfg: DedupConfig, keep_all: bool = False
 ) -> DataFrame:
     """The production form of :func:`verify_pairs`: verification against
-    PRECOMPUTED shingle-hash sets (:func:`cpdd_spark.signatures.shingle_sets`)
+    PRECOMPUTED shingle-hash sets (``compute_signatures(with_sets=True)``)
     instead of raw text — ``(a, b, jaccard)`` with jaccard >= cfg.tau.
 
     Entirely JVM-side: ``array_intersect`` over ``array<long>`` inside

@@ -134,7 +134,7 @@ def test_verify_pairs_sets_matches_kernel(spark, turns_df):
     from cpdd_spark.assemble import assemble_documents
     from cpdd_spark.config import DedupConfig
     from cpdd_spark.lsh import candidate_pairs
-    from cpdd_spark.signatures import compute_signatures, shingle_sets
+    from cpdd_spark.signatures import compute_signatures
     from cpdd_spark.verify import verify_pairs, verify_pairs_sets
 
     cfg = DedupConfig()
@@ -147,7 +147,10 @@ def test_verify_pairs_sets_matches_kernel(spark, turns_df):
     jvm = {
         (r["a"], r["b"]): r["jaccard"]
         for r in verify_pairs_sets(
-            cands, shingle_sets(docs, cfg), cfg, keep_all=True
+            cands,
+            compute_signatures(docs, cfg, with_sets=True).select("conv_id", "shingles"),
+            cfg,
+            keep_all=True,
         ).collect()
     }
     docs.unpersist()

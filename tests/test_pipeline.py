@@ -152,27 +152,46 @@ def test_pipeline_partitioned_output_layout(spark, turns_df, workdir):
 
 def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir):
     """A committed signatures table from a pre-with_sets run (no shingles
-    column) must trigger a recompute on resume, not an unresolved-column
-    failure in the verify stage."""
+    column) is not recomputed on resume: a run that stopped after that
+    stage resumes into verify, which fails at plan time before any later
+    stage table changes. ``resume=False`` rebuilds the clusters."""
     import os
     import shutil
 
     p1 = DedupPipeline(spark, workdir, CFG)
     c1 = {(r["conv_id"], r["cluster_id"]) for r in p1.run(turns_df).collect()}
 
-    # rewrite the committed signatures table WITHOUT the set column
+    # rewrite the committed signatures table WITHOUT the set column, and
+    # drop the verify commit: the run stopped after the signatures stage
     legacy = p1.io.read("signatures").drop("shingles").localCheckpoint(eager=True)
     path = p1.io.path("signatures")
     shutil.rmtree(path)
     legacy.write.parquet(path)
     assert os.path.isfile(os.path.join(path, "_SUCCESS"))
+    os.remove(os.path.join(p1.io.path("verified_pairs"), "_SUCCESS"))
 
+    def snapshot():
+        return {
+            name: sorted(
+                (os.path.relpath(os.path.join(d, f), workdir),
+                 os.path.getmtime(os.path.join(d, f)))
+                for d, _, fs in os.walk(p1.io.path(name))
+                for f in fs
+            )
+            for name in ("verified_pairs", "substring_pairs", "clusters")
+        }
+
+    before = snapshot()
     p2 = DedupPipeline(spark, workdir, CFG)
-    c2 = {(r["conv_id"], r["cluster_id"]) for r in p2.run(turns_df).collect()}
-    log = dict(p2.stage_log)
-    assert log["signatures"] == "computed"  # recomputed, not resumed
-    assert log["verified_pairs"] == "computed"  # stale cascade
-    assert c1 == c2
+    with pytest.raises(Exception, match="shingles"):
+        p2.run(turns_df)
+    assert dict(p2.stage_log)["signatures"] == "resumed"
+    assert "verified_pairs" not in dict(p2.stage_log)
+    assert snapshot() == before
+
+    p3 = DedupPipeline(spark, workdir, CFG)
+    c3 = {(r["conv_id"], r["cluster_id"]) for r in p3.run(turns_df, resume=False).collect()}
+    assert c1 == c3
 
 
 def test_pipeline_fingerprint_exact_verify(spark, turns_df, workdir):
@@ -204,3 +223,11 @@ def test_pipeline_empty_input(spark, workdir):
     clusters = pipe.run(empty)
     assert clusters.count() == 0
     assert dict(pipe.stage_log)["clusters"] == "computed"
+    # every computed stage is in the lineage, with a row sum of 0
+    lineage = {
+        r["stage"]: r["rows"]
+        for r in pipe.io.read("lineage").groupBy("stage").sum("rows")
+        .withColumnRenamed("sum(rows)", "rows").collect()
+    }
+    computed = [name for name, how in pipe.stage_log if how == "computed"]
+    assert lineage == dict.fromkeys(computed, 0), lineage

@@ -4,6 +4,7 @@ existing canonicals; replays are idempotent."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -48,33 +49,31 @@ def test_incremental_dedup_stream(spark, dirs):
             assert got[cid] == got[row["source_conv"]], cid
 
 
-def test_legacy_md5_only_index_migrates(spark, dirs):
-    """A clusters_dir written by the md5-only version (no xxh64 column)
-    must keep probing: arriving duplicates of legacy content link to the
-    legacy canonical instead of crashing or re-canonicalizing."""
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    t1 = spark.createDataFrame(
-        [("old1", 0, "user", "same text here", "", None)], schema
-    )
-    dedup = IncrementalDedup(spark, dirs["clusters"])
-    dedup.process_batch(t1, 0)
-    # rewrite the index in the LEGACY layout (drop xxh64)
-    legacy = spark.read.parquet(dirs["clusters"]).drop("xxh64").toPandas()
+def test_legacy_md5_only_clusters_rebuild(spark, dirs, tmp_path):
+    """A clusters_dir written by the md5-only version (no xxh64 column) is
+    rejected: the batch raises the error that names the rebuild command and
+    appends no row. Replaying the same turns into fresh directories with
+    that command links the arriving duplicate to the legacy canonical."""
     import shutil
 
+    b1 = [("old1", "same text here")]
+    b2 = [("new1", "same text here"), ("new2", "different text")]
+    dedup = IncrementalDedup(spark, dirs["clusters"])
+    dedup.process_batch(_turns(spark, _rows(b1)), 0)
+    # rewrite the clusters table in the LEGACY layout (drop xxh64)
+    legacy = spark.read.parquet(dirs["clusters"]).drop("xxh64").toPandas()
     shutil.rmtree(dirs["clusters"])
     os.makedirs(dirs["clusters"])
     legacy.to_parquet(os.path.join(dirs["clusters"], "legacy.parquet"), index=False)
 
-    t2 = spark.createDataFrame(
-        [("new1", 0, "user", "same text here", "", None),
-         ("new2", 0, "user", "different text", "", None)], schema
-    )
-    dedup.process_batch(t2, 1)
+    with pytest.raises(Exception, match=REBUILD):
+        dedup.process_batch(_turns(spark, _rows(b2)), 1)
+    assert os.listdir(dirs["clusters"]) == ["legacy.parquet"]  # no row appended
+
+    work = _rebuild(spark, tmp_path, [b1, b2])
     got = {
         r["conv_id"]: r["cluster_id"]
-        for r in spark.read.option("mergeSchema", "true")
-        .parquet(dirs["clusters"]).collect()
+        for r in spark.read.parquet(os.path.join(work, "clusters")).collect()
     }
     assert got == {"old1": "old1", "new1": "old1", "new2": "new2"}
 
@@ -103,6 +102,40 @@ def _turns(spark, rows):
 
 def _doc(n, start=0):
     return " ".join(f"tok{i}" for i in range(start, start + n))
+
+
+def _rows(batch):
+    """``(conv_id, text)`` pairs -> one-turn rows for :func:`_turns`."""
+    return [(c, 0, "user", text, "", None) for c, text in batch]
+
+
+# the rebuild command a legacy-layout error names
+REBUILD = re.escape(
+    "python -m cpdd_spark --stream --input <turns dir> --workdir <fresh>"
+)
+
+
+def _drop_turns(path, batch):
+    """One turn file of one-turn ``(conv_id, text)`` conversations."""
+    _ts_file(path, [(c, 0, text, None) for c, text in batch])
+
+
+def _rebuild(spark, tmp_path, batches, near=False):
+    """Replay turn batches into fresh directories with the CLI command the
+    legacy-layout error names, one run per original batch (each run drains
+    what has landed, as the original stream did). Returns the workdir."""
+    from cpdd_spark.cli import main
+
+    in_dir = tmp_path / "replay_in"
+    in_dir.mkdir()
+    work = str(tmp_path / "replay_work")
+    argv = ["--input", str(in_dir), "--workdir", work, "--stream"]
+    if near:
+        argv += ["--near-index", str(tmp_path / "replay_nearidx")]
+    for i, batch in enumerate(batches):
+        _drop_turns(in_dir / f"b{i}.parquet", batch)
+        assert main(argv, spark=spark) == 0
+    return work
 
 
 @pytest.fixture()
@@ -380,21 +413,23 @@ def test_near_probe_verify_is_jvm_only(spark, near_dirs, monkeypatch):
     assert got == {"p1": "p1", "p2": "p1"}, got
 
 
-def test_legacy_text_index_migrates(spark, near_dirs):
-    """A round-3 index stored (conv_id, doc, cluster_id) raw text: probes
-    must keep working (read-time set derivation), and compact_index makes
-    the migration persistent."""
+def test_legacy_text_index_rebuild(spark, near_dirs, tmp_path):
+    """A round-3 index stored (conv_id, doc, cluster_id) raw text: a batch
+    over it raises the error that names the rebuild command and no state
+    table gains a row. The replay into fresh directories links the near
+    duplicate, and its index compacts and probes like any other."""
+    import shutil
+
     import pandas as pd
 
+    b1, b2 = [("orig", _doc(60))], [("near1", _doc(50))]
     dedup = IncrementalDedup(
         spark, near_dirs["clusters"], near_index_dir=near_dirs["nearidx"]
     )
-    dedup.process_batch(_turns(spark, [("orig", 0, "user", _doc(60), "", None)]), 0)
+    dedup.process_batch(_turns(spark, _rows(b1)), 0)
     # rewrite the docs index in the LEGACY raw-text layout
     docs_dir = os.path.join(near_dirs["nearidx"], "docs")
     stored = spark.read.parquet(docs_dir).toPandas()
-    import shutil
-
     shutil.rmtree(docs_dir)
     os.makedirs(docs_dir)
     pd.DataFrame(
@@ -405,22 +440,32 @@ def test_legacy_text_index_migrates(spark, near_dirs):
         }
     ).to_parquet(os.path.join(docs_dir, "legacy.parquet"), index=False)
 
-    dedup.process_batch(_turns(spark, [("near1", 0, "user", _doc(50), "", None)]), 1)
+    state = [
+        near_dirs["clusters"], docs_dir, os.path.join(near_dirs["nearidx"], "bands")
+    ]
+    rows_before = [spark.read.parquet(d).count() for d in state]
+    with pytest.raises(Exception, match=REBUILD):
+        dedup.process_batch(_turns(spark, _rows(b2)), 1)
+    assert [spark.read.parquet(d).count() for d in state] == rows_before
+
+    work = _rebuild(spark, tmp_path, [b1, b2], near=True)
+    clusters_dir = os.path.join(work, "clusters")
     got = {
         r["conv_id"]: r["cluster_id"]
-        for r in spark.read.parquet(near_dirs["clusters"]).collect()
+        for r in spark.read.parquet(clusters_dir).collect()
     }
     assert got["near1"] == "orig", got
 
-    res = dedup.compact_index()
-    migrated = spark.read.parquet(docs_dir)
-    assert "shingles" in migrated.columns and "doc" not in migrated.columns
-    assert res["docs_after"] == 2  # orig (legacy) + near1, both migrated
-    # probe still green post-migration
-    dedup.process_batch(_turns(spark, [("near2", 0, "user", _doc(48), "", None)]), 2)
+    rebuilt_idx = str(tmp_path / "replay_nearidx")
+    rebuilt = IncrementalDedup(spark, clusters_dir, near_index_dir=rebuilt_idx)
+    res = rebuilt.compact_index()
+    idx = spark.read.parquet(os.path.join(rebuilt_idx, "docs"))
+    assert "shingles" in idx.columns and "doc" not in idx.columns
+    assert res["docs_after"] == 2  # orig + near1
+    rebuilt.process_batch(_turns(spark, _rows([("near2", _doc(48))])), 2)
     got2 = {
         r["conv_id"]: r["cluster_id"]
-        for r in spark.read.parquet(near_dirs["clusters"]).collect()
+        for r in spark.read.parquet(clusters_dir).collect()
     }
     assert got2["near2"] == "orig", got2
 
@@ -487,12 +532,12 @@ def test_compact_crash_windows_never_lose_index(spark, near_dirs):
 
     # window 1: live dir renamed aside, replacement not yet promoted
     os.rename(docs_dir, docs_dir + "__old")
-    assert dedup._read_index_docs().count() == 1
+    assert dedup._read_index("docs").count() == 1
     assert os.path.isdir(docs_dir)  # repaired in place
 
     # window 2: only the fully-written __compact build exists
     os.rename(docs_dir, docs_dir + "__compact")
-    assert dedup._read_index_docs().count() == 1
+    assert dedup._read_index("docs").count() == 1
     assert os.path.isdir(docs_dir)
 
     # the probe after repair still links a near-dup to the stored rep
@@ -586,33 +631,37 @@ def test_near_tier_empty_and_all_dup_batches(spark, near_dirs):
 def test_mid_stream_compaction_equivalence(spark, tmp_path):
     """Compacting BETWEEN micro-batches must not change any subsequent
     assignment: run batches 1-2, compact, batch 3 — final clusters equal a
-    parallel run that never compacted."""
+    parallel run that never compacted, and the batch after the compaction
+    still links exact and near duplicates to their stored clusters."""
     outcomes = {}
     for mode in ("plain", "compacted"):
         cl = str(tmp_path / f"{mode}_cl")
         ni = str(tmp_path / f"{mode}_ni")
         dedup = IncrementalDedup(spark, cl, near_index_dir=ni)
         dedup.process_batch(
+            _turns(spark, _rows([("a1", _doc(60)), ("a2", _doc(52))])), 0
+        )
+        dedup.process_batch(
             _turns(
                 spark,
-                [
-                    ("a1", 0, "user", _doc(60), "", None),
-                    ("a2", 0, "user", _doc(52), "", None),
-                ],
+                _rows([("b1", _doc(48)), ("b2", _doc(40, start=500))]),
             ),
-            0,
+            1,
         )
-        dedup.process_batch(_turns(spark, [("b1", 0, "user", _doc(48), "", None)]), 1)
         if mode == "compacted":
             res = dedup.compact_index()
             assert res is not None
         dedup.process_batch(
             _turns(
                 spark,
-                [
-                    ("c1", 0, "user", _doc(46), "", None),
-                    ("d1", 0, "user", _doc(40, start=900), "", None),
-                ],
+                _rows(
+                    [
+                        ("c1", _doc(46)),  # near b1, which chains to a1
+                        ("c2", _doc(45, start=500)),  # near b2
+                        ("c3", _doc(60)),  # exact dup of a1
+                        ("d1", _doc(40, start=900)),
+                    ]
+                ),
             ),
             2,
         )
@@ -621,60 +670,127 @@ def test_mid_stream_compaction_equivalence(spark, tmp_path):
             for r in spark.read.parquet(cl).collect()
         }
     assert outcomes["plain"] == outcomes["compacted"], outcomes
+    got = outcomes["compacted"]
+    assert got["c1"] == got["a1"] and got["b1"] == got["a1"], got
+    assert got["c3"] == got["a1"], got
+    assert got["c2"] == got["b2"], got
+    assert got["d1"] == "d1", got
 
 
-def test_cache_state_equivalence_and_invalidation(spark, tmp_path):
-    """The schema cache is a pure optimization: a cached and an uncached
-    stream over the same batches must write identical cluster assignments
-    and identical near indexes, through appends AND across a mid-stream
-    compact_index() (which invalidates the cached schemas wholesale)."""
-    outs = {}
-    for cached in (True, False):
-        base = tmp_path / ("cached" if cached else "plain")
-        dedup = IncrementalDedup(
-            spark,
-            str(base / "clusters"),
-            near_index_dir=str(base / "nearidx"),
-            cache_state=cached,
-        )
-        dedup.process_batch(
-            _turns(spark, [("a1", 0, "user", _doc(60), "", None)]), 0
-        )
-        dedup.process_batch(
-            _turns(
-                spark,
-                [
-                    ("b1", 0, "user", _doc(50), "", None),  # near-dup of a1
-                    ("b2", 0, "user", _doc(40, start=500), "", None),
-                ],
-            ),
-            1,
-        )
-        if cached:
-            assert dedup._schema_cache  # pinned after pure-modern reads
-        dedup.compact_index()
-        assert dedup._schema_cache == {}  # compaction invalidated
-        dedup.process_batch(
-            _turns(
-                spark,
-                [
-                    ("c1", 0, "user", _doc(60), "", None),   # exact dup of a1
-                    ("c2", 0, "user", _doc(45, start=500), "", None),  # near b2
-                ],
-            ),
-            2,
-        )
-        outs[cached] = {
-            "clusters": {
-                (r["conv_id"], r["cluster_id"])
-                for r in spark.read.parquet(str(base / "clusters")).collect()
-            },
-            "idx_docs": {
-                (r["conv_id"], r["cluster_id"], tuple(sorted(r["shingles"])))
-                for r in spark.read.parquet(str(base / "nearidx" / "docs")).collect()
-            },
-        }
-    assert outs[True] == outs[False]
-    got = dict(outs[True]["clusters"])
-    assert got["c1"] == got["a1"] and got["b1"] == got["a1"]
-    assert got["c2"] == got["b2"]
+def test_state_reads_issue_no_jobs(spark, near_dirs, count_jobs):
+    """Every state table is read with its declared schema, so the reads a
+    batch makes issue no Spark job (no schema inference, no footer scan),
+    also on a new instance's first contact with the directories."""
+    IncrementalDedup(
+        spark, near_dirs["clusters"], near_index_dir=near_dirs["nearidx"]
+    ).process_batch(_turns(spark, _rows([("s1", _doc(60))])), 0)
+    dedup = IncrementalDedup(
+        spark, near_dirs["clusters"], near_index_dir=near_dirs["nearidx"]
+    )
+    assert count_jobs(dedup._existing) == 0
+    assert count_jobs(lambda: dedup._read_index("docs")) == 0
+    assert count_jobs(lambda: dedup._read_index("bands")) == 0
+
+
+# ---------------------------------------------------------------------------
+# crash contract: a near-tier batch fails partway and the stream restarts
+# ---------------------------------------------------------------------------
+
+CRASH_BATCHES = [
+    [("a1", _doc(60)), ("a2", _doc(52)), ("u1", _doc(40, start=500))],
+    [
+        ("b1", _doc(48)),  # near a2 -> cluster a1
+        ("x1", _doc(60)),  # exact dup of a1
+        ("b2", _doc(45, start=500)),  # near u1
+        ("u2", _doc(40, start=900)),
+    ],
+    [("c1", _doc(46)), ("c2", _doc(44, start=900)), ("u3", _doc(40, start=1300))],
+]
+
+
+def _drain(dedup, in_dir, work):
+    dedup.start(
+        in_dir, os.path.join(work, "ckpt"), max_files_per_trigger=1
+    ).awaitTermination(300)
+
+
+def _assignments(spark, clusters_dir):
+    rows = spark.read.parquet(clusters_dir).collect()
+    got = {r["conv_id"]: r["cluster_id"] for r in rows}
+    assert len(got) == len(rows), "a conversation was assigned twice"
+    return got
+
+
+@pytest.fixture(scope="module")
+def crash_baseline(spark, tmp_path_factory):
+    """Three turn files (one micro-batch each) and the assignments and
+    compacted index sizes of an uninterrupted drain over them."""
+    base = tmp_path_factory.mktemp("crash_baseline")
+    in_dir = base / "in"
+    in_dir.mkdir()
+    for i, batch in enumerate(CRASH_BATCHES):
+        path = in_dir / f"f{i}.parquet"
+        _drop_turns(path, batch)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))  # file order
+    work = str(base / "work")
+    dedup = IncrementalDedup(
+        spark, os.path.join(work, "clusters"), near_index_dir=str(base / "nearidx")
+    )
+    _drain(dedup, str(in_dir), work)
+    got = _assignments(spark, os.path.join(work, "clusters"))
+    assert got["b1"] == got["x1"] == got["c1"] == "a1", got
+    assert got["b2"] == "u1" and got["c2"] == "u2", got
+    res = dedup.compact_index()
+    return str(in_dir), got, (res["docs_after"], res["bands_after"])
+
+
+@pytest.mark.parametrize(
+    "fault", ["after_bands", "after_docs", "after_clusters", "clusters_task"]
+)
+def test_crash_mid_batch_restart(spark, tmp_path, monkeypatch, crash_baseline, fault):
+    """The second of three near-tier batches fails partway: it raises right
+    after its bands, docs or clusters append, or one task of its clusters
+    write fails. Restarted from the same streaming checkpoint, the stream
+    replays that batch and ends with the uninterrupted run's assignments,
+    and compaction leaves the uninterrupted run's index sizes."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    in_dir, want, want_index = crash_baseline
+    work = str(tmp_path / "work")
+    clusters_dir = os.path.join(work, "clusters")
+    target = {"after_bands": "bands", "after_docs": "docs"}.get(fault, "clusters")
+    writes = {"n": 0}
+    parquet = DataFrameWriter.parquet
+
+    def faulty(self, path, *args, **kwargs):
+        if os.path.basename(path) != target:
+            return parquet(self, path, *args, **kwargs)
+        writes["n"] += 1
+        if writes["n"] != 2:  # the first and third batches write untouched
+            return parquet(self, path, *args, **kwargs)
+        if fault == "clusters_task":
+            failing = self._df.withColumn(
+                "cluster_id",
+                F.when(
+                    F.spark_partition_id() == 0,
+                    F.raise_error("injected task failure"),
+                ).otherwise(F.col("cluster_id")),
+            )
+            return parquet(failing.write.mode("append"), path)
+        parquet(self, path, *args, **kwargs)
+        raise RuntimeError(f"injected crash after the {target} append")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", faulty)
+    dedup = IncrementalDedup(
+        spark, clusters_dir, near_index_dir=str(tmp_path / "nearidx")
+    )
+    with pytest.raises(Exception, match="injected"):
+        _drain(dedup, in_dir, work)
+    assert writes["n"] == 2
+    monkeypatch.undo()
+
+    _drain(dedup, in_dir, work)  # restart from the same checkpoint
+    assert _assignments(spark, clusters_dir) == want
+    res = dedup.compact_index()
+    assert (res["docs_after"], res["bands_after"]) == want_index
