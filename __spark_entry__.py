@@ -43,7 +43,13 @@ from cpdd_spark.multimodal import (
     text_to_image_media,
 )
 from cpdd_spark.ngram import decontaminate, jaccard_pairs
-from cpdd_spark.pipeline import DedupPipeline, cascade, near_pairs, session_cache
+from cpdd_spark.pipeline import (
+    NEAR_OUTPUTS,
+    DedupPipeline,
+    cascade,
+    near_pairs,
+    session_cache,
+)
 from cpdd_spark.rangejoin import interval_join
 from cpdd_spark.sampling import hash_bucket, hash_bucket_sql, hash_split, stratified_sample
 from cpdd_spark.session import ship_package
@@ -322,8 +328,11 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         backstop = jaccard_pairs(
             docs, "conv_id", "doc", n=5, tau=CFG.tau, store=store
         )
+        sigs = store(
+            "signatures", lambda: compute_signatures(docs, CFG, NEAR_OUTPUTS)
+        )
         return (
-            near_pairs(docs, CFG, store)
+            near_pairs(sigs, CFG, store)
             .unionByName(backstop)
             .groupBy("a", "b")
             .agg(F.min("jaccard").alias("jaccard"))
@@ -332,19 +341,22 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION MinHash route: ONE fused Arrow pass (signatures + shingle
+    """PRODUCTION MinHash route: ONE text-kernel pass (signatures + shingle
     sets) -> LSH bands -> pure-JVM exact-Jaccard verify over the stored
     sets (verify_pairs_sets: array_intersect in codegen, no text joins, no
     Python in the verify stage), NO recall backstop — the path pipeline.py
     / two_scale.py run at scale. Recall is probabilistic (b=32, r=4:
     P[miss] ~ 1.5e-4 per pair at tau), so this is benchmarked (bench.py
     HEADLINE), not oracle-gated; :func:`q_minhash_pairs` is the
-    deterministic oracle-mode twin (bit-identical jaccard doubles — see
-    tests/test_lsh_verify.py::test_verify_pairs_sets_matches_kernel)."""
+    deterministic oracle-mode twin (its verified jaccard doubles equal a
+    Python set model's — see
+    tests/test_lsh_verify.py::test_verify_pairs_sets_matches_python_model)."""
     with session_cache() as store:
-        return near_pairs(_assembled(spark, sf_dir), CFG, store).localCheckpoint(
-            eager=True
+        sigs = store(
+            "signatures",
+            lambda: compute_signatures(_assembled(spark, sf_dir), CFG, NEAR_OUTPUTS),
         )
+        return near_pairs(sigs, CFG, store).localCheckpoint(eager=True)
 
 
 def q_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -894,10 +906,8 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the signatures job), the r5 bench regression. Mirrors cpdd's
     compute-each-tier-input-once discipline (matching.c:100-139).
 
-    ``with_minhash=False``: the screen consumes only (conv_id,
-    n_shingles, simhash), so the k=128 MinHash sweep and its Arrow
-    arrays are skipped — simhash values (and therefore the pinned
-    oracle) are bit-identical to the full pass."""
+    The screen consumes only (conv_id, n_shingles, simhash), so the
+    kernel computes no MinHash sweep and ships no k-long arrays."""
     docs = _assembled(spark, sf_dir).persist()
     n_docs = docs.count()
     # No sigs materialization at all (r8): with the fingerprint riding the
@@ -908,7 +918,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipelines straight into the inline hamming screen and this ONE
     # checkpoint; the bucket-member cache it protects is unpersisted
     # right after — see pairs_from_buckets (r8).
-    sigs = compute_signatures(docs, CFG, with_minhash=False)
+    sigs = compute_signatures(docs, CFG, ("simhash",))
     caches: list = []
     result = simhash_candidates(
         sigs, CFG, n_docs=n_docs, release=caches
@@ -927,15 +937,18 @@ def q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact even if a boilerplate fingerprint collects >cap docs (the capped
     form is the 10^12-turn pipeline mode, where CC connectivity — not the
     raw list — is the product)."""
-    # persist: docs feeds BOTH the winnowed-fingerprint kernel and the
-    # R-gram-set verify kernel — uncached it assembles twice (same
-    # discipline as q_minhash_pairs; the result is O(duplicates), tiny)
-    docs = _assembled(spark, sf_dir).persist()
-    result = substring_pairs(docs, CFG, complete=True).localCheckpoint(
-        eager=True
-    )
-    docs.unpersist()
-    return result
+    # the signed table feeds the fingerprint explode and both verify join
+    # sides: kept, the text kernel runs once
+    with session_cache() as store:
+        sigs = store(
+            "signatures",
+            lambda: compute_signatures(
+                _assembled(spark, sf_dir), CFG, ("fps", "rset")
+            ),
+        )
+        return substring_pairs(sigs, CFG, complete=True).localCheckpoint(
+            eager=True
+        )
 
 
 def q_signatures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -947,7 +960,7 @@ def q_signatures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer cannot sort (pandas can't factorize lists) — so the array
     is projected to its JSON rendering; same information, scalar column.
     """
-    sigs = compute_signatures(_assembled(spark, sf_dir), CFG)
+    sigs = compute_signatures(_assembled(spark, sf_dir), CFG, ("minhash", "simhash"))
     return sigs.select(
         "conv_id",
         "n_shingles",
@@ -970,7 +983,7 @@ def q_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`q_signatures_full` remain the bench route. The TakeOrdered(20)
     here is probe-sized output, not a scale path; the signature pass
     underneath still runs the production kernel over every document."""
-    sigs = compute_signatures(_assembled(spark, sf_dir), CFG)
+    sigs = compute_signatures(_assembled(spark, sf_dir), CFG, ("minhash", "simhash"))
     return (
         sigs.orderBy("conv_id")
         .limit(20)

@@ -56,7 +56,9 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--no-substring", action="store_true",
-        help="skip the winnowed substring pass",
+        help="skip the winnowed substring pass. Its signature columns are "
+        "then not written, so turning the pass on for an existing workdir "
+        "needs --no-resume",
     )
     p.add_argument(
         "--preserve", action="store_true",
@@ -67,7 +69,11 @@ def build_parser() -> argparse.ArgumentParser:
         help="incremental streaming dedup: treat the (single) --input as a "
         "watched turns directory; new files are micro-batched, probed "
         "against the accumulated clusters index, and appended (availableNow "
-        "trigger: drains what exists, then exits — rerun to pick up more)",
+        "trigger: drains what exists, up to 8 files per micro-batch, then "
+        "exits — rerun to pick up more). To replay turn files into fresh "
+        "directories, e.g. to rebuild an older state layout, run once per "
+        "original batch: files merged into one batch can pick different "
+        "canonicals",
     )
     p.add_argument(
         "--near-index", metavar="DIR", default=None,

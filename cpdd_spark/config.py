@@ -10,11 +10,7 @@ and the MinHash path must both be driven from one ``DedupConfig``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-# 2^61 - 1, a Mersenne prime: modulus for the MinHash universal-hash family
-# h_i(x) = (a_i * x + b_i) mod p. Fits comfortably in int64/uint64 numpy math.
-MERSENNE_P = (1 << 61) - 1
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)

@@ -2,11 +2,14 @@
 
 One cascade clusters exact and near-duplicate documents::
 
-    docs -> exact_clusters -> reps -> signatures -> verified_pairs -+
-                                  +-> [substring_pairs] ------------+-> clusters
+    docs -> exact_clusters -> reps -> signatures -> verified_pairs ---+
+                                           +-> [substring_pairs] ---+-> clusters
 
-:func:`cascade` runs it and :func:`near_pairs` its signatures -> LSH
-candidates -> exact-Jaccard verify core. Both take a ``store(name,
+:func:`cascade` runs it and :func:`near_pairs` its LSH candidates ->
+exact-Jaccard verify core. The ``signatures`` stage is the cascade's only
+pass over document text: it emits the MinHash and shingle sets the near
+tier reads and, with substring on, the winnowed fingerprints and R-gram
+sets the substring tier reads. Both functions take a ``store(name,
 compute)`` callable that decides how each named intermediate is kept; it is
 the only thing that differs between callers:
 
@@ -49,6 +52,9 @@ from cpdd_spark.substring import substring_pairs
 from cpdd_spark.textfuncs import human_bytes
 from cpdd_spark.verify import verify_pairs_sets
 
+# the signature columns near_pairs reads
+NEAR_OUTPUTS = ("minhash", "shingles")
+
 # store(name, compute) -> the kept intermediate compute() builds
 Store = Callable[[str, Callable[[], DataFrame]], DataFrame]
 
@@ -73,20 +79,14 @@ def session_cache() -> Iterator[Store]:
             df.unpersist()
 
 
-def near_pairs(docs: DataFrame, cfg: DedupConfig, store: Store) -> DataFrame:
-    """``documents(conv_id, doc)`` -> verified ``(a, b, jaccard)`` pairs with
-    jaccard >= ``cfg.tau``.
+def near_pairs(sigs: DataFrame, cfg: DedupConfig, store: Store) -> DataFrame:
+    """Signed documents ``(conv_id, n_shingles, minhash, shingles)`` ->
+    verified ``(a, b, jaccard)`` pairs with jaccard >= ``cfg.tau``.
 
-    One fused Arrow pass emits each doc's MinHash signature and its distinct
-    shingle-hash set (no SimHash: nothing here reads it, and it is the
-    priciest part of the kernel). Band collisions give the candidates, and
-    the verify is pure JVM ``array_intersect`` over the stored sets. The
-    candidate list is checkpointed eagerly: that one job fills the kept
-    signatures before both verify join sides read them."""
-    sigs = store(
-        "signatures",
-        lambda: compute_signatures(docs, cfg, with_sets=True, with_simhash=False),
-    )
+    Band collisions give the candidates, and the verify is pure JVM
+    ``array_intersect`` over the stored shingle sets. The candidate list is
+    checkpointed eagerly: that one job fills a kept ``sigs`` before both
+    verify join sides read it."""
     return store(
         "verified_pairs",
         lambda: verify_pairs_sets(
@@ -110,10 +110,11 @@ def cascade(
     docs: DataFrame, cfg: DedupConfig, store: Store, substring: bool = True
 ) -> DataFrame:
     """``documents(conv_id, n_turns, doc_len, doc)`` ->
-    ``clusters(conv_id, cluster_id)``: exact tier, near pairs over its
-    representatives, the optional winnowed substring pass, and connected
-    components over the union of their edges. Exact members are spliced
-    back through the exact edges: a member's shingle set is its rep's."""
+    ``clusters(conv_id, cluster_id)``: exact tier, one text-kernel pass
+    over its representatives, near pairs and the optional winnowed
+    substring pass over the signed table, and connected components over
+    the union of their edges. Exact members are spliced back through the
+    exact edges: a member's shingle set is its rep's."""
     carry = ("doc",) if cfg.exact_verify == "bytes" else ()
     exact = store(
         "exact_clusters",
@@ -122,9 +123,12 @@ def cascade(
         ),
     )
     reps = representatives(docs, exact, cfg)
-    edges = exact_pairs(exact).unionByName(near_pairs(reps, cfg, store).select("a", "b"))
+    # the one pass over the text; no SimHash: nothing here reads it
+    outputs = NEAR_OUTPUTS + (("fps", "rset") if substring else ())
+    sigs = store("signatures", lambda: compute_signatures(reps, cfg, outputs))
+    edges = exact_pairs(exact).unionByName(near_pairs(sigs, cfg, store).select("a", "b"))
     if substring:
-        substr = store("substring_pairs", lambda: substring_pairs(reps, cfg))
+        substr = store("substring_pairs", lambda: substring_pairs(sigs, cfg))
         edges = edges.unionByName(substr.select("a", "b"))
     return store(
         "clusters",

@@ -1,49 +1,51 @@
-"""Signature tier: word shingles -> MinHash(k) + SimHash in ONE Arrow pass
-(P4-P6).
+"""The text kernel: every document is tokenized and hashed in ONE Arrow
+pass, and every hash-derived column the engine consumes comes out of it
+(P4-P6, P11).
 
-Generalizes the reference's hash tier (streaming MD5,
-/root/reference/src/common/md5.c:171-216) from exact digests to
-similarity-preserving sketches, and mirrors its FUSED single-pass design
-(matching.c:110-129 computes MD5 and byte-compares in one read): one
-``mapInPandas`` pass over each Arrow batch tokenizes, hashes shingles,
-computes all k MinHash slots AND the SimHash fingerprint — the document
-text is traversed once.
+Mirrors the reference's fused single-read design (matching.c:110-129
+hashes and byte-compares in one read of each file): the hash tier, the
+verify tier and the substring tier all read columns of one
+``mapInPandas`` pass, and no other code path reads document text into
+Python. :func:`compute_signatures` emits exactly the columns its caller
+names (``OUTPUT_TYPES``):
 
-All kernels are vectorized NumPy over flattened token arrays (no per-row
-Python work beyond the tokenizer split):
+- ``minhash``: k MinHash slots over the w-token shingles (the LSH input);
+- ``simhash``: the 64-bit SimHash of the same shingles (the SimHash screen);
+- ``shingles``: each doc's distinct shingle-hash set (the Jaccard verify);
+- ``fps``: the winnowed fingerprints of the ``substring_w``-token windows
+  (the substring tier's buckets);
+- ``rset``: the distinct R-token window hashes, R = ``substring_w +
+  winnow_window - 1`` (the substring tier's verify).
+
+The kernel is vectorized NumPy over flattened token arrays:
 
 - token hashing: ``pd.util.hash_array`` (SipHash, fixed key -> deterministic
-  across executor processes);
-- shingle hashing: rolling polynomial combine of w consecutive token hashes
-  in uint64 wraparound arithmetic — shingle strings are never materialized;
-- MinHash: each of the k "permutations" is a genuine bijection on the
-  32-bit domain — xor a seeded random constant, then the murmur3 fmix32
-  avalanche finalizer (a bijective composition of xorshifts and odd
-  multiplications). Per-doc minima via ``np.minimum.reduceat``. Two
-  deliberate choices, both measured:
-  (a) the textbook (a*x+b) mod p family with a,b drawn below 2^32 is badly
-      NON-min-wise-independent — for small a the map is monotone in x
-      (a*x never wraps p), so argmins correlate across permutations and
-      the Jaccard estimate collapses; a bijective mixer has no such
-      failure mode;
-  (b) the kernel works in uint32 with PREALLOCATED scratch buffers: the
-      k x n_shingles elementwise pass is memory-bandwidth-bound, and naive
-      numpy chains allocate ~5 full-size temporaries per op chain — at 32
-      parallel executor processes that contention erased all scaling.
-      Shingles are reduced 64->32 bit first (injectivity loss ~ birthday
-      over 2^32: a handful of in-batch collisions, harmless to a min
-      estimator);
+  across executor processes), once per token;
+- window hashing: the polynomial ``sum_j tok_h[i+j] * R^j`` in uint64
+  wraparound arithmetic, read off one prefix sum for every window width
+  (``R`` is odd, so ``R^-i`` exists mod 2^64), then an avalanche; window
+  strings are never materialized;
+- MinHash: each of the k "permutations" is a bijection on the 32-bit
+  domain (xor a seeded constant, then the murmur3 fmix32 finalizer), with
+  per-doc minima via ``np.minimum.reduceat``. The textbook ``(a*x+b) mod p``
+  family is deliberately not used: for small ``a`` it is monotone in ``x``,
+  so argmins correlate across permutations and the estimate collapses. The
+  sweep works in uint32 in preallocated, cache-sized tiles, because the
+  k x n_shingles pass is memory-bandwidth-bound;
 - SimHash: +-1 bit-plane sums of the 64-bit shingle hashes via
-  ``np.add.reduceat``, processed 16 bit-planes at a time to bound memory.
+  ``np.add.reduceat``, 16 bit-planes at a time;
+- winnowing (Schleimer et al., SIGMOD'03): the minimum of every
+  ``winnow_window`` consecutive window hashes, rightmost on ties.
 
-Config (w, k, seed) comes from one :class:`DedupConfig` so the brute-force
-recall oracle and the pipeline provably run the same shingle/signature
-config (BASELINE.json "same shingle/signature config").
+Config (w, k, seed, substring widths) comes from one :class:`DedupConfig`,
+so the brute-force recall oracle and the pipeline run the same
+shingle/signature config (BASELINE.json "same shingle/signature config").
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator, Sequence
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -51,7 +53,18 @@ from pyspark.sql import DataFrame
 
 from cpdd_spark.config import DedupConfig
 
-SIG_SCHEMA = "conv_id string, n_shingles long, minhash array<long>, simhash long"
+# every column compute_signatures can emit, with its Spark type
+OUTPUT_TYPES = {
+    "minhash": "array<long>",
+    "simhash": "long",
+    "shingles": "array<long>",
+    "fps": "array<long>",
+    "rset": "array<long>",
+}
+
+# window-hash multiplier (golden-ratio odd constant) and its inverse mod 2^64
+_R = np.uint64(0x9E3779B97F4A7C15)
+_R_INV = np.uint64(pow(int(_R), -1, 1 << 64))
 
 
 def _perm_params(cfg: DedupConfig) -> np.ndarray:
@@ -76,47 +89,87 @@ def _fmix32_into(y: np.ndarray, tmp: np.ndarray) -> np.ndarray:
     return y
 
 
-def shingle_hashes(docs: pd.Series, w: int) -> tuple[np.ndarray, np.ndarray]:
-    """Flattened 64-bit shingle hashes for a batch of documents.
+def _powers(base: np.uint64, n: int) -> np.ndarray:
+    """``base**0 .. base**(n-1)`` mod 2^64."""
+    p = np.full(n, base, dtype=np.uint64)
+    p[:1] = 1
+    with np.errstate(over="ignore"):
+        return np.cumprod(p)
 
-    Returns ``(hashes, offsets)`` where ``offsets[i]`` is the start of doc
-    i's shingles and ``offsets[n] == len(hashes)``. Docs with < w tokens
-    contribute zero shingles.
+
+def window_hashes(
+    docs: pd.Series, widths: Iterable[int]
+) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """64-bit hashes of every w-token window of a batch of documents, for
+    each ``w`` in ``widths``, from ONE tokenization and token hashing.
+
+    Returns ``{w: (hashes, offsets)}`` where ``offsets[i]`` is the start of
+    doc i's windows and ``offsets[n] == len(hashes)``. Docs with fewer than
+    w tokens contribute no windows.
     """
-    token_lists = docs.str.split()
-    counts = np.fromiter((len(t) for t in token_lists), dtype=np.int64, count=len(token_lists))
-    flat_tokens = np.concatenate(
-        [np.asarray(t, dtype=object) for t in token_lists]
-    ) if counts.sum() else np.empty(0, dtype=object)
-    tok_h = pd.util.hash_array(flat_tokens).astype(np.uint64)
-
-    n_sh = np.maximum(counts - w + 1, 0)
-    offsets = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(n_sh, out=offsets[1:])
-    total = int(offsets[-1])
-    if total == 0:
-        return np.empty(0, dtype=np.uint64), offsets
-
-    # rolling polynomial combine: h(shingle at i) = sum_j tok_h[i+j] * R^j
-    # (uint64 wraparound). Build per-doc windows via a flat index map.
-    R = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd multiplier
+    token_lists = [d.split() for d in docs]
+    counts = np.fromiter(map(len, token_lists), dtype=np.int64, count=len(token_lists))
     tok_starts = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=tok_starts[1:])
-    # global index of shingle s within doc i = tok_starts[i] + (s - offsets[i])
-    doc_of = np.repeat(np.arange(len(counts)), n_sh)
-    local = np.arange(total) - offsets[doc_of]
-    base = tok_starts[doc_of] + local
-    out = np.zeros(total, dtype=np.uint64)
+    n_tok = int(tok_starts[-1])
+    flat_tokens = np.fromiter(chain.from_iterable(token_lists), dtype=object, count=n_tok)
+    tok_h = pd.util.hash_array(flat_tokens).astype(np.uint64)
+
+    # prefix[m] = sum_{l<m} tok_h[l] * R^l, so the window at i hashes to
+    # (prefix[i+w] - prefix[i]) * R^-i = sum_j tok_h[i+j] * R^j
     with np.errstate(over="ignore"):  # uint64 wraparound is the hash design
-        mult = np.uint64(1)
-        for j in range(w):
-            out += tok_h[base + j] * mult
-            mult = mult * R
-    # final avalanche so near-identical sums don't correlate bit planes
-    out ^= out >> np.uint64(33)
-    out *= np.uint64(0xFF51AFD7ED558CCD)
-    out ^= out >> np.uint64(33)
-    return out, offsets
+        inv = _powers(_R_INV, n_tok)
+        prefix = np.zeros(n_tok + 1, dtype=np.uint64)
+        np.cumsum(tok_h * _powers(_R, n_tok), out=prefix[1:])
+
+    out = {}
+    for w in set(widths):
+        n_win = np.maximum(counts - w + 1, 0)
+        offsets = np.zeros(len(counts) + 1, dtype=np.int64)
+        np.cumsum(n_win, out=offsets[1:])
+        total = int(offsets[-1])
+        doc_of = np.repeat(np.arange(len(counts)), n_win)
+        start = tok_starts[doc_of] + np.arange(total) - offsets[doc_of]
+        with np.errstate(over="ignore"):
+            h = (prefix[start + w] - prefix[start]) * inv[start]
+            # avalanche so near-identical sums don't correlate bit planes
+            h ^= h >> np.uint64(33)
+            h *= np.uint64(0xFF51AFD7ED558CCD)
+            h ^= h >> np.uint64(33)
+        out[w] = (h, offsets)
+    return out
+
+
+def _distinct(h: np.ndarray, offsets: np.ndarray) -> list[np.ndarray]:
+    """Each doc's distinct window hashes, sorted, as int64."""
+    return [
+        np.unique(h[offsets[i] : offsets[i + 1]]).view(np.int64)
+        for i in range(len(offsets) - 1)
+    ]
+
+
+def _winnow(h: np.ndarray, k: int) -> np.ndarray:
+    """Positions of winnowing-selected fingerprints of one doc's window-hash
+    sequence ``h`` with window size ``k`` (min per window, rightmost tie)."""
+    n = len(h)
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    if n <= k:
+        return np.array([n - 1 - int(np.argmin(h[::-1]))], dtype=np.int64)
+    win = np.lib.stride_tricks.sliding_window_view(h, k)
+    # rightmost min: argmin over the reversed window
+    rev_arg = np.argmin(win[:, ::-1], axis=1)
+    pos = np.arange(n - k + 1) + (k - 1 - rev_arg)
+    return np.unique(pos)
+
+
+def _winnowed(h: np.ndarray, offsets: np.ndarray, k: int) -> list[np.ndarray]:
+    """Each doc's distinct winnow-selected window hashes, sorted, as int64."""
+    out = []
+    for i in range(len(offsets) - 1):
+        hw = h[offsets[i] : offsets[i + 1]]
+        out.append(np.unique(hw[_winnow(hw, k)]).view(np.int64))
+    return out
 
 
 def _minhash(h: np.ndarray, offsets: np.ndarray, consts: np.ndarray) -> np.ndarray:
@@ -200,37 +253,19 @@ def _simhash(h: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 
 def compute_signatures(
-    docs: DataFrame, cfg: DedupConfig, with_sets: bool = False,
-    with_minhash: bool = True, with_simhash: bool = True,
+    docs: DataFrame,
+    cfg: DedupConfig,
+    outputs: Sequence[str],
     passthrough: list[str] | None = None,
 ) -> DataFrame:
-    """``documents(conv_id, .., doc)`` ->
-    ``signatures(conv_id, n_shingles, minhash array<long>[k], simhash long)``.
+    """``documents(conv_id, .., doc)`` -> ``(conv_id, n_shingles,
+    *outputs, *passthrough)`` in one Arrow pass over the text.
 
-    ``with_sets=True`` additionally emits ``shingles array<long>`` — each
-    doc's distinct sorted shingle-hash set — from the SAME fused Arrow pass
-    (the text is traversed once either way; this extends the reference's
-    one-read multi-tier design, matching.c:110-129, to the verify tier's
-    input). Materializing signatures WITH sets is what lets verification
-    run entirely JVM-side against the stored table
-    (:func:`cpdd_spark.verify.verify_pairs_sets`), and consumers that only
-    band the minhash columns still prune the set column at the parquet/
-    Iceberg scan.
-
-    ``with_minhash=False`` drops the k-permutation MinHash from the pass
-    (schema omits the ``minhash`` column): the SimHash screen only
-    consumes ``(conv_id, n_shingles, simhash)``, and the k=128
-    permutation sweep plus the k-long Arrow arrays are the dominant cost
-    of the fused kernel — a simhash-only consumer should not pay them.
-    The emitted ``simhash`` values are bit-identical to the full pass
-    (same shingle stream, untouched accumulation; pinned by pytest).
-
-    ``with_simhash=False`` is the mirror image: consumers that only band
-    and verify — the LSH probe path, notably the streaming near tier —
-    never read ``simhash``, and its bit-bucket accumulation is the
-    single most expensive piece of the fused pass (measured 3.0 s of a
-    4.7 s single-core batch kernel). The emitted minhash/sets are
-    bit-identical to the full pass for the same reason as above.
+    ``outputs`` names the hash columns to emit, from ``OUTPUT_TYPES``; a
+    column nobody reads is not computed, and every emitted column is
+    bit-identical whatever else is requested (pinned by test).
+    ``n_shingles`` is each doc's count of w-token shingles (0 below w
+    tokens), which the LSH and SimHash screens filter on.
 
     ``passthrough`` names extra input columns to carry through the Arrow
     pass unchanged (same row order as the kernel input). This lets a
@@ -239,43 +274,51 @@ def compute_signatures(
     checkpoint instead of paying a second Python stage + checkpoint
     action per batch.
     """
+    unknown = [o for o in outputs if o not in OUTPUT_TYPES]
+    if unknown:
+        raise ValueError(f"unknown signature outputs {unknown}")
+    if passthrough and not set(passthrough).isdisjoint(
+        {"conv_id", "n_shingles", *OUTPUT_TYPES}
+    ):
+        raise ValueError("passthrough collides with signature output columns")
     consts = _perm_params(cfg)
-    w = cfg.shingle_w
+    sw = cfg.shingle_w
+    width = {
+        "minhash": sw,
+        "simhash": sw,
+        "shingles": sw,
+        "fps": cfg.substring_w,
+        "rset": cfg.substring_w + cfg.winnow_window - 1,
+    }
+
+    def column(name: str, h: np.ndarray, offsets: np.ndarray):
+        if name == "minhash":
+            return list(_minhash(h, offsets, consts))
+        if name == "simhash":
+            return _simhash(h, offsets)
+        if name == "fps":
+            return _winnowed(h, offsets, cfg.winnow_window)
+        return _distinct(h, offsets)  # shingles, rset
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            h, offsets = shingle_hashes(pdf["doc"], w)
+            hashed = window_hashes(pdf["doc"], {sw, *(width[o] for o in outputs)})
             cols = {
                 "conv_id": pdf["conv_id"].to_numpy(),
-                "n_shingles": np.diff(offsets),
+                "n_shingles": np.diff(hashed[sw][1]),
             }
-            if with_minhash:
-                cols["minhash"] = list(_minhash(h, offsets, consts))
-            if with_simhash:
-                cols["simhash"] = _simhash(h, offsets)
-            if with_sets:
-                cols["shingles"] = [
-                    np.unique(h[offsets[i] : offsets[i + 1]]).view(np.int64)
-                    for i in range(len(pdf))
-                ]
+            for o in outputs:
+                cols[o] = column(o, *hashed[width[o]])
             for c in passthrough or ():
                 cols[c] = pdf[c]
             yield pd.DataFrame(cols)
 
-    schema = (
-        "conv_id string, n_shingles long"
-        + (", minhash array<long>" if with_minhash else "")
-        + (", simhash long" if with_simhash else "")
-        + (", shingles array<long>" if with_sets else "")
-        + "".join(
-            f", {c} {docs.schema[c].dataType.simpleString()}"
-            for c in passthrough or ()
-        )
+    schema = "conv_id string, n_shingles long" + "".join(
+        f", {o} {OUTPUT_TYPES[o]}" for o in outputs
+    ) + "".join(
+        f", {c} {docs.schema[c].dataType.simpleString()}"
+        for c in passthrough or ()
     )
-    if passthrough and not set(passthrough).isdisjoint(
-        {"conv_id", "n_shingles", "minhash", "simhash", "shingles"}
-    ):
-        raise ValueError("passthrough collides with signature output columns")
     sel = ["conv_id", "doc"] + [c for c in passthrough or () if c != "doc"]
     return docs.select(*sel).mapInPandas(kernel, schema=schema)
 

@@ -136,9 +136,12 @@ class IncrementalDedup:
             return df
         msg = (
             f"{path} has rows without {required}, an older stream state "
-            "layout. Rebuild the state by replaying the turn files, in the "
-            "batches they arrived in, into fresh directories: "
-            f"{REBUILD_COMMAND}, plus --near-index <fresh> for a near index"
+            "layout. Rebuild the state by replaying the turn files into "
+            "fresh directories with one run of "
+            f"{REBUILD_COMMAND} (plus --near-index <fresh> for a near index) "
+            "per original batch, adding that batch's files to <turns dir> "
+            "before each run: the CLI drains up to 8 files per batch, and "
+            "files merged into one batch can pick different canonicals"
         )
         return df.withColumn(required, F.coalesce(required, F.raise_error(msg)))
 
@@ -192,7 +195,7 @@ class IncrementalDedup:
             # Exact duplicates get signed too; a fresh-heavy batch wastes
             # nothing by it.
             docs = compute_signatures(
-                docs, self.cfg, with_sets=True, with_simhash=False,
+                docs, self.cfg, ("minhash", "shingles"),
                 passthrough=["n_turns", "doc_len", "md5", "xxh64", "doc"],
             )
             t0 = time.perf_counter()

@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 # canonical whitespace tokenizer (ONE definition, three engines)
 # ---------------------------------------------------------------------------
-# Every shingle-bearing path — the pandas shingle kernel
-# (signatures.shingle_hashes -> str.split()), the JVM n-gram index
+# Every shingle-bearing path — the text kernel
+# (signatures.window_hashes -> str.split()), the JVM n-gram index
 # (ngram.ngram_sets -> ws_tokens), and the DuckDB oracle SQL
 # (__spark_entry__.WS_SQL) — tokenizes on the SAME character set: Python's
 # ``str.split()`` whitespace, i.e. Unicode White_Space ∪ {U+001C..U+001F}.
@@ -138,8 +138,9 @@ def lang_id(text: Column | str) -> Column:
 
 def fingerprint(text: Column | str) -> Column:
     """128-bit content fingerprint (hex). MD5 keeps the reference's exact
-    grouping semantics (R9) and is engine-portable; the similarity-aware
-    rolling fingerprints live in cpdd_spark.substring (winnowing)."""
+    grouping semantics (R9) and is engine-portable; the winnowed
+    substring fingerprints are the text kernel's ``fps`` column
+    (cpdd_spark.signatures)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(c)
 

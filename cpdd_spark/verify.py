@@ -2,123 +2,45 @@
 
 Mirrors the reference's non-negotiable rule that a hash match is never
 trusted without verification (MD5 collision guard,
-/root/reference/src/cpdd/matching.c:77-83; byte compare 30-59): every LSH /
-SimHash candidate pair is re-checked with EXACT w-shingle Jaccard, and only
-pairs >= tau survive.
+/root/reference/src/cpdd/matching.c:77-83; byte compare 30-59): every LSH
+candidate pair is re-checked with EXACT w-shingle Jaccard, and only pairs
+>= tau survive.
 
-Two forms compute the same Jaccard over the same distinct 64-bit shingle
-hashes (collision odds ~2^-64 per shingle pair):
-
-- :func:`verify_pairs_sets`, the production form, intersects shingle-hash
-  sets stored once per document next to its signature
-  (``compute_signatures(with_sets=True)``) — pure JVM, no document text;
-- :func:`verify_pairs` re-shingles both documents' text per pair in an
-  Arrow kernel. It is the independent reference the set form is tested
-  against.
+The Jaccard is computed over each document's distinct 64-bit shingle-hash
+set, which the text kernel stores next to its signature
+(``compute_signatures(.., ("minhash", "shingles"))``; collision odds
+~2^-64 per shingle pair). The verify is pure JVM: ``array_intersect``
+inside whole-stage codegen, no Python worker and no document text.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cpdd_spark.config import DedupConfig
-from cpdd_spark.signatures import shingle_hashes
-
-VERIFIED_SCHEMA = "a string, b string, jaccard double"
 
 
-def verify_pairs(
-    pairs: DataFrame, docs: DataFrame, cfg: DedupConfig, keep_all: bool = False
-) -> DataFrame:
-    """``pairs(a, b)`` + ``documents(conv_id, doc)`` ->
-    ``verified_pairs(a, b, jaccard)`` with jaccard >= cfg.tau.
+def verify_pairs_sets(pairs: DataFrame, sets: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """``pairs(a, b, ..)`` + ``sets(conv_id, shingles)`` ->
+    ``(a, b, .., jaccard)`` with jaccard >= ``cfg.tau``.
 
-    ``keep_all=True`` returns every candidate with its jaccard (for recall
-    diagnostics). The doc joins stay JVM-side; only the set intersection
-    runs in the Arrow kernel.
-    """
-    w = cfg.shingle_w
-    tau = cfg.tau
-
-    da = docs.select(F.col("conv_id").alias("a"), F.col("doc").alias("doc_a"))
-    db = docs.select(F.col("conv_id").alias("b"), F.col("doc").alias("doc_b"))
-    # shuffle-hash hints, stated precisely: join 1 builds its hash table
-    # from the SLIM pair list (keys only) and streams the docs; join 2
-    # builds from (pairs JOIN doc_a) — candidate-count x doc_a bytes per
-    # hash partition — and streams the docs again. Sort-merge would instead
-    # sort the full rep-corpus text twice per verify, which measures worse
-    # at every shipped scale. On a dup-HEAVY corpus join 2's build side
-    # grows with candidates x doc size — verify_pairs_sets avoids that.
-    joined = (
-        pairs.hint("shuffle_hash")
-        .join(da, "a")
-        .hint("shuffle_hash")
-        .join(db, "b")
-        .select("a", "b", "doc_a", "doc_b")
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ha, offs_a = shingle_hashes(pdf["doc_a"], w)
-            hb, offs_b = shingle_hashes(pdf["doc_b"], w)
-            jac = np.zeros(len(pdf), dtype=np.float64)
-            for i in range(len(pdf)):
-                sa = np.unique(ha[offs_a[i] : offs_a[i + 1]])
-                sb = np.unique(hb[offs_b[i] : offs_b[i + 1]])
-                if len(sa) == 0 or len(sb) == 0:
-                    # sub-shingle docs: near-dup iff string-identical (the
-                    # exact tier's jurisdiction; see exact_jaccard_sets)
-                    jac[i] = 1.0 if pdf["doc_a"].iat[i] == pdf["doc_b"].iat[i] else 0.0
-                else:
-                    inter = len(np.intersect1d(sa, sb, assume_unique=True))
-                    jac[i] = inter / (len(sa) + len(sb) - inter)
-            yield pd.DataFrame(
-                {"a": pdf["a"].to_numpy(), "b": pdf["b"].to_numpy(), "jaccard": jac}
-            )
-
-    verified = joined.mapInPandas(kernel, schema=VERIFIED_SCHEMA)
-    if keep_all:
-        return verified
-    return verified.filter(F.col("jaccard") >= F.lit(tau))
-
-
-def verify_pairs_sets(
-    pairs: DataFrame, sets: DataFrame, cfg: DedupConfig, keep_all: bool = False
-) -> DataFrame:
-    """The production form of :func:`verify_pairs`: verification against
-    PRECOMPUTED shingle-hash sets (``compute_signatures(with_sets=True)``)
-    instead of raw text — ``(a, b, jaccard)`` with jaccard >= cfg.tau.
-
-    Entirely JVM-side: ``array_intersect`` over ``array<long>`` inside
-    whole-stage codegen, zero Python workers in the verify hot path, and the
-    joins ship slim hash arrays (~8 B/shingle), never document text — the
-    index stores each doc's set once and every probe reuses it (the
+    The joins ship slim hash arrays (~8 B/shingle), never document text —
+    the index stores each doc's set once and every probe reuses it (the
     materialized analogue of cpdd never re-reading a reference file per
-    probe, /root/reference/src/cpdd/matching.c:320-375).
+    probe, /root/reference/src/cpdd/matching.c:320-375). They carry no
+    join hint: after the first join the candidate side also carries the
+    ``a`` sets, and a hot band makes it far larger than the per-doc side,
+    so the planner's sort-merge join (which can spill) is the safe choice.
 
-    Bit-identical jaccard to the Arrow kernel on any pair where both docs
-    have shingles: both paths intersect the SAME distinct int64 hash sets
-    and divide the same way. Sole divergence: sub-shingle docs (empty set)
-    verify to 0.0 here vs string-equality in the kernel — moot for LSH
-    candidates, which are screened to n_shingles > 0 before banding
-    (cpdd_spark.lsh.band_buckets), and byte-identical shorts are the exact
-    tier's jurisdiction everywhere in this engine.
+    A doc with an empty set (under w tokens) verifies to 0.0. LSH
+    candidates never have one: they are screened to n_shingles > 0 before
+    banding (cpdd_spark.lsh.band_buckets), and byte-identical short docs
+    are the exact tier's jurisdiction everywhere in this engine.
     """
     sa = sets.select(F.col("conv_id").alias("a"), F.col("shingles").alias("sh_a"))
     sb = sets.select(F.col("conv_id").alias("b"), F.col("shingles").alias("sh_b"))
-    joined = (
-        pairs.hint("shuffle_hash")
-        .join(sa, "a")
-        .hint("shuffle_hash")
-        .join(sb, "b")
-    )
+    joined = pairs.join(sa, "a").join(sb, "b")
     na, nb = F.size("sh_a"), F.size("sh_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = (
@@ -130,7 +52,6 @@ def verify_pairs_sets(
     )
     # extra columns on `pairs` (e.g. a provenance tag when one fused call
     # verifies several candidate families) ride through untouched
-    verified = joined.select(*pairs.columns, jac)
-    if keep_all:
-        return verified
-    return verified.filter(F.col("jaccard") >= F.lit(cfg.tau))
+    return joined.select(*pairs.columns, jac).filter(
+        F.col("jaccard") >= F.lit(cfg.tau)
+    )

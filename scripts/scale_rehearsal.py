@@ -116,7 +116,7 @@ def run_stages(num_convs: int) -> dict:
         # the SimHash screen signs the reps itself: the cascade's signatures
         # carry no simhash
         simsigs = store(
-            "simhash_signatures", lambda: compute_signatures(reps, cfg, with_minhash=False)
+            "simhash_signatures", lambda: compute_signatures(reps, cfg, ("simhash",))
         )
         # auto (the escalation valve picks pairs or triples from n_reps)
         # plus the FORCED pair form, so the valve's saving is a measured

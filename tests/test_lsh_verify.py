@@ -13,9 +13,15 @@ from cpdd_spark.config import DedupConfig
 from cpdd_spark.exact import exact_clusters
 from cpdd_spark.lsh import candidate_pairs, simhash_candidates
 from cpdd_spark.signatures import compute_signatures, exact_jaccard_sets
-from cpdd_spark.verify import verify_pairs
+from cpdd_spark.verify import verify_pairs_sets
 
 CFG = DedupConfig()
+# everything a candidate screen and its verify read
+SIGNED = ("minhash", "simhash", "shingles")
+
+
+def _verify(pairs, sigs, cfg=CFG):
+    return verify_pairs_sets(pairs, sigs.select("conv_id", "shingles"), cfg)
 
 
 @pytest.fixture(scope="module")
@@ -47,9 +53,9 @@ def oracle_pairs(reps_df):
 
 
 def test_lsh_recall_and_verify_precision(spark, reps_df, oracle_pairs):
-    sigs = compute_signatures(reps_df, CFG).cache()
+    sigs = compute_signatures(reps_df, CFG, SIGNED).cache()
     cands = candidate_pairs(sigs, CFG)
-    verified = verify_pairs(cands, reps_df, CFG)
+    verified = _verify(cands, sigs)
     got = {(r["a"], r["b"]) for r in verified.collect()}
 
     assert len(oracle_pairs) > 0, "fixture must plant near-dup pairs above tau"
@@ -61,9 +67,11 @@ def test_lsh_recall_and_verify_precision(spark, reps_df, oracle_pairs):
 
 
 def test_verified_jaccard_matches_bruteforce(spark, reps_df):
-    sigs = compute_signatures(reps_df, CFG)
+    sigs = compute_signatures(reps_df, CFG, SIGNED).cache()
     cands = candidate_pairs(sigs, CFG)
-    verified = verify_pairs(cands, reps_df, CFG, keep_all=True).collect()
+    # tau 0 keeps every candidate with its jaccard
+    verified = _verify(cands, sigs, DedupConfig(tau=0.0)).collect()
+    assert len(verified) == cands.count()
     docs = {r["conv_id"]: r["doc"] for r in reps_df.select("conv_id", "doc").collect()}
     for r in verified:
         exact = exact_jaccard_sets(docs[r["a"]], docs[r["b"]], CFG.shingle_w)
@@ -73,8 +81,8 @@ def test_verified_jaccard_matches_bruteforce(spark, reps_df):
 def test_near_dup_truth_found(spark, docs_df, truth_pdf):
     """Every planted near_dup must pair with its source (mutation rates are
     chosen to keep J >= tau)."""
-    sigs = compute_signatures(docs_df, CFG)
-    verified = verify_pairs(candidate_pairs(sigs, CFG), docs_df, CFG)
+    sigs = compute_signatures(docs_df, CFG, SIGNED).cache()
+    verified = _verify(candidate_pairs(sigs, CFG), sigs)
     got = {(r["a"], r["b"]) for r in verified.collect()}
     for _, row in truth_pdf[truth_pdf["kind"] == "near_dup"].iterrows():
         pair = tuple(sorted([row["conv_id"], row["source_conv"]]))
@@ -92,7 +100,7 @@ def test_hot_bucket_capped(spark):
     docs = assemble_documents(turns).cache()
     # identical docs collapse at the exact tier; force them through LSH to
     # exercise the hot path by NOT dedup-ing first
-    sigs = compute_signatures(docs, cfg)
+    sigs = compute_signatures(docs, cfg, SIGNED).cache()
     pairs = candidate_pairs(sigs, cfg)
     n = pairs.count()
     n_skew = 150
@@ -102,7 +110,7 @@ def test_hot_bucket_capped(spark):
     # connectivity: all skew convs must land in one component
     from cpdd_spark.cc import connected_components
 
-    verified = verify_pairs(pairs, docs, cfg)
+    verified = _verify(pairs, sigs, cfg)
     clusters = connected_components(verified.select("a", "b")).toPandas()
     skew_ids = set(fx.truth[fx.truth["kind"] == "skew_dup"]["conv_id"])
     labels = set(clusters[clusters["conv_id"].isin(skew_ids)]["cluster_id"])
@@ -122,40 +130,30 @@ def test_simhash_candidates_find_very_near_dups(spark, reps_df, docs_df):
         if exact_jaccard_sets(da, db, CFG.shingle_w) >= 0.95:
             very_near.add((ca, cb))
     assert len(very_near) > 0
-    sigs = compute_signatures(reps_df, CFG)
+    sigs = compute_signatures(reps_df, CFG, SIGNED)
     got = {(r["a"], r["b"]) for r in simhash_candidates(sigs, CFG).collect()}
     assert very_near <= got, f"missed: {very_near - got}"
 
 
-def test_verify_pairs_sets_matches_kernel(spark, turns_df):
-    """The JVM array_intersect verifier must emit bit-identical jaccard to
-    the Arrow kernel for every LSH candidate (same distinct int64 sets,
-    same division)."""
-    from cpdd_spark.assemble import assemble_documents
-    from cpdd_spark.config import DedupConfig
-    from cpdd_spark.lsh import candidate_pairs
-    from cpdd_spark.signatures import compute_signatures
-    from cpdd_spark.verify import verify_pairs, verify_pairs_sets
-
-    cfg = DedupConfig()
+def test_verify_pairs_sets_matches_python_model(spark, turns_df):
+    """The JVM array_intersect verifier emits, for every LSH candidate of
+    the unfiltered corpus, exactly the jaccard double of the Python
+    token-tuple set model (same distinct sets, same division)."""
+    cfg = DedupConfig(tau=0.0)  # keeps every candidate
     docs = assemble_documents(turns_df).persist()
-    cands = candidate_pairs(compute_signatures(docs, cfg), cfg)
-    kernel = {
+    sigs = compute_signatures(docs, cfg, ("minhash", "shingles")).persist()
+    cands = candidate_pairs(sigs, cfg)
+    got = {
         (r["a"], r["b"]): r["jaccard"]
-        for r in verify_pairs(cands, docs, cfg, keep_all=True).collect()
+        for r in _verify(cands, sigs, cfg).collect()
     }
-    jvm = {
-        (r["a"], r["b"]): r["jaccard"]
-        for r in verify_pairs_sets(
-            cands,
-            compute_signatures(docs, cfg, with_sets=True).select("conv_id", "shingles"),
-            cfg,
-            keep_all=True,
-        ).collect()
-    }
+    text = {r["conv_id"]: r["doc"] for r in docs.select("conv_id", "doc").collect()}
+    n_cands = cands.count()
+    sigs.unpersist()
     docs.unpersist()
-    assert len(kernel) > 0
-    assert kernel == jvm  # exact double equality, every candidate
+    assert len(got) == n_cands > 0
+    for (a, b), jac in got.items():
+        assert jac == exact_jaccard_sets(text[a], text[b], cfg.shingle_w), (a, b)
 
 
 def test_banded_window_pairs_exact(spark, monkeypatch):
@@ -292,7 +290,7 @@ def test_simhash_triple_escalation_equivalent_output(spark, reps_df):
 
     from cpdd_spark.lsh import simhash_block_subset_size
 
-    sigs = compute_signatures(reps_df, CFG)
+    sigs = compute_signatures(reps_df, CFG, SIGNED)
     base = {(r["a"], r["b"]) for r in simhash_candidates(sigs, CFG).collect()}
     hot_cfg = replace(CFG, simhash_escalate_at=1e-9)  # force k=3 at any n
     n = sigs.count()

@@ -150,25 +150,42 @@ def test_pipeline_partitioned_output_layout(spark, turns_df, workdir):
     assert all(how == "resumed" for _, how in pipe2.stage_log), pipe2.stage_log
 
 
-def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir):
-    """A committed signatures table from a pre-with_sets run (no shingles
-    column) is not recomputed on resume: a run that stopped after that
-    stage resumes into verify, which fails at plan time before any later
-    stage table changes. ``resume=False`` rebuilds the clusters."""
+@pytest.mark.parametrize("missing", ["shingles", "fps"])
+def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir, missing):
+    """A committed signatures table that lacks a column a later stage reads
+    is not recomputed on resume: the run fails at plan time in the first
+    stage that reads the column, before that stage or any later one
+    changes. ``resume=False`` rebuilds the clusters of a clean run.
+
+    - ``shingles``: a table from before the shingle sets were stored, in a
+      run that stopped after the signatures stage, fails in verify;
+    - ``fps``: the table of a ``--no-substring`` run (no ``fps``/``rset``,
+      no substring_pairs table) resumed with substring on fails in the
+      substring stage.
+    """
     import os
     import shutil
 
-    p1 = DedupPipeline(spark, workdir, CFG)
-    c1 = {(r["conv_id"], r["cluster_id"]) for r in p1.run(turns_df).collect()}
+    clean = DedupPipeline(spark, workdir + "_clean", CFG).run(turns_df)
+    c1 = {(r["conv_id"], r["cluster_id"]) for r in clean.collect()}
 
-    # rewrite the committed signatures table WITHOUT the set column, and
-    # drop the verify commit: the run stopped after the signatures stage
-    legacy = p1.io.read("signatures").drop("shingles").localCheckpoint(eager=True)
-    path = p1.io.path("signatures")
-    shutil.rmtree(path)
-    legacy.write.parquet(path)
-    assert os.path.isfile(os.path.join(path, "_SUCCESS"))
-    os.remove(os.path.join(p1.io.path("verified_pairs"), "_SUCCESS"))
+    if missing == "shingles":
+        p1 = DedupPipeline(spark, workdir, CFG)
+        p1.run(turns_df)
+        # rewrite the committed signatures table WITHOUT the set column,
+        # and drop the verify commit: the run stopped after signatures
+        legacy = p1.io.read("signatures").drop("shingles").localCheckpoint(eager=True)
+        path = p1.io.path("signatures")
+        shutil.rmtree(path)
+        legacy.write.parquet(path)
+        assert os.path.isfile(os.path.join(path, "_SUCCESS"))
+        os.remove(os.path.join(p1.io.path("verified_pairs"), "_SUCCESS"))
+        failing = "verified_pairs"
+    else:
+        p1 = DedupPipeline(spark, workdir, CFG, enable_substring=False)
+        p1.run(turns_df)
+        assert "fps" not in p1.io.read("signatures").columns
+        failing = "substring_pairs"
 
     def snapshot():
         return {
@@ -183,10 +200,10 @@ def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir):
 
     before = snapshot()
     p2 = DedupPipeline(spark, workdir, CFG)
-    with pytest.raises(Exception, match="shingles"):
+    with pytest.raises(Exception, match=missing):
         p2.run(turns_df)
     assert dict(p2.stage_log)["signatures"] == "resumed"
-    assert "verified_pairs" not in dict(p2.stage_log)
+    assert failing not in dict(p2.stage_log)
     assert snapshot() == before
 
     p3 = DedupPipeline(spark, workdir, CFG)

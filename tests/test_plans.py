@@ -204,3 +204,78 @@ def test_embed_dup_pairs_no_string_casts(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     casts = re.findall(r"cast\([^)]*as string\)", plan.lower())
     assert not casts, casts[:5]
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, through AQE wrappers and query stages."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+    elif name.endswith("QueryStage"):
+        yield from _plan_nodes(node.plan())
+    else:
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from _plan_nodes(kids.apply(i))
+
+
+def test_verify_builds_no_hash_table_on_candidates(spark):
+    """Hot-band guard: a shuffled hash join cannot spill, and after the
+    first verify join the candidate side also carries the ``a`` sets, so
+    no ShuffledHashJoin may build on the candidate side (the one whose rows
+    carry both ``a`` and ``b``). Broadcast is off so the plan is the one a
+    corpus too large to broadcast gets."""
+    from cpdd_spark.config import DedupConfig
+    from cpdd_spark.verify import verify_pairs_sets
+
+    n = 40
+    pairs = spark.createDataFrame(
+        [(f"d{i:02d}", f"d{j:02d}") for i in range(n) for j in range(i + 1, n)],
+        "a string, b string",
+    ).localCheckpoint(eager=True)
+    sets = spark.createDataFrame(
+        [(f"d{i:02d}", [i, i + 1, 7]) for i in range(n)],
+        "conv_id string, shingles array<long>",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        verified = verify_pairs_sets(pairs, sets, DedupConfig(tau=0.0))
+        assert verified.count() == n * (n - 1) // 2
+        builds = []
+        for node in _plan_nodes(verified._jdf.queryExecution().executedPlan()):
+            if node.nodeName() == "ShuffledHashJoin":
+                left = node.buildSide().toString() == "BuildLeft"
+                side = (node.left() if left else node.right()).output()
+                builds.append({side.apply(i).name() for i in range(side.size())})
+    finally:
+        spark.conf.set(key, old)
+    assert not [cols for cols in builds if {"a", "b"} <= cols], builds
+
+
+def test_text_kernel_is_the_cascade_s_one_python_pass(spark, turns_df):
+    """Document text is tokenized by exactly one Arrow kernel: across the
+    stage plans of the batch cascade (substring on) there is one
+    MapInPandas, in ``signatures``; ``substring_pairs`` over the signed
+    table is pure JVM."""
+    from cpdd_spark.config import DedupConfig
+    from cpdd_spark.pipeline import cascade
+
+    plans = {}
+
+    def store(name, compute):
+        df = compute()
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return df.localCheckpoint(eager=True)
+
+    cascade(assemble_documents(turns_df), DedupConfig(), store)
+    counts = {name: plan.count("MapInPandas") for name, plan in plans.items()}
+    assert counts == {
+        "exact_clusters": 0,
+        "signatures": 1,
+        "verified_pairs": 0,
+        "substring_pairs": 0,
+        "clusters": 0,
+    }, counts

@@ -17,7 +17,7 @@ from cpdd_spark.fixtures import FixtureParams, generate
 from cpdd_spark.lsh import candidate_pairs
 from cpdd_spark.cc import connected_components
 from cpdd_spark.signatures import compute_signatures, exact_jaccard_sets
-from cpdd_spark.verify import verify_pairs
+from cpdd_spark.verify import verify_pairs_sets
 
 CFG = DedupConfig()
 
@@ -51,10 +51,12 @@ def test_dup_pair_recall_and_cluster_parity(spark, corpus):
     assert len(ref_pairs) >= 150  # 20% near-dups planted above tau
 
     # pipeline pairs at the same config
-    sigs = compute_signatures(reps, CFG)
+    sigs = compute_signatures(reps, CFG, ("minhash", "shingles")).cache()
     got = {
         (r["a"], r["b"])
-        for r in verify_pairs(candidate_pairs(sigs, CFG), reps, CFG).collect()
+        for r in verify_pairs_sets(
+            candidate_pairs(sigs, CFG), sigs.select("conv_id", "shingles"), CFG
+        ).collect()
     }
 
     missed = ref_pairs - got

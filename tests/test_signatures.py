@@ -8,12 +8,13 @@ import pytest
 
 from cpdd_spark.config import DedupConfig
 from cpdd_spark.signatures import (
+    OUTPUT_TYPES,
     _minhash,
     _perm_params,
     _simhash,
     compute_signatures,
     exact_jaccard_sets,
-    shingle_hashes,
+    window_hashes,
 )
 
 CFG = DedupConfig()
@@ -21,20 +22,56 @@ CFG = DedupConfig()
 
 def _sig_for(docs: list[str], cfg: DedupConfig = CFG) -> np.ndarray:
     consts = _perm_params(cfg)
-    h, offs = shingle_hashes(pd.Series(docs), cfg.shingle_w)
+    h, offs = window_hashes(pd.Series(docs), (cfg.shingle_w,))[cfg.shingle_w]
     return _minhash(h, offs, consts), _simhash(h, offs), np.diff(offs)
 
 
 def test_shingle_counts():
-    docs = pd.Series(["a b c d e f g", "a b c", ""])  # 7, 3, 0 tokens; w=5
-    _, offs = shingle_hashes(docs, 5)
-    assert list(np.diff(offs)) == [3, 0, 0]
+    docs = pd.Series(["a b c d e f g", "a b c", ""])  # 7, 3, 0 tokens
+    got = window_hashes(docs, (5, 3, 8))
+    assert list(np.diff(got[5][1])) == [3, 0, 0]
+    assert list(np.diff(got[3][1])) == [5, 1, 0]
+    assert list(np.diff(got[8][1])) == [0, 0, 0]
 
 
 def test_shingle_hash_order_sensitivity():
-    h1, _ = shingle_hashes(pd.Series(["a b c d e"]), 5)
-    h2, _ = shingle_hashes(pd.Series(["e d c b a"]), 5)
+    h1, _ = window_hashes(pd.Series(["a b c d e"]), (5,))[5]
+    h2, _ = window_hashes(pd.Series(["e d c b a"]), (5,))[5]
     assert h1[0] != h2[0]
+
+
+def _model_window_hashes(doc: str, w: int) -> list[int]:
+    """Python-int model of the window hash: ``sum_j tok_h[i+j] * R^j`` mod
+    2^64 computed window by window, then the avalanche."""
+    mask = (1 << 64) - 1
+    toks = doc.split()
+    th = [int(x) for x in pd.util.hash_array(np.asarray(toks, dtype=object))] if toks else []
+    out = []
+    for i in range(len(toks) - w + 1):
+        h = 0
+        for j in range(w):
+            h = (h + th[i + j] * pow(0x9E3779B97F4A7C15, j, 1 << 64)) & mask
+        h ^= h >> 33
+        h = (h * 0xFF51AFD7ED558CCD) & mask
+        h ^= h >> 33
+        out.append(h)
+    return out
+
+
+def test_window_hashes_match_python_model():
+    """Every width read off the one prefix sum equals the window-by-window
+    polynomial, bit for bit, and no window crosses a document boundary."""
+    rng = np.random.default_rng(3)
+    docs = [
+        " ".join(f"t{x}" for x in rng.integers(0, 30, n))
+        for n in (0, 1, 4, 5, 6, 29, 30, 36, 37, 38, 90)
+    ]
+    widths = (5, 30, 37)
+    got = window_hashes(pd.Series(docs), widths)
+    for w in widths:
+        h, offs = got[w]
+        for i, doc in enumerate(docs):
+            assert [int(x) for x in h[offs[i] : offs[i + 1]]] == _model_window_hashes(doc, w)
 
 
 def test_identical_docs_identical_signatures():
@@ -92,7 +129,7 @@ def test_compute_signatures_spark(spark, turns_df):
     from cpdd_spark.assemble import assemble_documents
 
     docs = assemble_documents(turns_df)
-    sigs = compute_signatures(docs, CFG)
+    sigs = compute_signatures(docs, CFG, ("minhash", "simhash"))
     pdf = sigs.toPandas()
     assert len(pdf) == docs.count()
     assert all(len(m) == CFG.num_perm for m in pdf["minhash"])
@@ -105,21 +142,51 @@ def test_compute_signatures_spark(spark, turns_df):
         assert by_id.loc[cid, "simhash"] == local_sim[i]
 
 
-def test_simhash_only_mode_bit_identical(spark, turns_df):
-    """with_minhash=False skips the k-permutation sweep; the emitted
-    simhash column (and n_shingles) must be bit-identical to the full
-    fused pass — the guarantee that lets the SimHash screen take the
-    cheap path without touching its pinned oracle."""
+def test_signature_columns_independent_of_request(spark, turns_df):
+    """Every output column of the one text kernel is bit-identical whatever
+    other columns are requested: each alone, and all five together in a
+    different order, against the full request. Also pins the schema: the
+    kernel emits exactly the named columns, after conv_id and n_shingles."""
     from cpdd_spark.assemble import assemble_documents
 
-    docs = assemble_documents(turns_df)
-    full = compute_signatures(docs, CFG).toPandas().set_index("conv_id")
-    lean = compute_signatures(docs, CFG, with_minhash=False).toPandas()
-    assert list(lean.columns) == ["conv_id", "n_shingles", "simhash"]
-    assert len(lean) == len(full)
-    for _, r in lean.iterrows():
-        assert r["simhash"] == full.loc[r["conv_id"], "simhash"]
-        assert r["n_shingles"] == full.loc[r["conv_id"], "n_shingles"]
+    docs = assemble_documents(turns_df).persist()
+    names = list(OUTPUT_TYPES)
+    full = compute_signatures(docs, CFG, names).toPandas().set_index("conv_id")
+    requests = [(n,) for n in names] + [tuple(reversed(names))]
+    for req in requests:
+        got = compute_signatures(docs, CFG, req).toPandas().set_index("conv_id")
+        assert list(got.columns) == ["n_shingles", *req]
+        assert sorted(got.index) == sorted(full.index)
+        for col in ["n_shingles", *req]:
+            for cid, v in got[col].items():
+                assert np.array_equal(np.asarray(v), np.asarray(full.loc[cid, col])), (req, col, cid)
+    docs.unpersist()
+
+
+def test_substring_columns_match_python_model(spark):
+    """``fps`` holds each doc's distinct winnow-selected W-window hashes and
+    ``rset`` its distinct R-window hashes (R = W + k - 1), as int64."""
+    from cpdd_spark.signatures import _winnow
+
+    rng = np.random.default_rng(4)
+    texts = [" ".join(f"t{x}" for x in rng.integers(0, 40, n)) for n in (0, 12, 30, 36, 37, 80, 200)]
+    docs = spark.createDataFrame(
+        [(f"c{i}", t) for i, t in enumerate(texts)], "conv_id string, doc string"
+    )
+    got = compute_signatures(docs, CFG, ("fps", "rset")).toPandas().set_index("conv_id")
+    w, k = CFG.substring_w, CFG.winnow_window
+    for i, t in enumerate(texts):
+        hw = np.array(_model_window_hashes(t, w), dtype=np.uint64)
+        fps = np.unique(hw[_winnow(hw, k)]).view(np.int64) if len(hw) else []
+        rset = np.unique(np.array(_model_window_hashes(t, w + k - 1), dtype=np.uint64)).view(np.int64)
+        assert list(got.loc[f"c{i}", "fps"]) == list(fps)
+        assert list(got.loc[f"c{i}", "rset"]) == list(rset)
+
+
+def test_unknown_output_rejected(spark):
+    docs = spark.createDataFrame([("c", "a b c")], "conv_id string, doc string")
+    with pytest.raises(ValueError, match="unknown signature outputs"):
+        compute_signatures(docs, CFG, ("minhash", "sets"))
 
 
 def test_bad_band_config_rejected():

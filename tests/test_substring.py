@@ -6,9 +6,16 @@ import numpy as np
 
 from cpdd_spark.assemble import assemble_documents
 from cpdd_spark.config import DedupConfig
-from cpdd_spark.substring import _winnow, substring_pairs
+from cpdd_spark.signatures import _winnow, compute_signatures
+from cpdd_spark.substring import substring_pairs
 
 CFG = DedupConfig()
+
+
+def _signed(docs, cfg=CFG):
+    """The text kernel's substring columns, kept: the pair stage reads them
+    three times (fingerprint explode, both verify join sides)."""
+    return compute_signatures(docs, cfg, ("fps", "rset")).localCheckpoint(eager=True)
 
 
 def test_winnow_guarantee_property():
@@ -57,8 +64,9 @@ def test_substring_complete_mode_lifts_hot_bucket_cap(spark):
         [(f"c{i:02d}", f"{shared} uniq{i}") for i in range(20)],
         "conv_id string, doc string",
     )
-    capped = substring_pairs(docs, cfg).count()
-    full = substring_pairs(docs, cfg, complete=True).count()
+    sigs = _signed(docs, cfg)
+    capped = substring_pairs(sigs, cfg).count()
+    full = substring_pairs(sigs, cfg, complete=True).count()
     assert full == 190  # C(20,2)
     assert capped < full
 
@@ -69,7 +77,7 @@ def test_substring_dups_found(spark, turns_df, truth_pdf):
     docs = assemble_documents(turns_df).cache()
     got = {
         tuple(sorted([r["a"], r["b"]]))
-        for r in substring_pairs(docs, CFG).collect()
+        for r in substring_pairs(_signed(docs), CFG).collect()
     }
     planted = truth_pdf[truth_pdf["kind"] == "substring_dup"]
     assert len(planted) > 0
@@ -85,7 +93,7 @@ def test_substring_output_is_exactly_bruteforce_rgram_pairs(spark, turns_df):
     docs = assemble_documents(turns_df).cache()
     got = {
         (r["a"], r["b"]): r["n_common_runs"]
-        for r in substring_pairs(docs, CFG, complete=True).collect()
+        for r in substring_pairs(_signed(docs), CFG, complete=True).collect()
     }
     texts = sorted((r["conv_id"], r["doc"]) for r in docs.collect())
     r_w = CFG.substring_w + CFG.winnow_window - 1
