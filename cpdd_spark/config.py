@@ -70,6 +70,3 @@ class DedupConfig:
                 f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
                 f"must equal num_perm ({self.num_perm})"
             )
-
-
-DEFAULT_CONFIG = DedupConfig()

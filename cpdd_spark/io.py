@@ -17,6 +17,7 @@ table scans/writes so Catalyst can prune partitions and push filters.
 from __future__ import annotations
 
 import os
+from contextlib import closing
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +28,33 @@ def _has_iceberg(spark: SparkSession) -> bool:
         return bool(spark.conf.get("spark.sql.catalog.cpdd", None))
     except Exception:
         return False
+
+
+def _is_remote(path: str) -> bool:
+    return "://" in path and not path.startswith("file://")
+
+
+def _part_files(path: str) -> list[str]:
+    """The parquet part files under table directory ``path``, recursively
+    (partition directories included), sorted by path; [] if it is absent.
+
+    A local path is walked with ``os.walk``. A remote warehouse (hdfs://,
+    s3a://, ...) is listed through the JVM Hadoop FileSystem instead: a
+    local walk of it yields nothing, which would read as "empty" and
+    trigger a destructive unpartitioned rewrite of a good table."""
+    if _is_remote(path):
+        spark = SparkSession.getActiveSession()
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(hpath):
+            return []
+        it, found = fs.listFiles(hpath, True), []  # recursive
+        while it.hasNext():
+            found.append(it.next().getPath().toString())
+    else:
+        walk = os.walk(path.removeprefix("file://"))
+        found = [os.path.join(d, f) for d, _, files in walk for f in files]
+    return sorted(f for f in found if f.endswith(".parquet"))
 
 
 class TableIO:
@@ -84,6 +112,37 @@ class TableIO:
         else:
             self._write_parquet(df, name, "append", partition_by)
 
+    def file_rows(self, name: str) -> list[int]:
+        """Row count of each committed part file of table ``name``, in path
+        order, read from the files' metadata: no Spark job over the rows.
+
+        - a local parquet table: each part file's footer through
+          ``pyarrow.parquet.read_metadata`` (the driver already imports
+          pyarrow for every ``mapInPandas``);
+        - a remote parquet table (hdfs://, s3a://, ...): the footers
+          through the JVM Hadoop FileSystem and parquet-hadoop;
+        - Iceberg: ``record_count`` of the table's ``files`` metadata table
+          (a catalog read; this branch cannot run offline, no runtime jar).
+
+        A zero-row table commits one empty part file, whose footer reads 0.
+        """
+        if self.iceberg:
+            files = self.spark.sql(f"SELECT record_count FROM cpdd.{name}.files ORDER BY file_path")
+            return [r[0] for r in files.collect()]
+        path = self.path(name)
+        if not _is_remote(path):
+            import pyarrow.parquet as pq
+
+            return [pq.read_metadata(f).num_rows for f in _part_files(path)]
+        jvm, conf = self.spark._jvm, self.spark._jsc.hadoopConfiguration()
+        parquet = jvm.org.apache.parquet.hadoop
+        rows = []
+        for f in _part_files(path):
+            file = parquet.util.HadoopInputFile.fromPath(jvm.org.apache.hadoop.fs.Path(f), conf)
+            with closing(parquet.ParquetFileReader.open(file)) as reader:
+                rows.append(reader.getRecordCount())
+        return rows
+
     def _write_parquet(
         self, df: DataFrame, name: str, mode: str, partition_by: list[str] | None
     ) -> None:
@@ -92,51 +151,18 @@ class TableIO:
         (Spark does that itself), but a dynamic-partitioned write of ZERO
         rows creates no partition directories, only ``_SUCCESS``, and the
         read-back then fails schema inference. That shape is detected
-        AFTER the write by a filesystem walk (no part file anywhere under
-        the table dir) — an upfront ``isEmpty()`` would re-execute the
-        upstream plan just to prove it non-empty; the walk costs ~zero and
-        only the degenerate shape pays the rewrite. The rewrite commits the
-        empty table unpartitioned: the partition column stays as a data
-        column, so the read-back schema is unchanged."""
+        AFTER the write by listing the part files (none under the table
+        dir) — an upfront ``isEmpty()`` would re-execute the upstream plan
+        just to prove it non-empty; the listing costs ~zero and only the
+        degenerate shape pays the rewrite. The rewrite commits the empty
+        table unpartitioned: the partition column stays as a data column,
+        so the read-back schema is unchanged."""
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.path(name))
-        if partition_by and not self._has_part_files(self.path(name)):
+        if partition_by and not _part_files(self.path(name)):
             df.repartition(1).write.mode("overwrite").parquet(self.path(name))
-
-    @staticmethod
-    def _has_part_files(path: str) -> bool:
-        """True if a committed part file exists under ``path``.
-
-        The walk only works on a LOCAL path; for a remote warehouse
-        (hdfs://, s3a://, ...) ``os.walk`` yields nothing, which would
-        read as "empty" and trigger a destructive unpartitioned rewrite
-        of a perfectly good table. A remote path therefore answers
-        through the JVM Hadoop FileSystem instead — same question, same
-        cost class (one directory listing), no local-FS assumption."""
-        if "://" in path and not path.startswith("file://"):
-            return TableIO._has_part_files_hadoop(path)
-        local = path[len("file://") :] if path.startswith("file://") else path
-        for root, _dirs, files in os.walk(local):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    @staticmethod
-    def _has_part_files_hadoop(path: str) -> bool:
-        spark = SparkSession.getActiveSession()
-        jvm = spark._jvm
-        jsc = spark._jsc
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return False
-        it = fs.listFiles(hpath, True)  # recursive
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
 
     def drop(self, name: str) -> None:
         if self.iceberg:

@@ -37,10 +37,6 @@ from cpdd_spark.jpeg import decode_jpeg, encode_jpeg
 from cpdd_spark.webp import decode_webp, encode_webp
 from cpdd_spark.wav import decode_wav, encode_wav
 
-MEDIA_SCHEMA = (
-    "media_id string, kind string, payload binary, "
-    "meta struct<width:int, height:int, mime:string>"
-)
 FEATURE_SCHEMA = (
     "media_id string, n_bytes long, format string, width int, height int, "
     "channels int, features array<float>, entropy double"

@@ -19,9 +19,11 @@ the only thing that differs between callers:
   no-clobber semantics (``should_overwrite``, copy.c:73-96) — and a killed
   run leaves no commit for the in-flight stage, so the rerun recomputes
   exactly that stage and everything downstream (``cleanup_incomplete_file``,
-  copy.c:28-67). Per-partition lineage rows and per-stage metrics
-  generalize ``stats_t`` (include/cpdd.h:61-69): one lineage append over
-  the committed table per stage, whose observed row sum is the metrics row;
+  copy.c:28-67). Lineage rows (one per committed part file, its footer
+  row count) and per-stage metrics generalize ``stats_t``
+  (include/cpdd.h:61-69): collected on the driver as each stage commits,
+  with no Spark job, and written once per run, one lineage and one
+  metrics append, even when the run raises;
 - queries and benchmark scripts use :func:`session_cache`, which persists
   each intermediate and releases all of them once the caller's result is
   materialized.
@@ -33,12 +35,13 @@ reference set once for all sources, copy.c:465-483).
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cpdd_spark.assemble import assemble_documents
@@ -173,58 +176,57 @@ class DedupPipeline:
         self.run_id = uuid.uuid4().hex[:12]
         self.stage_log: list[tuple[str, str]] = []  # (stage, 'computed'|'resumed')
         self._dirty = False  # an upstream stage recomputed -> downstream stale
+        # (stage, t_start, t_end, part-file row counts) per computed stage
+        self._committed: list[tuple[str, float, float, list[int]]] = []
 
     # ---- bookkeeping ----------------------------------------------------
 
-    def _record(self, stage: str, table: DataFrame, t0: float) -> None:
-        """Append lineage (per-partition row counts of the committed
-        ``table``) and metrics (the stage total) — stats_t generalized
-        (include/cpdd.h:61-69, increments copy.c:267-333). The lineage
-        append is the only action over the stage table: an
-        :class:`Observation` on it sums the rows, so the metrics row needs
-        no second aggregate and equals the lineage sum by construction.
+    def _record(self) -> None:
+        """Append this run's lineage and metrics — ``stats_t`` generalized
+        (include/cpdd.h:61-69, increments copy.c:267-333) — with one
+        lineage append and one metrics append, and no other Spark job.
+
+        ``run`` calls this once, in a ``finally``, over every stage the run
+        committed (``_stage`` collects them on the driver), so a run that
+        raises still records the stages it committed; a fully resumed run
+        writes nothing. A SIGKILLed run records no metrics, like the
+        reference, whose ``print_statistics`` runs only at exit
+        (cpdd.c:60 -> copy.c:172-191).
+
+        A lineage row is one committed part file: ``partition_id`` is its
+        ordinal in path order and ``rows`` its footer row count; the
+        metrics ``rows`` is the stage's footer sum. The rows travel as ONE
+        JSON string literal, parsed and exploded in the JVM over
+        ``range(1)``: no per-row literal expressions (a py4j round trip
+        each) and no Python RDD (``createDataFrame`` over a list would
+        start a second Python worker pool to unpickle it).
         """
-        total = Observation()
-        lineage = (
-            table.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("stage", F.lit(stage))
-            .select("run_id", "stage", "partition_id", "rows")
-            .observe(total, F.sum("rows").alias("rows"))
-        )
+        committed, self._committed = self._committed, []
+        if not committed:
+            return
+        lineage = [
+            {"stage": stage, "partition_id": i, "rows": n}
+            for stage, _t0, _t1, rows in committed
+            for i, n in enumerate(rows)
+        ]
+        metrics = [
+            {"stage": stage, "rows": sum(rows), "t_start": t0, "t_end": t1,
+             "seconds": t1 - t0}
+            for stage, t0, t1, rows in committed
+        ]
         # run_id partitioning: appends only ever CREATE a new partition
         # directory (never touch prior runs' files), and reading one run's
         # rows partition-prunes every other run
-        self.io.append(lineage, "lineage", partition_by=["run_id"])
-        rows = total.get["rows"] or 0
-        t1 = time.time()
-        # literals over one range row: no Python-side rows, no worker
-        stage_row = self.spark.range(1).select(
-            F.lit(self.run_id).alias("run_id"), F.lit(stage).alias("stage")
-        )
-        if rows == 0:
-            # no rows means no partition group above: one row of 0 keeps
-            # the stage in the lineage
-            self.io.append(
-                stage_row.select(
-                    "run_id",
-                    "stage",
-                    F.lit(0).alias("partition_id"),
-                    F.lit(0).cast("long").alias("rows"),
-                ),
-                "lineage",
-                partition_by=["run_id"],
+        for table, rows, fields in (
+            ("lineage", lineage, "stage:string,partition_id:int,rows:bigint"),
+            ("metrics", metrics,
+             "stage:string,rows:bigint,t_start:double,t_end:double,seconds:double"),
+        ):
+            frame = self.spark.range(1).select(
+                F.lit(self.run_id).alias("run_id"),
+                F.inline(F.from_json(F.lit(json.dumps(rows)), f"array<struct<{fields}>>")),
             )
-        metrics = stage_row.select(
-            "run_id",
-            "stage",
-            F.lit(rows).cast("long").alias("rows"),
-            F.lit(t0).alias("t_start"),
-            F.lit(t1).alias("t_end"),
-            F.lit(t1 - t0).alias("seconds"),
-        )
-        self.io.append(metrics, "metrics", partition_by=["run_id"])
+            self.io.append(frame, table, partition_by=["run_id"])
 
     def _stage(
         self,
@@ -236,17 +238,20 @@ class DedupPipeline:
         """No-clobber stage execution: existing committed output is reused
         (should_overwrite semantics, copy.c:73-96). Once any stage recomputes
         in this run, every DOWNSTREAM stage recomputes too — a committed
-        table derived from a stale upstream must not be trusted."""
+        table derived from a stale upstream must not be trusted.
+
+        A computed stage's bookkeeping is collected on the driver: its
+        start and end times and the footer row count of each committed
+        part file, for :meth:`_record`."""
         if resume and not self._dirty and self.io.exists(name):
             self.stage_log.append((name, "resumed"))
             return self.io.read(name)
         self._dirty = True
         t0 = time.time()
         self.io.write(compute(), name, partition_by=partition_by)
-        table = self.io.read(name)
-        self._record(name, table, t0)
+        self._committed.append((name, t0, time.time(), self.io.file_rows(name)))
         self.stage_log.append((name, "computed"))
-        return table
+        return self.io.read(name)
 
     # ---- the pipeline ----------------------------------------------------
 
@@ -280,14 +285,17 @@ class DedupPipeline:
                 )
             return self._stage(name, compute, resume)
 
-        docs = self._stage("documents", lambda: assemble_documents(turns), resume)
-        clusters = cascade(docs, cfg, store, self.enable_substring)
-        if link_mode == "materialize":
-            self._stage(
-                "clusters_docs",
-                lambda: materialize_clusters(clusters, docs),
-                resume,
-            )
+        try:
+            docs = self._stage("documents", lambda: assemble_documents(turns), resume)
+            clusters = cascade(docs, cfg, store, self.enable_substring)
+            if link_mode == "materialize":
+                self._stage(
+                    "clusters_docs",
+                    lambda: materialize_clusters(clusters, docs),
+                    resume,
+                )
+        finally:
+            self._record()
         return clusters
 
     # ---- reporting --------------------------------------------------------

@@ -148,28 +148,40 @@ def _distinct(h: np.ndarray, offsets: np.ndarray) -> list[np.ndarray]:
     ]
 
 
-def _winnow(h: np.ndarray, k: int) -> np.ndarray:
-    """Positions of winnowing-selected fingerprints of one doc's window-hash
-    sequence ``h`` with window size ``k`` (min per window, rightmost tie)."""
-    n = len(h)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    if n <= k:
-        return np.array([n - 1 - int(np.argmin(h[::-1]))], dtype=np.int64)
-    win = np.lib.stride_tricks.sliding_window_view(h, k)
-    # rightmost min: argmin over the reversed window
-    rev_arg = np.argmin(win[:, ::-1], axis=1)
-    pos = np.arange(n - k + 1) + (k - 1 - rev_arg)
-    return np.unique(pos)
-
-
 def _winnowed(h: np.ndarray, offsets: np.ndarray, k: int) -> list[np.ndarray]:
-    """Each doc's distinct winnow-selected window hashes, sorted, as int64."""
-    out = []
-    for i in range(len(offsets) - 1):
-        hw = h[offsets[i] : offsets[i + 1]]
-        out.append(np.unique(hw[_winnow(hw, k)]).view(np.int64))
-    return out
+    """Each doc's distinct winnow-selected window hashes, sorted, as int64.
+
+    Winnowing selects the minimum of every k consecutive window hashes
+    (rightmost on ties, which selects the same value), or a doc's minimum
+    when it has fewer than k. Only the selected values are emitted, so the
+    selection is ONE flat pass over the batch: a sliding minimum over the
+    concatenated hashes, each doc followed by k - 1 maximal hashes so no
+    window reaches into the next doc, read at every full window's start
+    and at each doc's first position, then one sort of (doc, hash) keys
+    for each doc's distinct values."""
+    n_docs = len(offsets) - 1
+    doc = np.repeat(np.arange(n_docs), np.diff(offsets))
+    pos = np.arange(len(h))
+    padded = pos + doc * (k - 1)
+    m = np.full(len(h) + n_docs * (k - 1), np.iinfo(np.uint64).max, dtype=np.uint64)
+    m[padded] = h
+    # m[g] = min(m[g : g + k]): the span doubles up to the largest power
+    # of two <= k, then two overlapping spans cover k
+    span = 1
+    while 2 * span <= k:
+        m = np.minimum(m[:-span], m[span:])
+        span *= 2
+    m = np.minimum(m[: len(m) - (k - span)], m[k - span :])[padded]
+    keep = (pos + k <= offsets[doc + 1]) | (pos == offsets[doc])
+    # a run of equal minima in one doc is one value: keep its first
+    keep[1:] &= (m[1:] != m[:-1]) | (doc[1:] != doc[:-1])
+    # distinct (doc, hash) pairs, sorted, as ONE int64 key: doc * U + the
+    # hash's rank among the U distinct hashes (about 2x faster than np.lexsort)
+    hashes, rank = np.unique(m[keep], return_inverse=True)
+    key = np.unique(doc[keep] * len(hashes) + rank)
+    bounds = np.searchsorted(key, np.arange(n_docs + 1) * len(hashes))
+    fps = hashes.view(np.int64)[key % len(hashes)]
+    return [fps[bounds[i] : bounds[i + 1]] for i in range(n_docs)]
 
 
 def _minhash(h: np.ndarray, offsets: np.ndarray, consts: np.ndarray) -> np.ndarray:

@@ -99,6 +99,40 @@ def test_parquet_write_zero_partitions_reads_back(spark, tmp_path):
         assert back.count() == 0, name
 
 
+def test_file_rows_reads_part_file_footers(spark, tmp_path, monkeypatch):
+    """``file_rows`` is each committed part file's row count, in path
+    order, partition directories included; a zero-row table is one empty
+    part file. The Hadoop FileSystem branch (remote warehouses), driven
+    here over the local filesystem, reads the same counts."""
+    import glob
+
+    import cpdd_spark.io as io_mod
+
+    io = TableIO(spark, str(tmp_path))
+    df = spark.range(100).select((F.col("id") % 3).alias("k"), "id").repartition(4)
+    io.write(df, "parted", partition_by=["k"])
+    io.write(df.filter("id < 0"), "empty")
+    files = sorted(glob.glob(str(tmp_path / "parted" / "**" / "*.parquet"), recursive=True))
+    rows = io.file_rows("parted")
+    assert rows == [spark.read.parquet(f).count() for f in files]
+    assert len(rows) > 3 and sum(rows) == 100
+    assert io.file_rows("empty") == [0]
+
+    monkeypatch.setattr(io_mod, "_is_remote", lambda path: True)
+    assert io.file_rows("parted") == rows
+    assert io.file_rows("empty") == [0]
+    assert io_mod._part_files(str(tmp_path / "absent")) == []
+
+
+def test_iceberg_file_rows_reads_files_metadata_table():
+    io, spark = _iceberg_io()
+    spark.sql.return_value.collect.return_value = [(5,), (0,)]
+    assert io.file_rows("clusters") == [5, 0]
+    spark.sql.assert_called_once_with(
+        "SELECT record_count FROM cpdd.clusters.files ORDER BY file_path"
+    )
+
+
 # ---- R14: metadata preservation -------------------------------------------
 
 def test_assemble_keep_metadata_roundtrip(spark, turns_df):

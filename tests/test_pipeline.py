@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 from cpdd_spark.config import DedupConfig
@@ -60,8 +63,6 @@ def test_resume_skips_completed_stages(spark, turns_df, workdir):
 def test_resume_recomputes_killed_stage(spark, turns_df, workdir):
     """Simulate a crash mid-stage: drop one stage's commit marker; the rerun
     recomputes exactly that stage (+ downstream), reuses the rest."""
-    import os
-
     p1 = DedupPipeline(spark, workdir, CFG)
     c1 = {(r["conv_id"], r["cluster_id"]) for r in p1.run(turns_df).collect()}
 
@@ -79,7 +80,22 @@ def test_resume_recomputes_killed_stage(spark, turns_df, workdir):
     assert c1 == c2
 
 
+def _part_files(table_dir: str) -> list[str]:
+    """A table's parquet part files, partition directories included, in
+    path order."""
+    return sorted(glob.glob(os.path.join(table_dir, "**", "*.parquet"), recursive=True))
+
+
+def _run_rows(spark, workdir: str, table: str, run_id: str):
+    """One run's rows of the metrics or lineage table, read from its
+    ``run_id`` directory."""
+    return spark.read.parquet(os.path.join(workdir, table, f"run_id={run_id}")).collect()
+
+
 def test_metrics_and_lineage_written(spark, turns_df, workdir):
+    """One lineage row per committed part file, in path order, holding that
+    file's row count; the metrics row of a stage is their sum and the
+    stage table's row count."""
     pipe = DedupPipeline(spark, workdir, CFG)
     pipe.run(turns_df)
     metrics = pipe.io.read("metrics").collect()
@@ -87,20 +103,25 @@ def test_metrics_and_lineage_written(spark, turns_df, workdir):
     assert {"documents", "exact_clusters", "signatures", "verified_pairs",
             "substring_pairs", "clusters"} <= stages
     assert all(r["seconds"] >= 0 for r in metrics)
-    lineage = pipe.io.read("lineage")
-    assert lineage.filter("stage = 'documents'").count() >= 1
-    # lineage row counts sum to stage totals
-    by_stage = {
-        r["stage"]: r["total"]
-        for r in lineage.groupBy("stage").sum("rows").withColumnRenamed("sum(rows)", "total").collect()
-    }
-    for r in metrics:
-        assert by_stage[r["stage"]] == r["rows"]
+    computed = [name for name, how in pipe.stage_log if how == "computed"]
+    assert sorted(stages) == sorted(computed) and len(metrics) == len(computed)
+    lineage = {}
+    for r in pipe.io.read("lineage").collect():
+        lineage.setdefault(r["stage"], []).append((r["partition_id"], r["rows"]))
+    by_metrics = {r["stage"]: r["rows"] for r in metrics}
+    for stage in computed:
+        model = [spark.read.parquet(f).count() for f in _part_files(pipe.io.path(stage))]
+        got = sorted(lineage[stage])
+        assert [pid for pid, _ in got] == list(range(len(model))), stage
+        assert [n for _, n in got] == model, stage
+        assert sum(model) == by_metrics[stage] == pipe.io.read(stage).count(), stage
 
 
-def test_record_jobs_per_stage(spark, turns_df, workdir, count_jobs, monkeypatch):
-    """Stage bookkeeping is one lineage append (aggregate + write) and one
-    metrics-row write: at most 3 Spark jobs per computed stage."""
+def test_record_jobs_per_run(spark, turns_df, workdir, count_jobs, monkeypatch):
+    """Stage bookkeeping is collected on the driver and written once per
+    run: one ``_record`` call of at most 2 Spark jobs (the lineage append
+    and the metrics append). A fully resumed run issues none and writes
+    no rows."""
     record = DedupPipeline._record
     jobs = []
 
@@ -108,17 +129,57 @@ def test_record_jobs_per_stage(spark, turns_df, workdir, count_jobs, monkeypatch
         jobs.append(count_jobs(lambda: record(self, *args)))
 
     monkeypatch.setattr(DedupPipeline, "_record", counted)
-    pipe = DedupPipeline(spark, workdir, CFG)
-    pipe.run(turns_df)
-    assert len(jobs) == len(pipe.stage_log)
-    assert max(jobs) <= 3, jobs
+    first = DedupPipeline(spark, workdir, CFG)
+    first.run(turns_df)
+    assert len(jobs) == 1 and jobs[0] <= 2, jobs
+
+    resumed = DedupPipeline(spark, workdir, CFG)
+    resumed.run(turns_df)
+    assert all(how == "resumed" for _, how in resumed.stage_log), resumed.stage_log
+    assert jobs[1:] == [0], jobs
+    for table in ("metrics", "lineage"):
+        runs = sorted(os.listdir(os.path.join(workdir, table)))
+        assert [r for r in runs if r.startswith("run_id=")] == [f"run_id={first.run_id}"]
+
+
+def test_failed_run_records_committed_stages(spark, turns_df, workdir, monkeypatch):
+    """A run that raises still records every stage it committed, and the
+    resumed rerun records just the stages it computes, under its own
+    run id."""
+    import cpdd_spark.pipeline as pl
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("substring tier failed")
+
+    monkeypatch.setattr(pl, "substring_pairs", failing)
+    p1 = DedupPipeline(spark, workdir, CFG)
+    with pytest.raises(RuntimeError, match="substring tier failed"):
+        p1.run(turns_df)
+    committed = ["documents", "exact_clusters", "signatures", "verified_pairs"]
+    counts = {name: p1.io.read(name).count() for name in committed}
+
+    def recorded(run_id):
+        metrics = {r["stage"]: r["rows"] for r in _run_rows(spark, workdir, "metrics", run_id)}
+        lineage = {}
+        for r in _run_rows(spark, workdir, "lineage", run_id):
+            lineage[r["stage"]] = lineage.get(r["stage"], 0) + r["rows"]
+        return metrics, lineage
+
+    assert recorded(p1.run_id) == (counts, counts)
+
+    monkeypatch.undo()
+    p2 = DedupPipeline(spark, workdir, CFG)
+    p2.run(turns_df)
+    rerun = ["substring_pairs", "clusters"]
+    assert [name for name, how in p2.stage_log if how == "computed"] == rerun
+    counts2 = {name: p2.io.read(name).count() for name in rerun}
+    assert recorded(p2.run_id) == (counts2, counts2)
+    assert recorded(p1.run_id) == (counts, counts)
 
 
 def test_pipeline_partitioned_output_layout(spark, turns_df, workdir):
     """R15: clusters land hash-bucketed on conv_id, metrics/lineage
     partitioned by run_id — and resume still sees the committed stages."""
-    import os
-
     pipe = DedupPipeline(spark, workdir, CFG)
     pipe.run(turns_df)
 
@@ -163,7 +224,6 @@ def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir, missing)
       no substring_pairs table) resumed with substring on fails in the
       substring stage.
     """
-    import os
     import shutil
 
     clean = DedupPipeline(spark, workdir + "_clean", CFG).run(turns_df)

@@ -279,3 +279,37 @@ def test_text_kernel_is_the_cascade_s_one_python_pass(spark, turns_df):
         "substring_pairs": 0,
         "clusters": 0,
     }, counts
+
+
+def test_record_builds_its_rows_in_the_jvm(spark, tmp_path, monkeypatch):
+    """The lineage and metrics frames ``DedupPipeline._record`` appends are
+    built in the JVM: no Python RDD scan (``createDataFrame`` over a list
+    pickles the rows through one and starts a second Python worker pool)
+    and no Python evaluation node."""
+    from cpdd_spark.config import DedupConfig
+    from cpdd_spark.io import TableIO
+    from cpdd_spark.pipeline import DedupPipeline
+
+    plans = {}
+    append = TableIO.append
+
+    def capture(self, df, name, partition_by=None):
+        qe = df._jdf.queryExecution()
+        plans[name] = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        append(self, df, name, partition_by)
+
+    monkeypatch.setattr(TableIO, "append", capture)
+    pipe = DedupPipeline(spark, str(tmp_path), DedupConfig())
+    pipe._committed = [("documents", 1.0, 2.5, [3, 0, 4]), ("clusters", 2.5, 4.0, [7])]
+    pipe._record()
+    assert sorted(plans) == ["lineage", "metrics"]
+    for name, plan in plans.items():
+        for node in ("ExistingRDD", "LogicalRDD", "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+            assert node not in plan, (name, node)
+    lineage = pipe.io.read("lineage").collect()
+    assert sorted((r["stage"], r["partition_id"], r["rows"]) for r in lineage) == [
+        ("clusters", 0, 7), ("documents", 0, 3), ("documents", 1, 0), ("documents", 2, 4)
+    ]
+    metrics = {r["stage"]: (r["rows"], r["t_start"], r["t_end"], r["seconds"])
+               for r in pipe.io.read("metrics").collect()}
+    assert metrics == {"documents": (7, 1.0, 2.5, 1.5), "clusters": (7, 2.5, 4.0, 1.5)}

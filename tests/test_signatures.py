@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -12,6 +14,7 @@ from cpdd_spark.signatures import (
     _minhash,
     _perm_params,
     _simhash,
+    _winnowed,
     compute_signatures,
     exact_jaccard_sets,
     window_hashes,
@@ -72,6 +75,43 @@ def test_window_hashes_match_python_model():
         h, offs = got[w]
         for i, doc in enumerate(docs):
             assert [int(x) for x in h[offs[i] : offs[i + 1]]] == _model_window_hashes(doc, w)
+
+
+def _winnow(h: np.ndarray, k: int) -> np.ndarray:
+    """Model of winnowing one doc's window-hash sequence ``h`` with window
+    size ``k``: the positions of the minimum of every k consecutive
+    hashes, rightmost on ties; the doc's rightmost minimum when it has at
+    most k."""
+    n = len(h)
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    if n <= k:
+        return np.array([n - 1 - int(np.argmin(h[::-1]))], dtype=np.int64)
+    win = np.lib.stride_tricks.sliding_window_view(h, k)
+    # rightmost min: argmin over the reversed window
+    rev_arg = np.argmin(win[:, ::-1], axis=1)
+    pos = np.arange(n - k + 1) + (k - 1 - rev_arg)
+    return np.unique(pos)
+
+
+def test_winnowed_matches_python_model():
+    """The flat batch winnowing equals the per-doc model: empty, short,
+    exactly-k and long docs side by side in one batch (a fixed mix and
+    random ones), with many tied hashes, for several window sizes."""
+    rng = np.random.default_rng(5)
+    batches = [np.array([0, 1, 3, 7, 8, 9, 0, 16, 17, 40, 2, 0])]
+    batches += [rng.integers(0, 12, 15) for _ in range(10)]
+    for counts, k, alphabet in itertools.product(batches, (1, 2, 3, 5, 8), (3, 1 << 62)):
+        offsets = np.zeros(len(counts) + 1, dtype=np.int64)
+        np.cumsum(counts, out=offsets[1:])
+        h = rng.integers(0, alphabet, offsets[-1]).astype(np.uint64)
+        got = _winnowed(h, offsets, k)
+        assert len(got) == len(counts)
+        for i, fps in enumerate(got):
+            hw = h[offsets[i] : offsets[i + 1]]
+            assert fps.dtype == np.int64
+            assert list(fps) == list(np.unique(hw[_winnow(hw, k)]).view(np.int64)), (counts, k, i)
+    assert _winnowed(np.empty(0, dtype=np.uint64), np.zeros(1, dtype=np.int64), 8) == []
 
 
 def test_identical_docs_identical_signatures():
@@ -166,8 +206,6 @@ def test_signature_columns_independent_of_request(spark, turns_df):
 def test_substring_columns_match_python_model(spark):
     """``fps`` holds each doc's distinct winnow-selected W-window hashes and
     ``rset`` its distinct R-window hashes (R = W + k - 1), as int64."""
-    from cpdd_spark.signatures import _winnow
-
     rng = np.random.default_rng(4)
     texts = [" ".join(f"t{x}" for x in rng.integers(0, 40, n)) for n in (0, 12, 30, 36, 37, 80, 200)]
     docs = spark.createDataFrame(

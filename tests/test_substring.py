@@ -6,7 +6,7 @@ import numpy as np
 
 from cpdd_spark.assemble import assemble_documents
 from cpdd_spark.config import DedupConfig
-from cpdd_spark.signatures import _winnow, compute_signatures
+from cpdd_spark.signatures import _winnowed, compute_signatures
 from cpdd_spark.substring import substring_pairs
 
 CFG = DedupConfig()
@@ -18,22 +18,27 @@ def _signed(docs, cfg=CFG):
     return compute_signatures(docs, cfg, ("fps", "rset")).localCheckpoint(eager=True)
 
 
+def _fingerprints(h: np.ndarray, k: int) -> set[int]:
+    """The winnow-selected hashes of one doc's window-hash sequence."""
+    (fps,) = _winnowed(h, np.array([0, len(h)]), k)
+    return set(fps.view(np.uint64).tolist())
+
+
 def test_winnow_guarantee_property():
-    """Any k consecutive positions contain at least one selected position
+    """Any k consecutive windows contain at least one selected fingerprint
     (the winnowing coverage invariant)."""
     rng = np.random.default_rng(0)
     h = rng.integers(0, 2**63, size=500, dtype=np.uint64)
     k = CFG.winnow_window
-    sel = set(_winnow(h, k).tolist())
+    sel = _fingerprints(h, k)
     for start in range(0, len(h) - k + 1):
-        assert any(p in sel for p in range(start, start + k)), start
+        assert any(int(x) in sel for x in h[start : start + k]), start
 
 
 def test_winnow_short_input():
     h = np.array([5, 3, 9], dtype=np.uint64)
-    sel = _winnow(h, 8)
-    assert sel.tolist() == [1]  # global min position
-    assert _winnow(np.empty(0, dtype=np.uint64), 8).size == 0
+    assert _fingerprints(h, 8) == {3}  # the global minimum
+    assert _fingerprints(np.empty(0, dtype=np.uint64), 8) == set()
 
 
 def test_winnow_deterministic_alignment():
@@ -46,9 +51,7 @@ def test_winnow_deterministic_alignment():
     b = np.concatenate([rng.integers(0, 2**63, 7, dtype=np.uint64), shared,
                         rng.integers(0, 2**63, 200, dtype=np.uint64)])
     k = CFG.winnow_window
-    fa = set(a[_winnow(a, k)].tolist())
-    fb = set(b[_winnow(b, k)].tolist())
-    shared_sel = fa & fb & set(shared.tolist())
+    shared_sel = _fingerprints(a, k) & _fingerprints(b, k) & set(shared.tolist())
     assert shared_sel, "no common fingerprint selected from the shared run"
 
 
