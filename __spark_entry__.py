@@ -52,7 +52,7 @@ from cpdd_spark.pipeline import (
 )
 from cpdd_spark.rangejoin import interval_join
 from cpdd_spark.sampling import hash_bucket, hash_bucket_sql, hash_split, stratified_sample
-from cpdd_spark.session import ship_package
+from cpdd_spark.session import ship_package, spread
 from cpdd_spark.streaming import IncrementalDedup
 from cpdd_spark.signatures import compute_signatures
 from cpdd_spark.similarity import (
@@ -67,8 +67,6 @@ from cpdd_spark.textfuncs import (
     fingerprint,
     lang_id,
     punct_count,
-    quality_score,
-    stopword_count,
     token_count,
     token_frequencies,
     ws_tokens,
@@ -97,9 +95,7 @@ def _variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows from a single scan, a single split, a single shuffle. The
     documents file is a single row group, so the repartition is the only
     way the downstream construction parallelizes."""
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_read(spark, sf_dir, "documents"))
     toks = F.col("__toks")
     did = F.col("doc_id").cast("string")
     variant_arr = F.array_compact(
@@ -420,9 +416,7 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish regex token counting (model-free corpus size estimator)."""
     from cpdd_spark.textfuncs import bpe_token_count
 
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_read(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", bpe_token_count("text").alias("n_bpe_tokens")
     )
@@ -437,7 +431,7 @@ def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     # spread: the documents file is a single row group -> one scan task;
     # without this the whole tokenize+count projection runs on one core
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(docs)
     base = docs.select(
         "doc_id",
         "text",
@@ -1167,8 +1161,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE divisions of exact integer counts, so the doubles hash-match
     cross-engine."""
     # vectorized Arrow kernel (one tokenization, integer-code distinct
-    # counts) — bit-identical to the ngram_repetition column form, which
-    # stays as the parity reference (tests/test_extras.py pins equality)
+    # counts)
     return textfuncs.repetition_profile(
         _read(spark, sf_dir, "documents"), "doc_id", "text"
     )
@@ -1185,9 +1178,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces."""
     # spread: single-row-group scan -> the corpus-side gram explode and
     # the probe-side gram union otherwise both run on one core
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_read(spark, sf_dir, "documents"))
     probes = docs.filter(F.col("doc_id") % 17 == 0)
     return decontaminate(docs, probes, "doc_id", "text", n=5, min_overlap=1)
 

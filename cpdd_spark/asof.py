@@ -39,7 +39,6 @@ def asof_join(
     on: str,
     by: str | None = None,
     tolerance: int | None = None,
-    right_prefix: str = "right_",
 ) -> DataFrame:
     """Backward-inclusive as-of join: every ``left`` row gains the payload
     of the LATEST ``right`` row with ``right.on <= left.on`` (and equal
@@ -51,8 +50,8 @@ def asof_join(
 
     ``on`` must be numerically ordered (epoch long, numeric); ``tolerance``
     (same unit as ``on``) null-outs matches older than ``left.on -
-    tolerance``. Right payload columns are prefixed with ``right_prefix``;
-    a ``{right_prefix}{on}`` column carries the matched row's own
+    tolerance``. Right payload columns are prefixed with ``right_``;
+    a ``right_{on}`` column carries the matched row's own
     timestamp. Ties inside ``right`` on ``(by, on)`` resolve to the row
     LAST in the window order — pre-aggregate the right side when tie
     determinism matters (the oracle query does).
@@ -113,6 +112,6 @@ def asof_join(
         )
     return out.select(
         "*",
-        *[F.col("_asof")[c].alias(f"{right_prefix}{c}") for c in payload_cols],
-        F.col("_asof")[on].alias(f"{right_prefix}{on}"),
+        *[F.col("_asof")[c].alias(f"right_{c}") for c in payload_cols],
+        F.col("_asof")[on].alias(f"right_{on}"),
     ).drop("_asof")

@@ -97,6 +97,9 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 DRIVER_CC_MAX_BYTES = 64 << 20
 _DRIVER_CC_CAP_BYTES = 1 << 30
 _PY_STR_OVERHEAD = 100  # bytes per edge beyond the raw id characters
+# cap on the distributed min-label + pointer-jump rounds, which converge
+# in O(log diameter) rounds
+MAX_ROUNDS = 25
 
 _MEM_UNITS = {"k": 10, "m": 20, "g": 30, "t": 40}
 
@@ -117,8 +120,6 @@ def _driver_cc_bound(spark) -> int:
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iter: int = 25,
-    n_partitions: int | None = None,
     strategy: str = "auto",
     stats: dict | None = None,
 ) -> DataFrame:
@@ -132,12 +133,6 @@ def connected_components(
 
     Vertices absent from ``edges`` (singletons) keep themselves as
     cluster_id when ``vertices`` is supplied.
-
-    ``n_partitions`` sizes the per-round frames: the edge list is usually
-    orders of magnitude smaller than the corpus, and every CC round
-    re-schedules its map tasks, so inheriting the corpus-sized shuffle
-    width multiplies pure task-launch latency across rounds. Pass a small
-    value (or let the default shuffle width stand for huge edge lists).
 
     ``strategy``: 'auto' (driver union-find when the edge list is small,
     distributed rounds otherwise), 'distributed', or 'driver'.
@@ -205,10 +200,8 @@ def connected_components(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if n_partitions:
-        str_sym = str_sym.repartition(n_partitions, "src")
-    str_sym = str_sym.localCheckpoint(eager=True)
     if strategy != "distributed":
         edges.unpersist()  # sym is checkpointed; the sized edge cache is done
 
@@ -261,7 +254,7 @@ def connected_components(
     from pyspark.sql import Observation
 
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         rounds += 1
         # (1) one-hop: adopt the min label in the closed neighborhood
         nbr_min = (

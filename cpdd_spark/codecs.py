@@ -10,8 +10,8 @@ form (bottom-up rows, 4-byte stride padding). Together they make
 JPEG and the video containers remain documented stubs (entropy coding is
 a library-scale dependency, not a ~200-line one).
 
-Encoders exist so fixtures and resize output round-trip through genuine
-files: ``encode_png`` writes filter-0 scanlines (always decodable by any
+Encoders exist so fixtures round-trip through genuine files:
+``encode_png`` writes filter-0 scanlines (always decodable by any
 conformant reader), ``encode_bmp`` writes the same 24-bit form the
 decoder reads. Both decoders reject what they do not implement with a
 clear error instead of wrong pixels.
@@ -267,9 +267,9 @@ def _chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
-def encode_png(arr: np.ndarray, level: int = 6) -> bytes:
+def encode_png(arr: np.ndarray) -> bytes:
     """``(H, W)`` or ``(H, W, {1,2,3,4})`` uint8 -> PNG bytes (filter-0
-    scanlines; deterministic for a given array and zlib level)."""
+    scanlines, zlib level 6; deterministic for a given array)."""
     a = np.asarray(arr, dtype=np.uint8)
     if a.ndim == 2:
         a = a[:, :, None]
@@ -284,7 +284,7 @@ def encode_png(arr: np.ndarray, level: int = 6) -> bytes:
     rows = np.concatenate(
         [np.zeros((h, 1), dtype=np.uint8), a.reshape(h, w * ch)], axis=1
     )
-    idat = zlib.compress(rows.tobytes(), level)
+    idat = zlib.compress(rows.tobytes(), 6)
     return (
         PNG_SIGNATURE
         + _chunk(b"IHDR", ihdr)
@@ -404,18 +404,3 @@ def encode_pnm(arr: np.ndarray) -> bytes:
         raise CodecError("zero-dimension image")
     magic = b"P5" if ch == 1 else b"P6"
     return magic + f"\n{w} {h}\n255\n".encode("ascii") + a.tobytes()
-
-
-def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample of an ``(H, W[, C])`` array — the
-    deterministic resize kernel behind resize_media (bilinear is a
-    quality choice, not a structural one)."""
-    a = np.asarray(arr)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w = a.shape[:2]
-    if h == 0 or w == 0 or width <= 0 or height <= 0:
-        raise CodecError("cannot resize zero-dimension image")
-    yi = (np.arange(height) * h) // height
-    xi = (np.arange(width) * w) // width
-    return np.ascontiguousarray(a[yi][:, xi])

@@ -22,6 +22,16 @@ from contextlib import closing
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# The run bookkeeping tables, partitioned by ``run_id``. Reads apply these
+# schemas: inferred from ``run_id=<id>`` directory names, an id such as
+# ``1234e5678901`` reads back as the double ``inf`` and ``000000000042``
+# as the long 42.
+LINEAGE_SCHEMA = "stage string, partition_id int, rows bigint, run_id string"
+METRICS_SCHEMA = (
+    "stage string, rows bigint, t_start double, t_end double, seconds double, run_id string"
+)
+_DECLARED = {"lineage": LINEAGE_SCHEMA, "metrics": METRICS_SCHEMA}
+
 
 def _has_iceberg(spark: SparkSession) -> bool:
     try:
@@ -83,6 +93,8 @@ class TableIO:
     def read(self, name: str) -> DataFrame:
         if self.iceberg:
             return self.spark.read.format("iceberg").load(f"cpdd.{name}")
+        if name in _DECLARED:
+            return self.spark.read.schema(_DECLARED[name]).parquet(self.path(name))
         return self.spark.read.parquet(self.path(name))
 
     def write(

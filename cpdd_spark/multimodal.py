@@ -7,10 +7,10 @@ pure-Python zlib inflate + scanline unfilter / BI_RGB / P5-P6 read) and
 baseline JPEG (:mod:`cpdd_spark.jpeg` — from-spec Huffman + IDCT),
 GIF (:mod:`cpdd_spark.gif` — LZW + palette + interlace), and lossless
 WebP (:mod:`cpdd_spark.webp` — VP8L prefix codes + transforms): features
-are histograms of actual decoded pixels, resize re-encodes actual
-resampled rasters. Video containers (and lossy-VP8 WebP) remain
-documented stubs and raise ``NotImplementedError``/``CodecError`` so a
-mislabeled blob fails loudly instead of producing wrong pixels.
+are histograms of actual decoded pixels. Video containers (and lossy-VP8
+WebP) remain documented stubs and raise ``NotImplementedError`` /
+``CodecError`` so a mislabeled blob fails loudly instead of producing
+wrong pixels.
 """
 
 from __future__ import annotations
@@ -30,10 +30,10 @@ from cpdd_spark.codecs import (
     encode_bmp,
     encode_png,
     encode_pnm,
-    resize_nearest,
 )
 from cpdd_spark.gif import decode_gif, encode_gif
 from cpdd_spark.jpeg import decode_jpeg, encode_jpeg
+from cpdd_spark.session import spread
 from cpdd_spark.webp import decode_webp, encode_webp
 from cpdd_spark.wav import decode_wav, encode_wav
 
@@ -67,56 +67,6 @@ MAGIC_PREFIXES = [
     ("5035", "pgm"),  # netpbm binary grayscale
     ("5036", "ppm"),  # netpbm binary RGB
 ]
-
-
-def _spread_for_python_kernel(df: DataFrame) -> DataFrame:
-    """Repartition a Python-kernel input to cluster parallelism.
-
-    The media tiers are the engine's only interpreted-Python hot path; a
-    single small parquet file scans as ONE partition, which would run the
-    whole Arrow kernel chain (encode -> decode -> features) on one core —
-    measured 1/32 utilization on the sf0.1 bench before this (the r6
-    multimodal_features 0.8 s -> 3.1 s "regression" was this shape paying
-    for the new JPEG/GIF rotation serially). The shuffle moves only the
-    tiny (id, text) projection; at cluster scale the same call spreads
-    object-storage payload batches across executors."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism)
-
-
-def format_col(payload) -> "F.Column":
-    """Container-format sniff as a PURE JVM expression (hex prefix match on
-    the first bytes — codegen, no Python): ``unknown`` when no signature
-    matches. RIFF containers are refined by their type tag (bytes 9-12)."""
-    hx = F.hex(F.substring(payload, 1, 16))
-    riff_tag = F.decode(F.substring(payload, 9, 4), "UTF-8")
-    expr = F.lit("unknown")
-    for prefix, fmt in reversed(MAGIC_PREFIXES):
-        hit = (
-            F.when(riff_tag == "WAVE", F.lit("wav"))
-            .when(riff_tag == "WEBP", F.lit("webp"))
-            .when(riff_tag == "AVI ", F.lit("avi"))
-            .otherwise(F.lit("riff"))
-            if fmt == "riff"
-            else F.lit(fmt)
-        )
-        expr = F.when(hx.startswith(prefix), hit).otherwise(expr)
-    return expr
-
-
-def attach_payload(df: DataFrame, id_col: str, text_col: str, kind: str = "image") -> DataFrame:
-    """Build a media table from any source column by treating its UTF-8
-    bytes as the opaque payload (the sandbox stand-in for real blobs)."""
-    return df.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
-        F.struct(
-            F.length(F.col(text_col)).cast("int").alias("width"),
-            F.lit(1).cast("int").alias("height"),
-            F.lit("application/octet-stream").alias("mime"),
-        ).alias("meta"),
-    )
 
 
 _DECODERS = {
@@ -170,9 +120,8 @@ _SIGS = [(bytes.fromhex(h), f) for h, f in MAGIC_PREFIXES]
 
 
 def sniff_format(b: bytes) -> str:
-    """Python twin of :func:`format_col` (magic-byte container sniff),
-    for use inside decode kernels; tested byte-identical to the JVM
-    expression."""
+    """Magic-byte container sniff (``unknown`` when no signature
+    matches); RIFF containers are refined by their type tag (bytes 9-12)."""
     for prefix, fmt in _SIGS:
         if b.startswith(prefix):
             if fmt == "riff":
@@ -184,12 +133,12 @@ def sniff_format(b: bytes) -> str:
     return "unknown"
 
 
-def pixel_histogram(arr: np.ndarray, bins: int = 16) -> np.ndarray:
-    """Normalized luminance-byte histogram of decoded pixels — the
+def pixel_histogram(arr: np.ndarray) -> np.ndarray:
+    """Normalized 16-bin luminance-byte histogram of decoded pixels — the
     deterministic feature vector the ANN/dedup tiers consume (swap for a
     model embedding on a cluster with one; the plan stays identical)."""
     flat = np.asarray(arr, dtype=np.uint8).ravel()
-    hist, _ = np.histogram(flat, bins=bins, range=(0, 256))
+    hist, _ = np.histogram(flat, bins=16, range=(0, 256))
     return (hist / max(1, flat.size)).astype(np.float32)
 
 
@@ -239,70 +188,22 @@ def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """REAL raster resize for PNG/BMP: decode (cpdd_spark.codecs),
-    nearest-neighbor resample, re-encode as PNG (the normalized output
-    container). Formats without a decoder raise — see
-    :func:`decode_image`."""
-    return encode_png(resize_nearest(decode_image(payload), width, height))
-
-
-def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """``media -> media`` with every payload decoded, resampled to
-    ``width x height``, and re-encoded as PNG — a real thumbnail/
-    normalization pass over genuine containers. Metadata is recomputed
-    JVM-side after the kernel; only the byte transform crosses into
-    Python (Arrow-batched)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "kind": pdf["kind"].to_numpy(),
-                    "payload": [
-                        resize_image(p, width, height) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    resized = media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, schema="media_id string, kind string, payload binary"
-    )
-    return resized.select(
-        "media_id",
-        "kind",
-        "payload",
-        F.struct(
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.lit("image/png").alias("mime"),
-        ).alias("meta"),
-    )
-
-
-def text_to_image_media(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    width: int = 32,
-    max_height: int = 64,
-    mixed_formats: bool = True,
-) -> DataFrame:
+def text_to_image_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Render each row's UTF-8 text bytes into a REAL image payload: a
-    grayscale raster of fixed ``width`` (pixels = bytes, zero-padded,
-    height capped at ``max_height``). With ``mixed_formats`` the
-    container rotates by id CRC across PNG / 24-bit BMP / binary PGM /
-    baseline JPEG / GIF / lossless WebP, so one table exercises every
-    implemented decoder (including the lossy entropy-coded path and the LZW palette
-    path); otherwise all PNG.
+    grayscale raster 32 pixels wide (pixels = bytes, zero-padded, height
+    capped at 64 rows). The container rotates by id CRC across PNG /
+    24-bit BMP / binary PGM / baseline JPEG / GIF / lossless WebP, so one
+    table exercises every implemented decoder (including the lossy
+    entropy-coded path and the LZW palette path).
 
     This is the sandbox's deterministic media source: downstream decode /
-    feature / resize operators run against genuine containers with CRCs,
+    feature operators run against genuine containers with CRCs,
     scanline filters, and stride padding — not placeholder bytes. On a
     cluster the same pipeline shape reads payloads from object storage
     instead."""
     import zlib as _zlib
+
+    width, max_height = 32, 64
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -314,12 +215,10 @@ def text_to_image_media(
                 take = min(len(b), width * h)
                 buf[:take] = np.frombuffer(b[:take], dtype=np.uint8)
                 arr = buf.reshape(h, width)
-                enc = encode_png
-                if mixed_formats:
-                    enc = (
-                        encode_png, encode_bmp, encode_pnm, encode_jpeg,
-                        encode_gif, encode_webp,
-                    )[_zlib.crc32(str(mid).encode("utf-8")) % 6]
+                enc = (
+                    encode_png, encode_bmp, encode_pnm, encode_jpeg,
+                    encode_gif, encode_webp,
+                )[_zlib.crc32(str(mid).encode("utf-8")) % 6]
                 payloads.append(enc(arr))
             yield pd.DataFrame(
                 {
@@ -329,7 +228,7 @@ def text_to_image_media(
                 }
             )
 
-    base = _spread_for_python_kernel(
+    base = spread(
         df.select(
             F.col(id_col).cast("string").alias("media_id"),
             F.col(text_col).cast("string").alias("text"),
@@ -350,71 +249,10 @@ def text_to_image_media(
     )
 
 
-def avg_pool_features(features: DataFrame, factor: int = 4) -> DataFrame:
-    """REAL (no codec): average-pool each fixed-length feature vector by
-    ``factor`` — the standard embedding-compaction step before ANN
-    indexing, as a pure JVM expression (aggregate over array slices inside
-    codegen; no Python). Input: ``(media_id, features array<float>)``."""
-    f = F.col("features")
-    k = F.lit(factor)
-    pooled = F.transform(
-        F.sequence(F.lit(0), F.floor((F.size(f) - 1) / k).cast("int")),
-        lambda i: F.aggregate(
-            F.slice(f, i * k + 1, factor),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double"),
-        )
-        / F.size(F.slice(f, i * k + 1, factor)),
-    )
-    # empty vectors: sequence(0, floor(-1/k)) is the DESCENDING [0, -1] in
-    # Spark, whose -1 index slices from the array END — guard to an empty
-    # pooled array instead of [null, null]
-    pooled = F.when(F.size(f) > 0, pooled).otherwise(
-        F.array().cast("array<double>")
-    )
-    return features.select("media_id", pooled.alias("pooled"))
-
-
-def frame_sample(media: DataFrame, every_n: int = 1024, max_frames: int = 8) -> DataFrame:
-    """Deterministic 'frame sampling': slice the payload at fixed strides —
-    the plumbing twin of video frame extraction (binary slicing, explode,
-    per-frame rows) with no codec dependency.
-
-    ``frame`` is BINARY — the payload is sliced as bytes. An earlier form
-    cast the payload to STRING before slicing, which replaced every
-    non-UTF-8 byte with U+FFFD and silently garbled real media payloads
-    (all shipped codecs emit non-UTF-8 bytes); ``substring`` slices
-    BinaryType natively, so the sampled frames are the payload's actual
-    bytes."""
-    idx = F.sequence(F.lit(0), F.lit(max_frames - 1))
-    return (
-        media.select(
-            "media_id",
-            F.posexplode(
-                F.filter(
-                    F.transform(
-                        idx,
-                        lambda i: F.substring(
-                            F.col("payload"), i * every_n + 1, F.lit(64)
-                        ),
-                    ),
-                    lambda s: F.length(s) > 0,
-                )
-            ).alias("frame_idx", "frame"),
-        )
-    )
-
-
-def text_to_audio_media(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    sample_rate: int = 8000,
-    max_samples: int = 8192,
-) -> DataFrame:
+def text_to_audio_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Render each row's UTF-8 text bytes into a REAL mono PCM16 WAV
-    payload (sample = ``(byte - 128) << 8``, truncated at
-    ``max_samples``) — the audio twin of :func:`text_to_image_media`:
+    payload at 8 kHz (sample = ``(byte - 128) << 8``, truncated at 8192
+    samples) — the audio twin of :func:`text_to_image_media`:
     downstream decode/feature operators run against genuine RIFF
     containers with fmt/data chunk framing, not placeholder bytes. The
     media schema is the SAME struct the image tier uses (width/height
@@ -425,13 +263,11 @@ def text_to_audio_media(
         for pdf in batches:
             payloads = []
             for text in pdf["text"]:
-                b = np.frombuffer(
-                    str(text).encode("utf-8")[:max_samples], dtype=np.uint8
-                )
+                b = np.frombuffer(str(text).encode("utf-8")[:8192], dtype=np.uint8)
                 if len(b) == 0:
                     b = np.zeros(1, dtype=np.uint8)
                 samples = (b.astype(np.int16) - 128) << 8
-                payloads.append(encode_wav(samples, sample_rate))
+                payloads.append(encode_wav(samples, 8000))
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"].to_numpy(),
@@ -440,7 +276,7 @@ def text_to_audio_media(
                 }
             )
 
-    base = _spread_for_python_kernel(
+    base = spread(
         df.select(
             F.col(id_col).cast("string").alias("media_id"),
             F.col(text_col).cast("string").alias("text"),

@@ -178,8 +178,6 @@ def decontaminate(
     probes: DataFrame,
     id_col: str,
     text_col: str,
-    probe_id_col: str | None = None,
-    probe_text_col: str | None = None,
     n: int = 5,
     min_overlap: int = 1,
     broadcast_probes: bool = True,
@@ -187,7 +185,8 @@ def decontaminate(
     """Test-set decontamination: mark every document that shares at least
     ``min_overlap`` distinct word ``n``-grams with ANY probe document —
     the standard held-out-benchmark overlap screen a training-data
-    pipeline runs before a corpus ships. Returns
+    pipeline runs before a corpus ships. ``probes`` has the same
+    ``id_col``/``text_col`` columns as ``docs``. Returns
     ``(<id_col>, n_hits, contaminated)`` for EVERY input document
     (``n_hits`` = distinct n-grams shared with the probe set's union;
     docs shorter than ``n`` tokens carry no n-grams and report 0, the
@@ -217,9 +216,7 @@ def decontaminate(
     by an overlap count (the verify tier of this screen).
     """
     probe_grams = (
-        ngram_sets(
-            probes, probe_id_col or id_col, probe_text_col or text_col, n
-        )
+        ngram_sets(probes, id_col, text_col, n)
         .select("shingle")
         .distinct()
     )

@@ -48,7 +48,7 @@ from cpdd_spark.assemble import assemble_documents
 from cpdd_spark.cc import connected_components
 from cpdd_spark.config import DedupConfig
 from cpdd_spark.exact import exact_clusters, exact_pairs
-from cpdd_spark.io import TableIO
+from cpdd_spark.io import LINEAGE_SCHEMA, METRICS_SCHEMA, TableIO
 from cpdd_spark.lsh import candidate_pairs
 from cpdd_spark.signatures import compute_signatures
 from cpdd_spark.substring import substring_pairs
@@ -205,26 +205,24 @@ class DedupPipeline:
         if not committed:
             return
         lineage = [
-            {"stage": stage, "partition_id": i, "rows": n}
+            {"stage": stage, "partition_id": i, "rows": n, "run_id": self.run_id}
             for stage, _t0, _t1, rows in committed
             for i, n in enumerate(rows)
         ]
         metrics = [
             {"stage": stage, "rows": sum(rows), "t_start": t0, "t_end": t1,
-             "seconds": t1 - t0}
+             "seconds": t1 - t0, "run_id": self.run_id}
             for stage, t0, t1, rows in committed
         ]
         # run_id partitioning: appends only ever CREATE a new partition
         # directory (never touch prior runs' files), and reading one run's
         # rows partition-prunes every other run
-        for table, rows, fields in (
-            ("lineage", lineage, "stage:string,partition_id:int,rows:bigint"),
-            ("metrics", metrics,
-             "stage:string,rows:bigint,t_start:double,t_end:double,seconds:double"),
+        for table, rows, schema in (
+            ("lineage", lineage, LINEAGE_SCHEMA),
+            ("metrics", metrics, METRICS_SCHEMA),
         ):
             frame = self.spark.range(1).select(
-                F.lit(self.run_id).alias("run_id"),
-                F.inline(F.from_json(F.lit(json.dumps(rows)), f"array<struct<{fields}>>")),
+                F.inline(F.from_json(F.lit(json.dumps(rows)), f"array<struct<{schema}>>"))
             )
             self.io.append(frame, table, partition_by=["run_id"])
 

@@ -13,7 +13,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -40,6 +40,28 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the session's default parallelism.
+
+    A single small parquet file scans as ONE partition, so a compute-heavy
+    operator over it (an interpreted-Python kernel, a tokenize + explode,
+    a corpus x queries cross join) would otherwise run in one task on one
+    core — measured 1/32 utilization on the sf0.1 bench for the media
+    kernels. Callers spread a narrow projection, so the shuffle moves only
+    the columns the operator reads; at cluster scale the scan is already
+    wider and this is a cheap rebalance."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB, at least ``1g``.
+
+    In local mode the driver JVM is also the executor, and the Python
+    workers and the OS page cache share the rest of the host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys >> 31)}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "cpdd_spark",
@@ -57,10 +79,14 @@ def get_spark(
         builder = builder.master(master)
     conf = {
         # local mode runs driver==executor in ONE JVM whose default heap is
-        # 1g — far too small for shuffles at bench scale. Must be set before
-        # the JVM launches (no-op on an already-running session). On a real
-        # cluster spark-submit --driver-memory/--executor-memory governs.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+        # 1g — far too small for shuffles at bench scale — so the default
+        # is fitted to the host (default_driver_memory); the variable
+        # overrides it. Must be set before the JVM launches (no-op on an
+        # already-running session). On a real cluster spark-submit
+        # --driver-memory/--executor-memory governs.
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+        ),
         # AQE: runtime coalescing of small shuffle partitions and skew-join
         # splitting — first line of defense for hot LSH bands at scale.
         "spark.sql.adaptive.enabled": "true",
@@ -78,8 +104,7 @@ def get_spark(
         # on 1-2 cores. At cluster scale real inputs carry far more splits
         # than cores and the floor is inert; single-row-group files can't
         # be split by config at all (the compute-heavy operators over
-        # those spread explicitly — see multimodal._spread_for_python_kernel
-        # and its call sites).
+        # those spread explicitly — see spread and its call sites).
         "spark.sql.files.minPartitionNum": str(shuffle_partitions),
         # InferFiltersFromGenerate copies an explode's GENERATOR EXPRESSION
         # into an inferred `size(e) > 0` predicate and pushes it to the

@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 
 from cpdd_spark.config import DedupConfig
 from cpdd_spark.lsh import pairs_from_buckets
+from cpdd_spark.session import spread
+
+# every vector table has the embeddings layout: (vec_id long, embedding array)
+ID_COL, VEC_COL = "vec_id", "embedding"
 
 
 def _dot(a, b, dim: int | None = None):
@@ -68,48 +72,33 @@ def _norm(a, dim: int | None = None):
     )
 
 
-def with_cosine(
-    pairs: DataFrame, va: str = "emb_a", vb: str = "emb_b", dim: int | None = None
-) -> DataFrame:
-    """``dim`` unrolls the fold for codegen (see :func:`_dot`) — pass it
-    whenever the embedding width is statically known; semantics (and the
-    emitted doubles) are identical for arrays of exactly that length,
-    which every caller's schema guarantees."""
-    return pairs.withColumn(
-        "cosine",
-        _dot(F.col(va), F.col(vb), dim)
-        / (_norm(F.col(va), dim) * _norm(F.col(vb), dim)),
-    )
+def with_cosine(pairs: DataFrame, dim: int | None = None) -> DataFrame:
+    """Add the ``cosine`` of columns ``emb_a`` and ``emb_b``. ``dim``
+    unrolls the fold for codegen (see :func:`_dot`) — pass it whenever the
+    embedding width is statically known; semantics (and the emitted
+    doubles) are identical for arrays of exactly that length, which every
+    caller's schema guarantees."""
+    va, vb = F.col("emb_a"), F.col("emb_b")
+    return pairs.withColumn("cosine", _dot(va, vb, dim) / (_norm(va, dim) * _norm(vb, dim)))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int | None = None,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query: ``(query_id, neighbor_id, cosine,
     rank)``. Self-matches excluded; ties broken by neighbor_id for full
-    determinism. The corpus side of the cross join broadcasts when small;
-    at scale use :func:`lsh_topk`. ``dim`` (when the embedding width is
-    statically known) unrolls the cosine into codegen — see
-    :func:`_dot`."""
+    determinism. The query side of the cross join broadcasts; at scale use
+    :func:`lsh_topk`."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("emb_a")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("emb_b")
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("emb_a")
     )
     # stream the CORPUS side, spread to cluster parallelism (a single
     # small parquet file scans as one partition — the whole
-    # queries x corpus cosine + partial top-k otherwise runs in ONE task;
-    # same shape fix as multimodal's _spread_for_python_kernel), and
-    # broadcast the tiny query side instead of the corpus.
-    c = c.repartition(c.sparkSession.sparkContext.defaultParallelism)
+    # queries x corpus cosine + partial top-k otherwise runs in ONE task),
+    # and broadcast the tiny query side instead of the corpus.
+    c = spread(
+        corpus.select(F.col(ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("emb_b"))
+    )
     scored = (
-        with_cosine(c.crossJoin(F.broadcast(q)), dim=dim)
+        with_cosine(c.crossJoin(F.broadcast(q)))
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -122,17 +111,12 @@ def cosine_topk(
     )
 
 
-def cosine_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.99,
-) -> DataFrame:
+def cosine_dup_pairs(corpus: DataFrame, threshold: float = 0.99) -> DataFrame:
     """Embedding near-duplicate pairs: ``(a, b, cosine)`` with cosine >=
-    threshold, a < b. Brute-force form (exact); swap the crossJoin for
-    :func:`hyperplane_buckets` collisions at scale."""
-    left = corpus.select(F.col(id_col).alias("a"), F.col(vec_col).alias("emb_a"))
-    right = corpus.select(F.col(id_col).alias("b"), F.col(vec_col).alias("emb_b"))
+    threshold, a < b. Brute-force form (exact), the reference model of
+    :func:`cosine_dup_pairs_lsh`, which runs at scale."""
+    left = corpus.select(F.col(ID_COL).alias("a"), F.col(VEC_COL).alias("emb_a"))
+    right = corpus.select(F.col(ID_COL).alias("b"), F.col(VEC_COL).alias("emb_b"))
     return (
         with_cosine(left.crossJoin(right))
         .filter(F.col("a") < F.col("b"))
@@ -149,9 +133,6 @@ def sign_sketches(
     dim: int,
     n_planes: int = 8,
     n_tables: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-table Charikar sign sketches in ONE Arrow pass:
     ``(id, t, bucket)`` — one row per (vector, table), where ``bucket`` packs
@@ -159,12 +140,13 @@ def sign_sketches(
 
     All ``n_tables * n_planes`` projections are a single
     ``(batch, dim) @ (dim, n_tables*n_planes)`` matmul per Arrow batch —
-    the vectorized-pandas-UDF shape mandated for Python kernels (the
-    JVM-expression variant in :func:`hyperplane_buckets` stops scaling past
-    ~50 projections: Catalyst codegen size grows per plane, a matmul does
-    not). Sketches are deterministic in (seed, dim, n_planes, n_tables).
+    the vectorized-pandas-UDF shape mandated for Python kernels (a
+    JVM-expression projection per plane stops scaling past ~50
+    projections: Catalyst codegen size grows per plane, a matmul does
+    not). Sketches are deterministic in (dim, n_planes, n_tables): the
+    planes come from seed 42.
     """
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     planes = rng.normal(size=(dim, n_tables * n_planes)).astype(np.float64)
     weights = (1 << np.arange(n_planes, dtype=np.uint64)).astype(np.uint64)
 
@@ -172,13 +154,13 @@ def sign_sketches(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf[VEC_COL].to_numpy()).astype(np.float64)
             bits = (x @ planes) > 0  # (n, T*b)
             packed = (
                 bits.reshape(len(pdf), n_tables, n_planes).astype(np.uint64)
                 @ weights
             ).astype(np.int64)  # (n, T) bucket ids
-            ids = np.repeat(pdf[id_col].to_numpy(), n_tables)
+            ids = np.repeat(pdf[ID_COL].to_numpy(), n_tables)
             yield pd.DataFrame(
                 {
                     "id": ids,
@@ -192,19 +174,13 @@ def sign_sketches(
     # sketch rows immediately anyway), and a repartition of the vector
     # table costs more than the kernel parallelism buys — measured a small
     # but consistent net loss on both the top-k and dedup paths.
-    return df.select(id_col, vec_col).mapInPandas(kernel, schema=SKETCH_SCHEMA)
+    return df.select(ID_COL, VEC_COL).mapInPandas(kernel, schema=SKETCH_SCHEMA)
 
 
 def cosine_dup_pairs_lsh(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.99,
     dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 64,
-    seed: int = 42,
-    cfg: DedupConfig | None = None,
     broadcast_vectors: bool = True,
     release: list | None = None,
 ) -> DataFrame:
@@ -224,10 +200,10 @@ def cosine_dup_pairs_lsh(
     caller to unpersist once the result is materialized; without it the
     candidate list is checkpointed first.
 
-    Recall: a pair at angle theta collides in one table w.p.
-    ``p^n_planes`` with ``p = 1 - theta/pi``; across ``n_tables`` independent
-    tables the miss probability is ``(1 - p^b)^T``. At the defaults
-    (b=8, T=64): cosine 0.99 -> miss ~ 1e-26, cosine 0.95 -> ~2e-11,
+    Recall: the sketches have b=8 planes in each of T=64 tables. A pair at
+    angle theta collides in one table w.p. ``p^b`` with ``p = 1 -
+    theta/pi``; across the T independent tables the miss probability is
+    ``(1 - p^b)^T``: cosine 0.99 -> miss ~ 1e-26, cosine 0.95 -> ~2e-11,
     cosine 0.80 (the weakest threshold the driver query pins) -> 3.8e-3 at
     the exact boundary. Precision is always 1.0 — every candidate is
     verified with the same left-to-right double cosine the brute-force
@@ -235,8 +211,7 @@ def cosine_dup_pairs_lsh(
     machinery (hot buckets = duplicate blobs get capped + chained, then
     cosine-verified).
     """
-    cfg = cfg or DedupConfig()
-    sk = sign_sketches(corpus, dim, n_planes, n_tables, seed, id_col, vec_col)
+    sk = sign_sketches(corpus, dim)
     # typed id path: the bucket machinery pairs/chains on the native long
     # vector ids — no string casts, 8-byte shuffle keys end to end
     # distinct=False: candidates stay multiset-shaped through the verify
@@ -245,7 +220,7 @@ def cosine_dup_pairs_lsh(
     # survivor set instead of the tens-of-millions candidate set — one
     # candidate-sized exchange + hash aggregate removed from the plan.
     cands = pairs_from_buckets(
-        sk, ["t", "bucket"], cfg, id_col="id", distinct=False, release=release
+        sk, ["t", "bucket"], DedupConfig(), id_col="id", distinct=False, release=release
     ).select(F.col("a").alias("ia"), F.col("b").alias("ib"))
     if broadcast_vectors:
         # Verify in a VECTORIZED Arrow kernel against a task-local copy of
@@ -267,14 +242,15 @@ def cosine_dup_pairs_lsh(
         # the _dot/_norm expression fold and of the DuckDB oracle's
         # list reduce (float32 -> float64 casts are exact; numpy and the
         # JVM both use correctly-rounded IEEE multiply/divide/sqrt).
-        # Equality is pinned by tests/test_similarity.py.
+        # Equality is pinned by
+        # tests/test_extras.py::test_cosine_dup_pairs_lsh_matches_bruteforce.
         import pandas as pd
         from collections.abc import Iterator
 
-        pdf_vecs = corpus.select(id_col, vec_col).toPandas()
-        ids = pdf_vecs[id_col].to_numpy()
+        pdf_vecs = corpus.select(ID_COL, VEC_COL).toPandas()
+        ids = pdf_vecs[ID_COL].to_numpy()
         if len(ids):
-            mat = np.stack(pdf_vecs[vec_col].to_numpy()).astype(np.float64)
+            mat = np.stack(pdf_vecs[VEC_COL].to_numpy()).astype(np.float64)
         else:
             mat = np.zeros((0, dim), dtype=np.float64)
         # dense id -> row-index map (vector ids need not be contiguous)
@@ -318,8 +294,8 @@ def cosine_dup_pairs_lsh(
         ).distinct()
     # at-scale mode (10^9+ vectors): no driver-side vector table — attach
     # vectors through shuffle joins and verify with the JVM expression
-    left = corpus.select(F.col(id_col).alias("ia"), F.col(vec_col).alias("emb_a"))
-    right = corpus.select(F.col(id_col).alias("ib"), F.col(vec_col).alias("emb_b"))
+    left = corpus.select(F.col(ID_COL).alias("ia"), F.col(VEC_COL).alias("emb_a"))
+    right = corpus.select(F.col(ID_COL).alias("ib"), F.col(VEC_COL).alias("emb_b"))
     joined = cands.join(left, "ia").join(right, "ib")
     return (
         with_cosine(joined, dim=dim)
@@ -333,37 +309,13 @@ def cosine_dup_pairs_lsh(
     )
 
 
-def hyperplane_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Charikar sign-sketch: ``(id, bucket)`` where bucket packs the sign
-    bits of n_planes seeded random hyperplane projections. JVM-side: the
-    plane matrix enters the plan as array literals."""
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim))
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(float(v)) for v in planes[i]])
-        proj = _dot(F.col(vec_col), plane)
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb"), bucket.alias("bucket"))
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 6,
     n_tables: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k via MULTI-TABLE sign-LSH (standard amplification:
     a true neighbor is a candidate iff it collides in >= 1 of n_tables
@@ -375,12 +327,9 @@ def lsh_topk(
     All tables come from ONE :func:`sign_sketches` matmul pass per side and
     collide through ONE ``(t, bucket)`` equi-join — same recall math as a
     per-table loop, but the plan stays two mapInPandas + one shuffle join
-    regardless of n_tables (the per-plane JVM-expression variant,
-    :func:`hyperplane_buckets`, grows the codegen per plane and unions one
-    join per table — kept only as the no-Python-worker alternative for
-    small n_planes)."""
-    csk = sign_sketches(corpus, dim, n_planes, n_tables, seed, id_col, vec_col)
-    qsk = sign_sketches(queries, dim, n_planes, n_tables, seed, id_col, vec_col)
+    regardless of n_tables."""
+    csk = sign_sketches(corpus, dim, n_planes, n_tables)
+    qsk = sign_sketches(queries, dim, n_planes, n_tables)
     cands = (
         qsk.select(F.col("id").alias("query_id"), "t", "bucket")
         .join(
@@ -393,11 +342,11 @@ def lsh_topk(
     )
     scored = (
         cands.join(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("emb_a")),
+            queries.select(F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("emb_a")),
             "query_id",
         )
         .join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("emb_b")),
+            corpus.select(F.col(ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("emb_b")),
             "neighbor_id",
         )
     )
@@ -459,21 +408,17 @@ def ivf_centroids(
     corpus: DataFrame,
     dim: int,
     n_centroids: int = 64,
-    sample_mod: int = 16,
-    max_sample: int = 65536,
     iters: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> np.ndarray:
     """Train the coarse quantizer on a DETERMINISTIC hash-sample of the
     corpus (xxhash64(id) % mod == 0 — unbiased w.r.t. insertion
     order, reproducible across runs/cluster sizes), capped at
-    ``max_sample`` rows collected to the driver. At 10^12 scale the sample
-    is still O(max_sample): training cost does not grow with the corpus.
+    ``max_sample`` = 65536 rows collected to the driver. At 10^12 scale the
+    sample is still O(max_sample): training cost does not grow with the
+    corpus. The k-means init is seeded (42).
 
-    The modulus ADAPTS to the corpus: ``mod = max(sample_mod,
-    ceil(n / max_sample))`` from one cheap count, so the hash filter alone
+    The modulus ADAPTS to the corpus: ``mod = max(16, ceil(n /
+    max_sample))`` from one cheap count, so the hash filter alone
     bounds the collected rows near ``max_sample`` and the collect is a
     plain UNORDERED gather of the filtered scan — no global
     TakeOrderedAndProject (which would merge num_partitions x max_sample
@@ -483,11 +428,12 @@ def ivf_centroids(
     fixture), the selected sample — and therefore the trained centroids —
     is bit-identical to the previous formulation (regression-tested
     against saved centroids)."""
+    sample_mod, max_sample, seed = 16, 65536, 42
     n = corpus.count()
-    eff_mod = max(int(sample_mod), -(-n // max_sample)) if n else int(sample_mod)
-    sample = ivf_sample_df(corpus, eff_mod, id_col, vec_col).toPandas()
+    eff_mod = max(sample_mod, -(-n // max_sample)) if n else sample_mod
+    sample = ivf_sample_df(corpus, eff_mod, ID_COL, VEC_COL).toPandas()
     sample = (
-        sample.sort_values(id_col, kind="mergesort")
+        sample.sort_values(ID_COL, kind="mergesort")
         .head(max_sample)
         .reset_index(drop=True)
     )
@@ -496,7 +442,7 @@ def ivf_centroids(
         # the full corpus (still bounded by max_sample), then to seeded
         # random planes for a truly empty input
         sample = (
-            corpus.select(id_col, vec_col).orderBy(id_col).limit(max_sample).toPandas()
+            corpus.select(ID_COL, VEC_COL).orderBy(ID_COL).limit(max_sample).toPandas()
         )
     if len(sample) == 0:
         rng = np.random.default_rng(seed)
@@ -504,17 +450,11 @@ def ivf_centroids(
         return planes / np.maximum(
             np.linalg.norm(planes, axis=1, keepdims=True), 1e-12
         )
-    x = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
+    x = np.stack(sample[VEC_COL].to_numpy()).astype(np.float64)
     return _kmeans_spherical(x, n_centroids, iters, seed)
 
 
-def ivf_cells(
-    df: DataFrame,
-    centroids: np.ndarray,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_cells(df: DataFrame, centroids: np.ndarray, n_probe: int = 1) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroid cells in one
     Arrow matmul pass: ``(id, cell)``. Corpus vectors index with
     ``n_probe=1`` (one posting per vector); queries probe several cells."""
@@ -526,7 +466,7 @@ def ivf_cells(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf[VEC_COL].to_numpy()).astype(np.float64)
             x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
             sims = x @ cn.T  # (n, k)
             if n_probe == 1:
@@ -538,12 +478,12 @@ def ivf_cells(
                 )
             yield pd.DataFrame(
                 {
-                    "id": np.repeat(pdf[id_col].to_numpy(), cells.shape[1]),
+                    "id": np.repeat(pdf[ID_COL].to_numpy(), cells.shape[1]),
                     "cell": cells.reshape(-1),
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select(ID_COL, VEC_COL).mapInPandas(
         kernel, schema="id long, cell int"
     )
 
@@ -552,13 +492,9 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_centroids: int = 64,
     n_probe: int = 8,
-    seed: int = 42,
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: ``(query_id, neighbor_id, cosine,
     rank)`` — the coarse-quantizer scale path next to :func:`lsh_topk`'s
@@ -574,17 +510,13 @@ def ivf_topk(
 
     Deterministic end-to-end: hash-sampled seeded k-means training
     (:func:`ivf_centroids`), argmax/argpartition assignment, ties in the
-    final rank broken by neighbor_id. Pass precomputed ``centroids`` to
-    reuse a trained quantizer (e.g. the stored-index form).
+    final rank broken by neighbor_id.
     """
-    if centroids is None:
-        centroids = ivf_centroids(
-            corpus, dim, n_centroids, seed=seed, id_col=id_col, vec_col=vec_col
-        )
-    posts = ivf_cells(corpus, centroids, 1, id_col, vec_col).select(
+    centroids = ivf_centroids(corpus, dim, n_centroids)
+    posts = ivf_cells(corpus, centroids, 1).select(
         F.col("id").alias("neighbor_id"), "cell"
     )
-    probes = ivf_cells(queries, centroids, n_probe, id_col, vec_col).select(
+    probes = ivf_cells(queries, centroids, n_probe).select(
         F.col("id").alias("query_id"), "cell"
     )
     cands = (
@@ -594,10 +526,10 @@ def ivf_topk(
         .distinct()
     )
     scored = cands.join(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("emb_a")),
+        queries.select(F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("emb_a")),
         "query_id",
     ).join(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("emb_b")),
+        corpus.select(F.col(ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("emb_b")),
         "neighbor_id",
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -12,8 +12,7 @@ with no-clobber (copy.c:73-96).
 state tables, which Structured Streaming's append-only model cannot express.
 Whole-conversation files need no watermark: a conversation is complete when
 its file lands. For turn-level streams with late or out-of-order arrivals,
-:func:`assemble_stream` (watermark + session_window) and
-:func:`assemble_stream_stateful` (``applyInPandasWithState``) assemble
+:func:`assemble_stream_stateful` (``applyInPandasWithState``) assembles
 documents upstream of the same probe.
 
 The stream's state is three parquet tables with one declared schema each:
@@ -552,7 +551,8 @@ class IncrementalDedup:
         replays idempotent). ``max_files_per_trigger`` sets the batching
         granularity: larger batches amortize the per-micro-batch fixed
         cost (probe plans + index appends), 1 forces one batch per file
-        (the worst-case latency shape scripts/stream_bench.py measures)."""
+        (the worst-case latency shape; the benchmark's stream_incremental
+        workload drains its micro-batches that way)."""
         stream = (
             self.spark.readStream.schema(TURNS_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -607,46 +607,6 @@ class IncrementalDedup:
 # ---------------------------------------------------------------------------
 
 ASSEMBLED_SCHEMA = "conv_id string, n_turns long, doc_len long, doc string"
-
-
-def assemble_stream(turns_stream: DataFrame, gap: str = "10 minutes") -> DataFrame:
-    """Watermarked streaming assembly with BUILT-IN session windows: turns
-    may arrive out of order and across micro-batches; a conversation is
-    emitted once the event-time watermark passes its last turn's ``ts`` +
-    ``gap`` (append mode — exactly-once rows, no updates).
-
-    Semantics mirror :func:`cpdd_spark.assemble.assemble_documents` (stable
-    ``turn_idx`` ordering via in-group ``array_sort``; '\\n' separator),
-    with completion defined by EVENT-TIME gaps: a conversation quiet for
-    ``gap`` is closed — the same session discipline as the batch
-    sessionization query. A conversation resuming after a longer silence
-    starts a NEW session row by design; use
-    :func:`assemble_stream_stateful` when one state per conv_id must
-    persist across arbitrary silences.
-
-    Everything is built-in (watermark + session_window + object agg): no
-    Python in the stream, state store managed by Spark, late rows beyond
-    the watermark dropped with metrics — the preferred form at 10^12-turn
-    scale.
-    """
-    w = turns_stream.withWatermark("ts", gap)
-    return (
-        w.groupBy(F.session_window("ts", gap).alias("sw"), F.col("conv_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("turn_idx"), F.col("text")))
-            ).alias("turns")
-        )
-        .select(
-            "conv_id",
-            F.size("turns").cast("long").alias("n_turns"),
-            F.concat_ws("\n", F.transform("turns", lambda t: t["text"])).alias(
-                "doc"
-            ),
-        )
-        .withColumn("doc_len", F.length("doc").cast("long"))
-        .select("conv_id", "n_turns", "doc_len", "doc")
-    )
 
 
 def assemble_stream_stateful(

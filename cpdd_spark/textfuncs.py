@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cpdd_spark.session import spread
+
 # ---------------------------------------------------------------------------
 # canonical whitespace tokenizer (ONE definition, three engines)
 # ---------------------------------------------------------------------------
@@ -93,13 +95,17 @@ def punct_count(text: Column | str) -> Column:
 
 
 def quality_from_counts(n_chars, n_toks, sw, punct) -> Column:
-    """The quality formula over ALREADY-COMPUTED count columns — lets a
-    single-pass caller bind the tokenization once and reuse it across
-    every output column instead of re-deriving splits per term (the
-    expression tree of the convenience form re-evaluates the split and
-    the stopword filter several times per row; Catalyst does not
-    common-subexpression across independent projection columns).
-    Arithmetic is the identical IEEE sequence — same doubles out."""
+    """Heuristic [0,1] quality over ALREADY-COMPUTED count columns
+    (characters, :func:`token_count`, :func:`stopword_count`,
+    :func:`punct_count`): rewards mid-length docs, real word lengths, some
+    stopword mass; penalizes punctuation soup. Built from engine-portable
+    arithmetic only => bit-identical in DuckDB.
+
+    Taking counts lets a single-pass caller bind the tokenization once and
+    reuse it across every output column: an expression that derived the
+    counts itself would re-evaluate the split and the stopword filter
+    several times per row (Catalyst does not common-subexpression across
+    independent projection columns)."""
     n_chars = n_chars.cast("double")
     n_toks = n_toks.cast("double")
     sw = sw.cast("double")
@@ -111,16 +117,6 @@ def quality_from_counts(n_chars, n_toks, sw, punct) -> Column:
     punct_term = F.when(n_chars > 0, F.lit(1.0) - F.least(punct * 5.0 / n_chars, F.lit(1.0))).otherwise(F.lit(0.0))
     return (len_term * 0.4 + tok_term * 0.2 + sw_term * 0.2 + punct_term * 0.2).alias(
         "quality"
-    )
-
-
-def quality_score(text: Column | str) -> Column:
-    """Heuristic [0,1] quality: rewards mid-length docs, real word lengths,
-    some stopword mass; penalizes punctuation soup. Integer-arithmetic-free
-    of engine-specific functions => bit-identical in DuckDB."""
-    c = F.col(text) if isinstance(text, str) else text
-    return quality_from_counts(
-        F.length(c), token_count(c), stopword_count(c), punct_count(c)
     )
 
 
@@ -143,18 +139,6 @@ def fingerprint(text: Column | str) -> Column:
     (cpdd_spark.signatures)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(c)
-
-
-def profile(df, text_col: str = "text"):
-    """Attach the full analysis column set to a DataFrame."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_stopwords", stopword_count(text_col))
-        .withColumn("n_punct", punct_count(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_pred", lang_id(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-    )
 
 
 def human_bytes(col: Column | str) -> Column:
@@ -214,12 +198,9 @@ def token_frequencies(df, text_col: str = "text", top_k: int | None = None):
     with ``top_k`` the ordered take compiles to TakeOrderedAndProject —
     per-partition top-k heaps, no global sort. Ties break on the token
     string so the cut is deterministic cross-engine."""
-    inp = df.select(F.col(text_col))
-    # spread to cluster parallelism: a single small parquet file scans as
-    # ONE partition, serializing the tokenize+explode+partial-agg map side
-    # on one core (the shuffle moves only the text column; at cluster
-    # scale the scan is already wider and this is a cheap rebalance)
-    inp = inp.repartition(inp.sparkSession.sparkContext.defaultParallelism)
+    # spread: the tokenize+explode+partial-agg map side otherwise runs on
+    # one core over a single-row-group scan
+    inp = spread(df.select(F.col(text_col)))
     toks = inp.select(F.explode(ws_tokens(F.col(text_col))).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     if top_k is not None:
@@ -230,23 +211,24 @@ def token_frequencies(df, text_col: str = "text", top_k: int | None = None):
 
 
 def repetition_profile(df, id_col: str = "doc_id", text_col: str = "text"):
-    """``(id_col, bigram_rep, trigram_rep)`` for every document — the
-    vectorized Arrow form of :func:`ngram_repetition` (n=2 and n=3 from one
-    tokenization).
+    """``(id_col, bigram_rep, trigram_rep)`` for every document: the
+    duplicate-``n``-gram fraction ``1 - distinct/total`` over the doc's
+    n-gram multiset for n=2 and n=3 (0.0 when the doc has no n-grams) —
+    the Gopher-style within-document repetition signal (line-level lives
+    in the line-dedup op).
 
-    The JVM column form builds every n-gram as a string through interpreted
-    higher-order functions (``transform``+``array_join``+``array_distinct``
-    are HigherOrderFunction nodes, never codegen'd) — measured as the whole
-    cost of the repetition screen. This kernel tokenizes once per doc with
-    the canonical whitespace split (pandas ``str.split()``, the pinned twin
-    of :func:`ws_tokens` — tests/test_tokenizer.py), factorizes tokens to
-    integer codes, and counts distinct n-grams as distinct base-V code
-    combinations via ``np.unique`` — exact integer counts, so the emitted
-    ``1 - distinct/total`` doubles are bit-identical to the column form
-    (same two integers, one IEEE division; pinned by
-    tests/test_extras.py::test_repetition_kernel_matches_column_form).
-    Token tuples <-> joined-gram strings is a bijection (tokens cannot
-    contain whitespace), so "distinct grams" is the same set either way.
+    A vectorized Arrow kernel: a JVM column form builds every n-gram as a
+    string through interpreted higher-order functions (``transform`` +
+    ``array_join`` + ``array_distinct`` are HigherOrderFunction nodes,
+    never codegen'd), measured as the whole cost of the screen. This kernel
+    tokenizes once per doc with the canonical whitespace split (pandas
+    ``str.split()``, the pinned twin of :func:`ws_tokens` —
+    tests/test_tokenizer.py), factorizes tokens to integer codes, and
+    counts distinct n-grams as distinct base-V code combinations via
+    ``np.unique`` — exact integer counts and one IEEE division, so the
+    doubles match the DuckDB oracle's. Token tuples <-> joined-gram strings
+    is a bijection (tokens cannot contain whitespace), so "distinct grams"
+    is the same set either way.
     """
     from collections.abc import Iterator
 
@@ -288,33 +270,9 @@ def repetition_profile(df, id_col: str = "doc_id", text_col: str = "text"):
                 }
             )
 
-    inp = df.select(id_col, text_col)
-    # spread to cluster parallelism (single-row-group scan = one-task
-    # kernel otherwise; same rationale as multimodal's
-    # _spread_for_python_kernel)
-    inp = inp.repartition(inp.sparkSession.sparkContext.defaultParallelism)
+    # spread: a single-row-group scan is otherwise a one-task kernel
+    inp = spread(df.select(id_col, text_col))
     return inp.mapInPandas(
         kernel,
         schema=f"{id_col} {id_dtype}, bigram_rep double, trigram_rep double",
     )
-
-
-def ngram_repetition(toks: Column, n: int) -> Column:
-    """Duplicate-``n``-gram fraction of a token array: ``1 -
-    distinct/total`` over the doc's n-gram multiset (0.0 when the doc has
-    no n-grams) — the Gopher-style within-document repetition signal
-    (line-level lives in the line-dedup op). Pure JVM expression; the
-    token array must be BOUND TO A COLUMN by the caller, never inlined —
-    the same higher-order-function re-evaluation hazard ngram_sets
-    documents."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-    )
-    total = F.size(toks) - n + 1
-    # guard BELOW the sequence: size < n makes F.sequence count DOWN
-    return F.when(
-        F.size(toks) >= n,
-        (total - F.size(F.array_distinct(grams))).cast("double")
-        / total.cast("double"),
-    ).otherwise(F.lit(0.0))

@@ -1,10 +1,15 @@
 #!/usr/bin/env python
-"""Two-scale throughput protocol (P13): the sandbox proxy for the north
-rule's "N vs 4N executors with scaling efficiency >= 0.8".
+"""Two-scale runs of the dedup cascade, in two modes. Both generate one
+seeded fixture per size (cached under .bench_fixtures/), run each
+measurement in a fresh subprocess with the Python worker pool warmed
+outside the timed region, and keep the fastest of SPARK_GRAFT_RUNS runs
+(default 2) per point.
 
-Runs the SAME flagship dedup job on the SAME generated input (6.7M turns)
-at two cluster sizes built from REAL executor JVMs (`local-cluster`, fresh
-JVMs per leg via subprocess), reports turns/sec at both plus
+Two cluster sizes (P13), the sandbox proxy for the north rule's "N vs 4N
+executors with scaling efficiency >= 0.8": runs the SAME flagship dedup
+job on the SAME generated input (SPARK_GRAFT_CONVS conversations, default
+400k / 6.7M turns) at two cluster sizes built from REAL executor JVMs
+(`local-cluster`, fresh JVMs per leg), reports turns/sec at both plus
 efficiency = (T_N / T_4N) / 4, and writes BENCH/BASELINE.md.
 
 Measurement rules that made the numbers reproducible on this VM (each one
@@ -14,13 +19,25 @@ separate executor JVMs with explicit `spark.executor.memory` and
 data, not cluster; Python worker pool warmed outside the timed region;
 min-of-K runs per leg; wall time measures the job, not JVM boot.
 
+Two data sizes (``--rehearsal``), the 10x scale rehearsal: per-stage
+scaling slopes. Runs the stage ladder on two fixtures whose sizes differ
+by 10x (default 40k vs 400k conversations) on a local[32] session and
+reports per-stage wall seconds plus slope = t_big / t_small (data ratio
+10). A data-linear stage lands near 10 (fixed overheads push small-stage
+slopes BELOW 10); anything above 13 (1.3x data-linear) is flagged. Each
+cascade stage is materialized in its own lap, then the SimHash screen
+runs in its AUTO form (the escalation valve picks pairs or triples from
+n_reps) and its FORCED-pair form, so the valve's saving is a measured
+delta at every size, and the capped n-gram screen runs last. Its first
+run caught the n-gram shingling plan running 390x superlinear (1012 s at
+40k convs) — see cpdd_spark/ngram.py's plan-hazard notes.
+
 Usage:
     python scripts/two_scale.py               # full protocol -> BENCH/BASELINE.md
     python scripts/two_scale.py --run 8       # single measurement (JSON line)
     SPARK_GRAFT_LEGS=8,32 python scripts/two_scale.py   # saturated pair
-
-Per-stage laps come from scripts/scale_rehearsal.py, which materializes
-each stage on its own; this job runs the cascade unbroken.
+    python scripts/two_scale.py --rehearsal [--small 40000]   # slope table
+    python scripts/two_scale.py --rehearsal --size 40000      # one size (JSON line)
 """
 
 from __future__ import annotations
@@ -41,19 +58,52 @@ sys.path.insert(0, REPO)
 # memory bandwidth, not Spark, becomes the variable, which is exactly what
 # a two-SIZE comparison must hold constant.
 NUM_CONVS = int(os.environ.get("SPARK_GRAFT_CONVS", "400000"))
-FIXTURE_DIR = os.path.join(
-    REPO, ".bench_fixtures", f"two_scale_{NUM_CONVS // 1000}k"
-)
-# min-of-K per leg: this VM's wall times vary up to 2x run-to-run
+# min-of-K per point: this VM's wall times vary up to 2x run-to-run
 NUM_RUNS = int(os.environ.get("SPARK_GRAFT_RUNS", "2"))
 
 
-def ensure_fixture() -> str:
+def fixture_dir(num_convs: int) -> str:
+    return os.path.join(REPO, ".bench_fixtures", f"two_scale_{num_convs // 1000}k")
+
+
+def ensure_fixture(num_convs: int) -> str:
     from cpdd_spark.fixtures import FixtureParams, generate_to_dir
 
     return generate_to_dir(
-        FIXTURE_DIR, FixtureParams(num_convs=NUM_CONVS, seed=42)
+        fixture_dir(num_convs), FixtureParams(num_convs=num_convs, seed=42)
     )
+
+
+def warm_python_workers(spark, n_tasks: int) -> None:
+    """Warm the Python worker pool: the FIRST pandas-UDF stage of a session
+    pays worker spawn + pandas/numpy import on every core (~20s at 32
+    workers, measured). Steady-state throughput is the metric (a real
+    cluster amortizes worker startup over hours), so exclude it."""
+    import pandas as pd
+
+    def _noop(batches):
+        for b in batches:
+            yield pd.DataFrame({"id": b["id"]})
+
+    spark.range(n_tasks, numPartitions=n_tasks).mapInPandas(
+        _noop, "id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
+def best_of(args: list[str], key: str) -> dict:
+    """Run this script with ``args`` NUM_RUNS times, each in a fresh
+    process, print each run's JSON line and return the run with the
+    smallest ``key`` (min-of-K: the standard noise-robust estimator for a
+    deterministic workload on a noisy host)."""
+    runs = []
+    for _ in range(NUM_RUNS):
+        out = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), *args],
+            capture_output=True, text=True, check=True, cwd=REPO,
+        )
+        runs.append(json.loads(out.stdout.strip().splitlines()[-1]))
+        print(json.dumps(runs[-1]))
+    return min(runs, key=lambda r: r[key])
 
 
 def run_once(cores: int) -> dict:
@@ -72,15 +122,10 @@ def run_once(cores: int) -> dict:
     # JVMs (up to 4 cores / 8g heap each — a realistic executor shape). A
     # single local[32] JVM measures one JVM's GC/scheduler contention at 32
     # task threads, which no real cluster runs; executor-per-JVM is the
-    # deploy model spark-submit targets. Override with SPARK_GRAFT_LOCAL=1
-    # to use plain local[N].
+    # deploy model spark-submit targets.
     exec_cores = 4 if cores >= 4 else cores
-    if os.environ.get("SPARK_GRAFT_LOCAL"):
-        master = f"local[{cores}]"
-        exec_cores = cores
-    else:
-        n_exec = max(1, cores // exec_cores)
-        master = f"local-cluster[{n_exec},{exec_cores},12288]"
+    n_exec = max(1, cores // exec_cores)
+    master = f"local-cluster[{n_exec},{exec_cores},12288]"
     # shuffle partitions are sized to the DATA (so per-task memory is
     # constant), not to the cluster: the same plan runs at both scales and
     # only resources differ — smaller clusters just run more waves
@@ -96,7 +141,7 @@ def run_once(cores: int) -> dict:
             # at every cluster size, i.e. Amdahl serial fraction. With
             # statically sized partitions (64, balanced fixture) it buys
             # nothing here; on skewed production data leave it on.
-            "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),
+            "spark.sql.adaptive.enabled": "false",
             # honest per-executor CPU budget: without this every executor
             # JVM sizes GC/JIT thread pools to the 32-core HOST and the
             # "small cluster" silently borrows cores through GC bursts
@@ -112,22 +157,11 @@ def run_once(cores: int) -> dict:
             "spark.locality.wait": "0s",
         },
     )
-    turns = spark.read.parquet(os.path.join(FIXTURE_DIR, "transcripts.parquet"))
+    turns = spark.read.parquet(
+        os.path.join(fixture_dir(NUM_CONVS), "transcripts.parquet")
+    )
     n_turns = turns.count()  # warm the scan; excluded from the timed job
-
-    # Warm the Python worker pool: the FIRST pandas-UDF stage of a session
-    # pays worker spawn + pandas/numpy import on every core (~20s at 32
-    # workers, measured). Steady-state throughput is the metric (a real
-    # cluster amortizes worker startup over hours), so exclude it.
-    import pandas as pd
-
-    def _noop(batches):
-        for b in batches:
-            yield pd.DataFrame({"id": b["id"]})
-
-    spark.range(cores * 4, numPartitions=cores * 4).mapInPandas(
-        _noop, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_python_workers(spark, cores * 4)
 
     t0 = time.time()
     with session_cache() as store:
@@ -147,19 +181,127 @@ def run_once(cores: int) -> dict:
     return out
 
 
+def run_stages(num_convs: int) -> dict:
+    """One rehearsal point: every stage of the cascade, then the SimHash
+    and n-gram ladder, each materialized inside its own lap."""
+    from cpdd_spark.assemble import assemble_documents
+    from cpdd_spark.config import DedupConfig
+    from cpdd_spark.lsh import simhash_candidates
+    from cpdd_spark.ngram import jaccard_pairs
+    from cpdd_spark.pipeline import cascade, representatives, session_cache
+    from cpdd_spark.session import get_spark
+    from cpdd_spark.signatures import compute_signatures
+
+    cfg = DedupConfig(exact_verify="fingerprint")
+    spark = get_spark(
+        master="local[32]",
+        app_name=f"rehearsal_{num_convs}",
+        shuffle_partitions=64,
+    )
+    turns = spark.read.parquet(
+        os.path.join(fixture_dir(num_convs), "transcripts.parquet")
+    )
+    n_turns = turns.count()
+    warm_python_workers(spark, 128)
+
+    laps: dict[str, float] = {}
+
+    def lap(label: str, fn):
+        # fn constructs AND materializes inside the timer: some operators
+        # (eager candidate checkpoints) do their work at construction
+        print(f"# stage {label} ...", file=sys.stderr, flush=True)
+        t0 = time.time()
+        out = fn()
+        laps[label] = round(time.time() - t0, 2)
+        print(f"# stage {label}: {laps[label]}s", file=sys.stderr, flush=True)
+        return out
+
+    with session_cache() as cache:
+        kept = {}
+
+        def store(name, compute):
+            # keep each stage, and fill it inside its own lap
+            def keep():
+                kept[name] = cache(name, compute)
+                kept[name].count()
+                return kept[name]
+
+            return lap(name, keep)
+
+        docs = store("documents", lambda: assemble_documents(turns))
+        cascade(docs, cfg, store)
+
+        reps = store(
+            "reps", lambda: representatives(docs, kept["exact_clusters"], cfg)
+        )
+        n_reps = reps.count()
+        # the SimHash screen signs the reps itself: the cascade's signatures
+        # carry no simhash
+        simsigs = store(
+            "simhash_signatures", lambda: compute_signatures(reps, cfg, ("simhash",))
+        )
+        lap(
+            "simhash_auto",
+            lambda: simhash_candidates(simsigs, cfg, n_docs=n_reps).count(),
+        )
+        lap(
+            "simhash_pairs_forced",
+            lambda: simhash_candidates(simsigs, cfg, n_docs=None).count(),
+        )
+        lap(
+            "ngram_capped",
+            lambda: jaccard_pairs(
+                reps, "conv_id", "doc", n=5, tau=cfg.tau, max_doc_freq=200
+            ).count(),
+        )
+    out = {
+        "num_convs": num_convs,
+        "turns": n_turns,
+        "n_reps": n_reps,
+        "stages": laps,
+        "total": round(sum(laps.values()), 2),
+    }
+    spark.stop()
+    return out
+
+
+def rehearsal(small: int) -> None:
+    """Best-of-K stage laps at ``small`` and ``10 * small`` conversations,
+    printed as a markdown slope table for BENCH/BASELINE.md."""
+    lo, hi = (best_of(["--rehearsal", "--size", str(n)], "total") for n in (small, small * 10))
+    print("\n| stage | t(1x) s | t(10x) s | slope (ideal ~10) |")
+    print("|---|---|---|---|")
+    for k in lo["stages"]:
+        ts, tb = lo["stages"][k], hi["stages"][k]
+        slope = tb / ts if ts > 0 else float("nan")
+        flag = " **superlinear**" if slope > 13 else ""
+        print(f"| {k} | {ts} | {tb} | {slope:.1f}{flag} |")
+    print(f"| TOTAL | {lo['total']} | {hi['total']} | {hi['total'] / lo['total']:.1f} |")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--run", type=int, default=None, help="single run at N cores")
+    ap.add_argument(
+        "--rehearsal", action="store_true", help="10x per-stage scaling slopes"
+    )
+    ap.add_argument("--small", type=int, default=40_000, help="rehearsal: smaller size")
+    ap.add_argument("--size", type=int, default=None, help="rehearsal: single run")
     args = ap.parse_args()
 
-    ensure_fixture()
+    if args.rehearsal:
+        if args.size:
+            ensure_fixture(args.size)
+            print(json.dumps(run_stages(args.size)))
+        else:
+            rehearsal(args.small)
+        return
+
+    ensure_fixture(NUM_CONVS)
     if args.run:
         print(json.dumps(run_once(args.run)))
         return
 
-    # K runs per leg, keep the fastest: this sandbox VM's wall times vary
-    # up to 2x run-to-run (noisy IO/scheduling); min-of-K is the standard
-    # noise-robust estimator for a deterministic workload
     # Default pair N=1 -> 4N=4 cores (the driver's rule: "two parallelism
     # levels (e.g. local[8] and local[32], or N and 4N cores)"): the ONLY
     # pair on this box where adding compute does not also dilute per-core
@@ -171,19 +313,7 @@ def main() -> None:
     legs = tuple(
         int(x) for x in os.environ.get("SPARK_GRAFT_LEGS", "1,4").split(",")
     )
-    results = {}
-    for cores in legs:
-        best = None
-        for _ in range(NUM_RUNS):
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--run", str(cores)],
-                capture_output=True, text=True, check=True, cwd=REPO,
-            )
-            r = json.loads(out.stdout.strip().splitlines()[-1])
-            print(json.dumps(r))
-            if best is None or r["seconds"] < best["seconds"]:
-                best = r
-        results[cores] = best
+    results = {cores: best_of(["--run", str(cores)], "seconds") for cores in legs}
 
     lo, hi = sorted(results)
     t_n, t_4n = results[lo]["seconds"], results[hi]["seconds"]

@@ -16,7 +16,6 @@ from cpdd_spark.codecs import (
     decode_png,
     encode_bmp,
     encode_png,
-    resize_nearest,
 )
 
 
@@ -208,20 +207,6 @@ def test_bmp_corruption_detected():
     hdr[28] = 8
     with pytest.raises(CodecError, match="bpp"):
         decode_bmp(bytes(hdr))
-
-
-def test_resize_nearest_shapes_and_identity():
-    rng = np.random.default_rng(11)
-    a = rng.integers(0, 256, size=(6, 4, 3), dtype=np.uint8)
-    assert np.array_equal(resize_nearest(a, 4, 6), a)  # same-size identity
-    up = resize_nearest(a, 8, 12)
-    assert up.shape == (12, 8, 3)
-    # 2x nearest upsample == pixel repetition
-    assert np.array_equal(up, np.repeat(np.repeat(a, 2, axis=0), 2, axis=1))
-    down = resize_nearest(a, 2, 3)
-    assert down.shape == (3, 2, 3)
-    with pytest.raises(CodecError):
-        resize_nearest(a, 0, 2)
 
 
 def test_pnm_roundtrip_and_header_parsing():

@@ -17,7 +17,14 @@ from cpdd_spark.similarity import (
     cosine_topk,
     lsh_topk,
 )
-from cpdd_spark.textfuncs import profile
+from cpdd_spark.textfuncs import (
+    fingerprint,
+    lang_id,
+    punct_count,
+    quality_from_counts,
+    stopword_count,
+    token_count,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,7 +40,17 @@ def embs(spark):
 
 
 def test_textfuncs_profile(spark, docs):
-    pdf = profile(docs).toPandas()
+    c = F.col("text")
+    pdf = docs.select(
+        "text",
+        token_count(c).alias("n_tokens"),
+        punct_count(c).alias("n_punct"),
+        quality_from_counts(
+            F.length(c), token_count(c), stopword_count(c), punct_count(c)
+        ).alias("quality"),
+        lang_id(c).alias("lang_pred"),
+        fingerprint(c).alias("fingerprint"),
+    ).toPandas()
     for _, r in pdf.head(50).iterrows():
         toks = r["text"].split(" ") if r["text"] else []
         assert r["n_tokens"] == len(toks)
@@ -46,7 +63,7 @@ def test_textfuncs_profile(spark, docs):
 def test_token_count_matches_duckdb(spark, docs):
     got = {
         r["doc_id"]: r["n_tokens"]
-        for r in profile(docs).select("doc_id", "n_tokens").collect()
+        for r in docs.select("doc_id", token_count("text").alias("n_tokens")).collect()
     }
     con = duckdb.connect()
     exp = dict(
@@ -187,10 +204,8 @@ def test_embed_dup_pairs_plan_has_no_cartesian(spark):
 def test_multimodal_plumbing(spark, docs):
     from cpdd_spark.codecs import CodecError, encode_png
     from cpdd_spark.multimodal import (
-        attach_payload,
         decode_image,
         extract_features,
-        frame_sample,
         text_to_image_media,
     )
 
@@ -208,7 +223,10 @@ def test_multimodal_plumbing(spark, docs):
         assert r["width"] == 32 and r["height"] >= 1 and r["channels"] in (1, 3)
 
     # non-image payloads (raw text bytes) sniff unknown -> NULL features
-    raw = attach_payload(docs.limit(5), "doc_id", "text")
+    raw = spark.createDataFrame(
+        [(str(r["doc_id"]), r["text"].encode("utf-8")) for r in docs.limit(5).collect()],
+        "media_id string, payload binary",
+    )
     for r in extract_features(raw).collect():
         assert r["format"] == "unknown" and r["features"] is None
 
@@ -236,30 +254,12 @@ def test_multimodal_plumbing(spark, docs):
     with pytest.raises(pyspark.errors.PySparkException):
         extract_features(bad_media, strict=True).collect()
 
-    frames = frame_sample(media, every_n=64, max_frames=4)
-    fr = frames.collect()
-    assert all(f["frame_idx"] < 4 for f in fr)
-
-    # frames must be the payload's ACTUAL bytes (a binary->string cast
-    # would mangle every non-UTF-8 byte to U+FFFD): check byte-for-byte
-    # against Python slicing on real PNG payloads, which are guaranteed
-    # non-UTF-8 (zlib streams)
-    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    assert fr, "no frames sampled"
-    for f in fr:
-        expect = payloads[f["media_id"]][f["frame_idx"] * 64 : f["frame_idx"] * 64 + 64]
-        assert bytes(f["frame"]) == expect
-
 
 def test_audio_plumbing(spark, docs):
     """Audio modality twin of test_multimodal_plumbing: text renders
     into genuine PCM16 WAV containers, and the feature kernel's decoded
     numbers match an independent numpy computation on the same bytes."""
-    from cpdd_spark.multimodal import (
-        audio_features,
-        attach_payload,
-        text_to_audio_media,
-    )
+    from cpdd_spark.multimodal import audio_features, text_to_audio_media
     from cpdd_spark.wav import decode_wav
 
     media = text_to_audio_media(docs.limit(30), "doc_id", "text")
@@ -286,7 +286,10 @@ def test_audio_plumbing(spark, docs):
         assert (samples[:, 0] >> 8).astype(np.int16).min() >= -128
 
     # non-WAV payloads (raw text bytes) -> NULL features, loud in strict
-    raw = attach_payload(docs.limit(5), "doc_id", "text", kind="audio")
+    raw = spark.createDataFrame(
+        [(str(r["doc_id"]), r["text"].encode("utf-8")) for r in docs.limit(5).collect()],
+        "media_id string, payload binary",
+    )
     for r in audio_features(raw).collect():
         assert r["format"] == "unknown" and r["rms"] is None
     import pyspark.errors
@@ -298,7 +301,7 @@ def test_audio_plumbing(spark, docs):
 def test_repetition_and_token_freq(spark):
     """Hand-computable repetition fractions + vocabulary counting with a
     deterministic tie-broken top-k cut."""
-    from cpdd_spark.textfuncs import ngram_repetition, token_frequencies, ws_tokens
+    from cpdd_spark.textfuncs import repetition_profile, token_frequencies
 
     df = spark.createDataFrame(
         [
@@ -309,15 +312,9 @@ def test_repetition_and_token_freq(spark):
         ],
         "doc_id long, text string",
     )
-    toks = df.select("doc_id", ws_tokens(F.col("text")).alias("__t"))
-    t = F.col("__t")
     out = {
-        r["doc_id"]: r
-        for r in toks.select(
-            "doc_id",
-            ngram_repetition(t, 2).alias("b"),
-            ngram_repetition(t, 3).alias("g"),
-        ).collect()
+        r["doc_id"]: {"b": r["bigram_rep"], "g": r["trigram_rep"]}
+        for r in repetition_profile(df, "doc_id", "text").collect()
     }
     assert out[1]["b"] == (5 - 2) / 5
     assert out[2]["b"] == 0.0 and out[2]["g"] == 0.0
@@ -435,9 +432,9 @@ def test_ivf_centroids_deterministic_and_normalized(spark, embs):
 
 def test_multimodal_format_sniff_and_entropy(spark):
     """The byte-level multimodal features are REAL (no codec): magic-byte
-    container detection (JVM expression and Arrow kernel must agree) and
-    Shannon entropy with its analytic anchors."""
-    from cpdd_spark.multimodal import byte_entropy, extract_features, format_col
+    container detection inside the feature kernel and Shannon entropy with
+    its analytic anchors."""
+    from cpdd_spark.multimodal import byte_entropy, extract_features
 
     from cpdd_spark.codecs import encode_bmp
 
@@ -452,23 +449,14 @@ def test_multimodal_format_sniff_and_entropy(spark):
         ("gif", b"GIF89a" + b"\x00" * 16, "gif"),
         ("bmp", encode_bmp(np.zeros((2, 2, 3), dtype=np.uint8)), "bmp"),
     ]
-    from pyspark.sql import functions as F
-
     media = spark.createDataFrame(
         [(k, p) for k, p, _ in payloads], "media_id string, payload binary"
     )
-    # JVM expression path
-    jvm = {
-        r["media_id"]: r["fmt"]
-        for r in media.select("media_id", format_col(F.col("payload")).alias("fmt")).collect()
-    }
-    # Arrow kernel path (inside extract_features)
     kern = {
         r["media_id"]: r["format"]
         for r in extract_features(media).collect()
     }
     for k, _, want in payloads:
-        assert jvm[k] == want, (k, jvm[k])
         assert kern[k] == want, (k, kern[k])
 
     # entropy anchors: constant bytes -> 0; uniform 0..255 -> exactly 8
@@ -550,69 +538,3 @@ def test_stratified_sample_consistent_with_late_arrivals(spark):
     en = [d for d in whole if langs[d] == "en"]
     other = [d for d in whole if langs[d] == "other"]
     assert len(en) / (2000 / 3) > 0.4 and len(other) / (2000 * 2 / 3) < 0.2
-
-
-def test_multimodal_resize_and_pool_plumbing(spark):
-    """resize_media: REAL decode -> nearest-neighbor resample -> PNG
-    re-encode over genuine containers; avg_pool_features: pure-JVM pooling
-    matches numpy."""
-    import numpy as np
-
-    import pytest as _pytest
-
-    from cpdd_spark.codecs import CodecError, decode_png
-    from cpdd_spark.multimodal import (
-        avg_pool_features,
-        extract_features,
-        resize_image,
-        resize_media,
-        text_to_image_media,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "hello world " * 40), (2, "xyz")], "doc_id long, text string"
-    )
-    media = text_to_image_media(docs, "doc_id", "text")
-    out = resize_media(media, width=8, height=4).collect()
-    for r in out:
-        arr = decode_png(bytes(r["payload"]))  # output is a REAL PNG
-        assert arr.shape[:2] == (4, 8)
-        assert (r["meta"]["width"], r["meta"]["height"]) == (8, 4)
-    with _pytest.raises(CodecError):
-        # lossy VP8 WebP refuses loudly; lossless VP8L resizes for real
-        resize_image(b"RIFF\x24\x00\x00\x00WEBPVP8 " + b"\x00" * 8, 2, 2)
-    from cpdd_spark.webp import encode_webp
-
-    wp = resize_image(
-        encode_webp(np.arange(96, dtype=np.uint8).reshape(8, 12)), 6, 4
-    )
-    assert decode_png(wp).shape[:2] == (4, 6)
-    with _pytest.raises(CodecError):
-        resize_image(b"\xff\xd8\xff\xe0" + b"\x00" * 8, 2, 2)  # malformed jpeg
-    with _pytest.raises(CodecError):
-        resize_image(b"GIF89a" + b"\x00" * 8, 2, 2)  # malformed gif
-
-    # resize agrees with the standalone kernel: decode -> resample ->
-    # re-encode of the same source payload is byte-identical
-    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    for r in out:
-        assert bytes(r["payload"]) == resize_image(src[r["media_id"]], 8, 4)
-
-    feats = extract_features(media)
-    pooled = {r["media_id"]: r["pooled"] for r in avg_pool_features(feats).collect()}
-    raw = {r["media_id"]: np.array(r["features"]) for r in feats.collect()}
-    for mid, p in pooled.items():
-        expect = raw[mid].reshape(-1, 4).mean(axis=1)
-        assert np.allclose(np.array(p), expect, atol=1e-6), mid
-    # JVM-only pooling: no Python stage beyond the feature kernel itself
-    plan = avg_pool_features(
-        feats.localCheckpoint(eager=True)
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" not in plan
-
-    # empty feature vector pools to an EMPTY array, not [null, null]
-    # (sequence(0, -1) descends in Spark; the guard diverts it)
-    empty = spark.createDataFrame(
-        [("e", [])], "media_id string, features array<float>"
-    )
-    assert avg_pool_features(empty).collect()[0]["pooled"] == []

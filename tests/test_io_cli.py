@@ -177,6 +177,24 @@ def test_human_bytes_ladder(spark):
     assert got == ["0 B", "512 B", "1.5 KiB", "5.0 MiB", "3.0 GiB", "2.0 TiB"]
 
 
+# ---- session defaults fit the host ------------------------------------------
+
+def test_driver_memory_default_fits_host(spark):
+    """The default ``spark.driver.memory`` is derived from the host's
+    physical memory: at least 1g, at most what the host has. The running
+    session uses it unless ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    import os
+
+    from cpdd_spark.session import default_driver_memory
+
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem = default_driver_memory()
+    assert mem.endswith("g") and int(mem[:-1]) >= 1, mem
+    assert int(mem[:-1]) << 30 <= phys, (mem, phys)
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        assert spark.conf.get("spark.driver.memory") == mem
+
+
 # ---- R19: CLI driver --------------------------------------------------------
 
 def test_cli_end_to_end(spark, turns_df, tmp_path, capsys):

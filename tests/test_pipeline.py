@@ -117,6 +117,21 @@ def test_metrics_and_lineage_written(spark, turns_df, workdir):
         assert sum(model) == by_metrics[stage] == pipe.io.read(stage).count(), stage
 
 
+def test_run_ids_read_back_as_strings(spark, turns_df, workdir):
+    """``run_id`` reads back from the metrics and lineage tables as the
+    exact string each run wrote, also when every id in a table looks like
+    a number (inferred, ``1234e5678901`` reads as the double ``inf`` and
+    ``000000000042`` as the long 42)."""
+    ids = ["1234e5678901", "000000000042"]
+    for run_id in ids:
+        pipe = DedupPipeline(spark, workdir, CFG, enable_substring=False)
+        pipe.run_id = run_id
+        pipe.run(turns_df, resume=False)
+    for table in ("metrics", "lineage"):
+        got = pipe.io.read(table).select("run_id").distinct().collect()
+        assert sorted(r["run_id"] for r in got) == sorted(ids), (table, got)
+
+
 def test_record_jobs_per_run(spark, turns_df, workdir, count_jobs, monkeypatch):
     """Stage bookkeeping is collected on the driver and written once per
     run: one ``_record`` call of at most 2 Spark jobs (the lineage append

@@ -292,21 +292,10 @@ def _drive_assembly(spark, tmp_path, make_stream):
     return {r["conv_id"]: (r["n_turns"], r["doc"]) for r in out.collect()}
 
 
-def test_assemble_stream_session_window(spark, tmp_path):
-    """Built-in watermark + session_window assembly: out-of-order and
-    cross-batch turns of one conversation emit ONE document, identical to
-    the batch assembler's semantics."""
-    from cpdd_spark.streaming import assemble_stream
-
-    got = _drive_assembly(
-        spark, tmp_path, lambda s: assemble_stream(s, gap="5 minutes")
-    )
-    assert got.get("a") == (3, "first part\nmiddle part\nlate part"), got
-
-
 def test_assemble_stream_stateful(spark, tmp_path):
-    """applyInPandasWithState assembly (EventTimeTimeout): same contract,
-    one persistent state per conv_id."""
+    """applyInPandasWithState assembly (EventTimeTimeout): out-of-order and
+    cross-batch turns of one conversation emit ONE document, identical to
+    the batch assembler's semantics; one persistent state per conv_id."""
     from cpdd_spark.streaming import assemble_stream_stateful
 
     got = _drive_assembly(
