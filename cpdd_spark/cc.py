@@ -26,14 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Exact CC on the driver — one Arrow collect, vectorized NumPy solve.
-
-    Only used below the byte bound: the dup-pair edge list is typically
-    orders of magnitude smaller than the corpus (pairs are O(duplicates),
-    not O(documents)), and at that size 8-10 distributed label-propagation
-    jobs cost more in scheduling latency than one collect. Above the bound
-    the distributed loop takes over — the 100 TB path never collects.
+def min_labels(a, b):
+    """Connected components of the edge list ``(a[i], b[i])`` on the
+    driver: ``(ids, labels)`` where ``ids`` holds the sorted distinct ids
+    and ``labels[i]`` the minimum id of ``ids[i]``'s component.
 
     Every step is vectorized (this hop is SERIAL time in the pipeline —
     a per-edge Python loop measured ~2-3 s at 400k edges, this ~0.2 s):
@@ -41,22 +37,13 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     order == lexicographic id order, then min-label propagation with full
     pointer jumping per sweep converges in O(log n) O(E) sweeps to the
     min-id root of each component — the same first-match-wins convention
-    as everywhere else.
+    as everywhere else. A self-edge ``(v, v)`` makes ``v`` a vertex.
     """
-    spark = edges.sparkSession
     import numpy as np
-    import pandas as pd
 
-    # Arrow-batched collect: toLocalIterator deserializes row-at-a-time and
-    # measured ~10s for 330k edges; toPandas is ~1s for the same
-    pdf = edges.select("a", "b").toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame([], "conv_id string, cluster_id string")
-    ua = pdf["a"].to_numpy()
-    ub = pdf["b"].to_numpy()
-    uniq = np.unique(np.concatenate([ua, ub]))  # sorted: code order == id order
-    ca = np.searchsorted(uniq, ua)
-    cb = np.searchsorted(uniq, ub)
+    uniq = np.unique(np.concatenate([a, b]))  # sorted: code order == id order
+    ca = np.searchsorted(uniq, a)
+    cb = np.searchsorted(uniq, b)
     lab = np.arange(len(uniq), dtype=np.int64)
     while True:
         before = lab.copy()
@@ -70,11 +57,31 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             lab = nxt
         if np.array_equal(lab, before):
             break
+    return uniq, uniq[lab]
+
+
+def _driver_union_find(edges: DataFrame) -> DataFrame:
+    """Exact CC on the driver — one Arrow collect, :func:`min_labels`.
+
+    Only used below the byte bound: the dup-pair edge list is typically
+    orders of magnitude smaller than the corpus (pairs are O(duplicates),
+    not O(documents)), and at that size 8-10 distributed label-propagation
+    jobs cost more in scheduling latency than one collect. Above the bound
+    the distributed loop takes over — the 100 TB path never collects.
+    """
+    spark = edges.sparkSession
+    import pandas as pd
+
+    # Arrow-batched collect: toLocalIterator deserializes row-at-a-time and
+    # measured ~10s for 330k edges; toPandas is ~1s for the same
+    pdf = edges.select("a", "b").toPandas()
+    if len(pdf) == 0:
+        return spark.createDataFrame([], "conv_id string, cluster_id string")
+    ids, labels = min_labels(pdf["a"].to_numpy(), pdf["b"].to_numpy())
     # ship the result back through Arrow (pandas input) — the list-of-tuples
     # createDataFrame path pickles row-by-row (~3-4 s at 400k vertices vs
     # <1 s via Arrow)
-    out = pd.DataFrame({"conv_id": uniq, "cluster_id": uniq[lab]})
-    return spark.createDataFrame(out)
+    return spark.createDataFrame(pd.DataFrame({"conv_id": ids, "cluster_id": labels}))
 
 
 # Driver path bound, in BYTES (not rows): the collect materializes

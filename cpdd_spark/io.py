@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import os
 from contextlib import closing
+from collections.abc import Container
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +67,71 @@ def _part_files(path: str) -> list[str]:
         walk = os.walk(path.removeprefix("file://"))
         found = [os.path.join(d, f) for d, _, files in walk for f in files]
     return sorted(f for f in found if f.endswith(".parquet"))
+
+
+class Footer(NamedTuple):
+    """What a parquet part file's footer says about its rows."""
+
+    rows: int
+    columns: frozenset[str]  # top-level column names
+    # null count of the flat column asked for, summed over the row groups'
+    # statistics: None when a row group records none, 0 when the column is
+    # absent, nested or not asked for (a list leaf's null count also counts
+    # empty lists, so it is not read)
+    nulls: int | None
+
+
+def part_footers(
+    path: str, column: str | None = None, skip: Container[str] = ()
+) -> dict[str, Footer]:
+    """The footer of each parquet part file under ``path`` that is not in
+    ``skip``, by file path in path order, read on the driver: no Spark job
+    over the rows. ``column`` names the flat column whose null count to sum.
+
+    A local file is read with ``pyarrow.parquet.read_metadata`` (the
+    driver already imports pyarrow for every ``mapInPandas``); a remote one
+    (hdfs://, s3a://, ...) through the JVM Hadoop FileSystem and
+    parquet-hadoop. A zero-row table commits one empty part file, whose
+    footer reads 0 rows."""
+    files = [f for f in _part_files(path) if f not in skip]
+    out = {}
+    if not _is_remote(path):
+        import pyarrow.parquet as pq
+
+        for f in files:
+            meta = pq.read_metadata(f)
+            groups = [meta.row_group(i) for i in range(meta.num_row_groups)]
+            stats = [
+                g.column(j).statistics
+                for j in range(meta.num_columns)
+                if meta.schema.column(j).path == column
+                for g in groups
+            ]
+            nulls = [s.null_count if s is not None and s.has_null_count else None for s in stats]
+            out[f] = Footer(meta.num_rows, frozenset(meta.schema.to_arrow_schema().names), _sum(nulls))
+        return out
+    spark = SparkSession.getActiveSession()
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    parquet = jvm.org.apache.parquet.hadoop
+    for f in files:
+        file = parquet.util.HadoopInputFile.fromPath(jvm.org.apache.hadoop.fs.Path(f), conf)
+        with closing(parquet.ParquetFileReader.open(file)) as reader:
+            footer = reader.getFooter()
+            fields = footer.getFileMetaData().getSchema().getFields()
+            stats = [
+                c.getStatistics()
+                for block in footer.getBlocks()
+                for c in block.getColumns()
+                if c.getPath().toDotString() == column
+            ]
+            nulls = [s.getNumNulls() if s is not None and s.isNumNullsSet() else None for s in stats]
+            names = frozenset(t.getName() for t in fields)
+            out[f] = Footer(reader.getRecordCount(), names, _sum(nulls))
+    return out
+
+
+def _sum(counts: list[int | None]) -> int | None:
+    return None if None in counts else sum(counts)
 
 
 class TableIO:
@@ -128,32 +195,14 @@ class TableIO:
         """Row count of each committed part file of table ``name``, in path
         order, read from the files' metadata: no Spark job over the rows.
 
-        - a local parquet table: each part file's footer through
-          ``pyarrow.parquet.read_metadata`` (the driver already imports
-          pyarrow for every ``mapInPandas``);
-        - a remote parquet table (hdfs://, s3a://, ...): the footers
-          through the JVM Hadoop FileSystem and parquet-hadoop;
+        - a parquet table (local or remote): :func:`part_footers`;
         - Iceberg: ``record_count`` of the table's ``files`` metadata table
           (a catalog read; this branch cannot run offline, no runtime jar).
-
-        A zero-row table commits one empty part file, whose footer reads 0.
         """
         if self.iceberg:
             files = self.spark.sql(f"SELECT record_count FROM cpdd.{name}.files ORDER BY file_path")
             return [r[0] for r in files.collect()]
-        path = self.path(name)
-        if not _is_remote(path):
-            import pyarrow.parquet as pq
-
-            return [pq.read_metadata(f).num_rows for f in _part_files(path)]
-        jvm, conf = self.spark._jvm, self.spark._jsc.hadoopConfiguration()
-        parquet = jvm.org.apache.parquet.hadoop
-        rows = []
-        for f in _part_files(path):
-            file = parquet.util.HadoopInputFile.fromPath(jvm.org.apache.hadoop.fs.Path(f), conf)
-            with closing(parquet.ParquetFileReader.open(file)) as reader:
-                rows.append(reader.getRecordCount())
-        return rows
+        return [f.rows for f in part_footers(self.path(name)).values()]
 
     def _write_parquet(
         self, df: DataFrame, name: str, mode: str, partition_by: list[str] | None

@@ -18,12 +18,12 @@ documents upstream of the same probe.
 The stream's state is three parquet tables with one declared schema each:
 :data:`CLUSTERS_SCHEMA`, and the near index's :data:`INDEX_DOCS_SCHEMA` and
 :data:`INDEX_BANDS_SCHEMA`. Every batch reads them with that schema, so a
-read is a directory listing and no Spark job. A directory in an older
-layout is not migrated: the batch fails, before any table gains a row, with
-an error naming the rebuild (:data:`REBUILD_COMMAND`). The rebuild replays
-the turn files into fresh directories in the batches they arrived in, which
-reproduces the assignments because the dedup rules are first-match-wins
-and min-conv_id.
+read is a directory listing plus the part files' footers, and no Spark
+job. A directory in an older layout is not migrated: the footers show it
+and the batch fails, before its first job, with an error naming the
+rebuild (:data:`REBUILD_COMMAND`). The rebuild replays the turn files into
+fresh directories in the batches they arrived in, which reproduces the
+assignments because the dedup rules are first-match-wins and min-conv_id.
 """
 
 from __future__ import annotations
@@ -36,8 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cpdd_spark.assemble import assemble_documents
-from cpdd_spark.cc import connected_components
+from cpdd_spark.cc import min_labels
 from cpdd_spark.config import DedupConfig
+from cpdd_spark.io import part_footers
 from cpdd_spark.lsh import band_buckets, pairs_from_buckets
 from cpdd_spark.signatures import compute_signatures, minhash_from_sets
 from cpdd_spark.verify import verify_pairs_sets
@@ -50,6 +51,7 @@ CLUSTERS_SCHEMA = (
     "conv_id string, n_turns long, doc_len long, md5 string, xxh64 long, "
     "cluster_id string"
 )
+CLUSTERS_COLUMNS = [c.split()[0] for c in CLUSTERS_SCHEMA.split(", ")]
 INDEX_DOCS_SCHEMA = "conv_id string, shingles array<bigint>, cluster_id string"
 INDEX_BANDS_SCHEMA = "conv_id string, band_id int, band_hash int"
 # state table -> (declared schema, the column an older layout lacks)
@@ -70,6 +72,10 @@ def _has_parquet(d: str) -> bool:
         return False
 
 
+def _footer_rows(path: str) -> int:
+    return sum(f.rows for f in part_footers(path).values())
+
+
 class IncrementalDedup:
     """Streaming exact and near dedup into a clusters directory.
 
@@ -86,10 +92,19 @@ class IncrementalDedup:
     distinct shingle-hash set, never its text) and ``bands`` its ``(conv_id,
     band_id, band_hash)`` rows. Verification is pure JVM
     (``verify_pairs_sets``: ``array_intersect`` over the stored sets), the
-    same shape as the batch pipeline's verify. The probe is an equi-join on
-    ``(band_id, band_hash)``, so per-batch cost is O(batch x band
-    collisions), never O(index); at 10^12 turns the directories become
-    Iceberg tables bucketed on ``band_hash`` / ``conv_id``.
+    same shape as the batch pipeline's verify.
+
+    A near-tier batch runs six actions: the docs checkpoint (its one Python
+    pass), the exact tier's checkpoint, one driver collect of the verified
+    edges and links (components and anchors resolve on the driver, the
+    result returns as one Arrow frame), and the bands, docs and clusters
+    appends; a batch without the near tier runs the docs checkpoint and
+    the clusters append. Every join with stored state broadcasts the batch
+    side, so per-batch shuffle is O(batch x band collisions); the stored
+    tables are still scanned, so per-batch input stays O(index) until the
+    directories are bucketed on their join keys (``band_hash`` /
+    ``conv_id``, Iceberg tables at 10^12 turns) and a scan prunes to the
+    buckets a batch holds.
 
     The state is re-read from disk every batch rather than kept as
     checkpointed frames, because a checkpointed leaf keeps its origin plan's
@@ -114,35 +129,43 @@ class IncrementalDedup:
         self.clusters_dir = clusters_dir
         self.near_index_dir = near_index_dir
         self.cfg = cfg or DedupConfig()
-        # wall seconds of the last batch per phase (docs_ckpt, exact_out,
-        # sigs_kernel, cc, resolve, index_append, clusters_append, total):
-        # perf_counter reads around actions the batch runs anyway
+        # wall seconds of the last batch per phase: docs_ckpt, exact_out,
+        # resolve (the one collect), cc (the driver resolve and its Arrow
+        # frame), index_append, clusters_append, total; perf_counter reads
+        # around actions the batch runs anyway
         self.last_timings: dict[str, float] = {}
+        # part files whose footers passed the older-layout check: a part
+        # file is never rewritten, so each batch reads only new footers
+        self._checked: set[str] = set()
 
     def _read_state(self, path: str, table: str) -> DataFrame:
         """State ``table`` at ``path``, read with its declared schema: a
-        listing, no job.
+        listing plus the part files' footers on the driver, no job.
 
         The column an older layout lacks (``xxh64`` in md5-only clusters
-        rows, ``shingles`` in raw-text index docs) is read as
-        ``coalesce(col, raise_error(..))``, so the first job of the batch
-        that reads such a row fails before any table gains a row: the exact
-        probe's aggregate reads every clusters row, and the verify exchange
-        every index docs row."""
+        rows, ``shingles`` in raw-text index docs) must be in every part
+        file's schema, and a flat one must have a footer null count of 0
+        (a list column's leaf null count also counts empty sets, so only
+        its presence is checked). Otherwise the batch fails here, before
+        its first job, whether or not any candidate of the batch would
+        read the offending rows. Footers that passed are remembered, so a
+        batch reads only those of the part files appended since."""
         schema, required = STATE_TABLES[table]
-        df = self.spark.read.schema(schema).parquet(path)
-        if required is None:
-            return df
-        msg = (
-            f"{path} has rows without {required}, an older stream state "
-            "layout. Rebuild the state by replaying the turn files into "
-            "fresh directories with one run of "
-            f"{REBUILD_COMMAND} (plus --near-index <fresh> for a near index) "
-            "per original batch, adding that batch's files to <turns dir> "
-            "before each run: the CLI drains up to 8 files per batch, and "
-            "files merged into one batch can pick different canonicals"
-        )
-        return df.withColumn(required, F.coalesce(required, F.raise_error(msg)))
+        if required is not None:
+            footers = part_footers(path, required, skip=self._checked)
+            if any(required not in f.columns or f.nulls != 0 for f in footers.values()):
+                raise ValueError(
+                    f"{path} has rows without {required}, an older stream "
+                    "state layout. Rebuild the state by replaying the turn "
+                    "files into fresh directories with one run of "
+                    f"{REBUILD_COMMAND} (plus --near-index <fresh> for a "
+                    "near index) per original batch, adding that batch's "
+                    "files to <turns dir> before each run: the CLI drains up "
+                    "to 8 files per batch, and files merged into one batch "
+                    "can pick different canonicals"
+                )
+            self._checked.update(footers)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _existing(self) -> DataFrame | None:
         if not _has_parquet(self.clusters_dir):
@@ -159,14 +182,6 @@ class IncrementalDedup:
     def process_docs(self, documents: DataFrame, batch_id: int = 0) -> None:
         t_start = time.perf_counter()
         self.last_timings = {}
-        # release a cache leaked by a batch that failed between the near
-        # tier's persist and the clusters append (the happy path unpersists
-        # at the end of _process_docs_inner; a raise in between would
-        # otherwise accumulate executor memory across failed batches)
-        stale = getattr(self, "_batch_persist", None)
-        if stale is not None:
-            stale.unpersist()
-            self._batch_persist = None
         self._process_docs_inner(documents, batch_id)
         self.last_timings["total"] = time.perf_counter() - t_start
 
@@ -181,74 +196,59 @@ class IncrementalDedup:
             .withColumn("xxh64", F.xxhash64("doc"))
         )
         existing = self._existing()
-        if existing is not None:
-            # no-clobber: conversations already assigned are skipped
-            docs = docs.join(
-                existing.select("conv_id"), "conv_id", "left_anti"
-            )
         if self.near_index_dir is not None:
-            # the exact-tier window/probe and the near tier both consume
-            # docs: materialize it once, with the batch's one Python pass
-            # (the minhash + shingle-set kernel) fused in as passthrough
-            # columns, so no later plan of the batch starts a Python worker.
-            # Exact duplicates get signed too; a fresh-heavy batch wastes
-            # nothing by it.
+            # read (and layout-check) the index before the batch's first job
+            idx_docs = self._read_index("docs")
+            idx_bands = self._read_index("bands") if idx_docs is not None else None
+            # the batch's one Python pass (the minhash + shingle-set kernel)
+            # rides the docs checkpoint as passthrough columns, so no later
+            # plan of the batch starts a Python worker. Exact duplicates and
+            # replayed conversations get signed too; a fresh-heavy batch
+            # wastes nothing by it.
             docs = compute_signatures(
                 docs, self.cfg, ("minhash", "shingles"),
                 passthrough=["n_turns", "doc_len", "md5", "xxh64", "doc"],
             )
-            t0 = time.perf_counter()
-            docs = docs.localCheckpoint(eager=True)
-            self.last_timings["docs_ckpt"] = time.perf_counter() - t0
-        # within-batch canonical: min conv_id per content (exact tier key).
-        # Without the near tier, window -> probe -> append is one action.
-        grp = Window.partitionBy("n_turns", "doc_len", "md5", "doc")
-        batch_assigned = docs.withColumn(
-            "batch_canon", F.min("conv_id").over(grp)
-        )
-        if existing is not None:
-            # probe the stored assignments on the exact key; the stored
-            # canonical wins (first match wins across time). min(), not
-            # dropDuplicates, so a replayed row never flips an assignment
-            probe = (
-                existing.groupBy(
-                    F.col("n_turns").alias("e_nt"),
-                    F.col("doc_len").alias("e_dl"),
-                    F.col("md5").alias("e_md5"),
-                    F.col("xxh64").alias("e_xxh"),
-                )
-                .agg(F.min("cluster_id").alias("e_cluster"))
-            )
-            batch_assigned = batch_assigned.join(
-                probe,
-                (F.col("n_turns") == F.col("e_nt"))
-                & (F.col("doc_len") == F.col("e_dl"))
-                & (F.col("md5") == F.col("e_md5"))
-                & (F.col("xxh64") == F.col("e_xxh")),
-                "left",
-            )
-        else:
-            batch_assigned = batch_assigned.withColumn("e_cluster", F.lit(None))
-        out = batch_assigned.select(
-            "conv_id",
-            "n_turns",
-            "doc_len",
-            "md5",
-            "xxh64",
-            F.coalesce(F.col("e_cluster"), F.col("batch_canon")).alias("cluster_id"),
-        )
-        if self.near_index_dir is not None:
-            out = self._near_resolve(
-                out,
-                docs.select("conv_id", "n_shingles", "minhash", "shingles"),
-            )
+        # materialize docs once, so every join with the stored state can
+        # broadcast the batch's keys without recomputing the batch
         t0 = time.perf_counter()
-        out.write.mode("append").parquet(self.clusters_dir)
+        docs = docs.localCheckpoint(eager=True)
+        self.last_timings["docs_ckpt"] = time.perf_counter() - t0
+        out = self._exact_assign(docs, existing)
+        if self.near_index_dir is not None:
+            out = self._near_resolve(out, idx_docs, idx_bands)
+        t0 = time.perf_counter()
+        out.select(*CLUSTERS_COLUMNS).write.mode("append").parquet(self.clusters_dir)
         self.last_timings["clusters_append"] = time.perf_counter() - t0
-        cached = getattr(self, "_batch_persist", None)
-        if cached is not None:
-            cached.unpersist()
-            self._batch_persist = None
+
+    def _exact_assign(self, docs: DataFrame, existing: DataFrame | None) -> DataFrame:
+        """``docs`` without the conversations already assigned (no-clobber),
+        plus each one's exact-tier ``cluster_id``: the stored canonical of
+        its content if any (first match wins across time), else the
+        minimum conv_id of its content within the batch.
+
+        ``docs`` is materialized, so each join with the stored clusters
+        first semi-joins them on a broadcast of the batch's keys. The
+        stored rows are still scanned, but only those the batch holds
+        reach an exchange."""
+        batch = docs
+
+        def stored(keys: list[str]) -> DataFrame:
+            return existing.join(F.broadcast(batch.select(*keys)), keys, "left_semi")
+
+        if existing is not None:
+            docs = docs.join(stored(["conv_id"]).select("conv_id"), "conv_id", "left_anti")
+        grp = Window.partitionBy("n_turns", "doc_len", "md5", "doc")
+        docs = docs.withColumn("batch_canon", F.min("conv_id").over(grp))
+        if existing is None:
+            return docs.withColumn("cluster_id", F.col("batch_canon"))
+        # min(), not dropDuplicates, so a replayed row never flips an
+        # assignment
+        keys = ["n_turns", "doc_len", "md5", "xxh64"]
+        probe = stored(keys).groupBy(*keys).agg(F.min("cluster_id").alias("e_cluster"))
+        return docs.join(probe, keys, "left").withColumn(
+            "cluster_id", F.coalesce("e_cluster", "batch_canon")
+        )
 
     def _index_dir(self, sub: str) -> str | None:
         """Resolve the on-disk directory for an index table, tolerating a
@@ -276,185 +276,147 @@ class IncrementalDedup:
         path = self._index_dir(sub)
         return self._read_state(path, sub) if path is not None else None
 
-    def _near_resolve(self, out: DataFrame, docs_sigs: DataFrame) -> DataFrame:
+    def _near_resolve(
+        self,
+        out: DataFrame,
+        idx_docs: DataFrame | None,
+        idx_bands: DataFrame | None,
+    ) -> DataFrame:
         """Near-dup tier over the exact tier's output: link this batch's
         FRESH canonicals (cluster_id == conv_id, i.e. content the exact
         probe didn't recognize) to stored near-duplicate representatives,
-        then append the batch's representatives to the index.
+        append the batch's representatives to the index, and return
+        ``out`` with its assignments remapped through the links.
 
-        Python (the fused Arrow signature kernel) runs exactly ONCE per
-        batch — inside the docs checkpoint upstream (``docs_sigs`` is the
-        already-materialized ``(conv_id, n_shingles, minhash, shingles)``
-        projection of it) — so every plan here (band probe,
-        ``verify_pairs_sets``, CC, index append) is pure JVM over stored
-        arrays. No document text enters the index or the probe joins."""
+        ``out`` carries the signature columns of the docs checkpoint, so
+        every plan here (band probe, ``verify_pairs_sets``, index appends)
+        is pure JVM over arrays and no document text enters it. Two actions
+        run here before the index appends:
+
+        1. ``out`` is checkpointed, counting its fresh canonicals;
+        2. ONE collect brings the fresh canonical ids, the verified
+           within-batch edges, the verified cross-batch links ``(a, stored
+           cluster_id)`` and the fresh ids the index already stores (a
+           replay) to the driver, where :func:`resolve_batch` computes
+           components and anchors. The result returns as one Arrow
+           ``createDataFrame``. The collect is O(fresh canonicals +
+           verified pairs) of one micro-batch.
+
+        Each join with the stored index broadcasts the batch side (the band
+        probe, the stored sets, the stored ids): the index is scanned, but
+        only its rows that meet the batch reach an exchange."""
         cfg = self.cfg
 
         t0 = time.perf_counter()
-        # barrier: `out` feeds the fresh-canonical filter, the remap join
-        # and the final write, so it is materialized once. The
-        # fresh-canonical count rides the same action as an Observation.
+        # barrier: `out` feeds the fresh filter, the appends and the remap,
+        # and the fresh-canonical count rides the same action
         obs = Observation()
-        out = out.observe(
+        out = out.select(
+            *CLUSTERS_COLUMNS, "n_shingles", "minhash", "shingles"
+        ).observe(
             obs,
             F.sum(
                 F.when(F.col("cluster_id") == F.col("conv_id"), 1).otherwise(0)
             ).alias("n_fresh"),
         ).localCheckpoint(eager=True)
         self.last_timings["exact_out"] = time.perf_counter() - t0
-        # fresh canonicals' signatures: a slim JVM join of two
-        # checkpointed frames — cheap enough to recompute per consumer
-        t0 = time.perf_counter()
-        sigs = (
-            out.filter(F.col("cluster_id") == F.col("conv_id"))
-            .select("conv_id")
-            .join(docs_sigs, "conv_id")
-        )
-        self.last_timings["sigs_kernel"] = time.perf_counter() - t0
         if (obs.get["n_fresh"] or 0) == 0:
             # pure-duplicate batch: no fresh canonicals, so there is
             # nothing to probe, cluster or index
             self.last_timings["near_skipped"] = 1.0
             return out
-        fresh_sets = sigs.select("conv_id", "shingles")
-        # bands derive from the checkpointed sigs by pure JVM array ops,
-        # cheap enough to recompute per consumer
-        bands = band_buckets(sigs, cfg)
+        fresh = out.filter(F.col("cluster_id") == F.col("conv_id"))
+        fresh_sets = fresh.select("conv_id", "shingles")
+        # bands derive from the checkpoint by pure JVM array ops, cheap
+        # enough to recompute per consumer
+        bands = band_buckets(fresh, cfg)
 
-        # --- cross-batch probe: batch bands vs stored representative bands.
-        # Bands are appended before docs, so stored docs imply stored bands.
-        idx_docs = self._read_index("docs")
-        idx_bands = self._read_index("bands") if idx_docs is not None else None
+        def tagged(kind: str, a: str, b: str | None = None) -> list:
+            return [
+                F.lit(kind).alias("kind"),
+                F.col(a).alias("a"),
+                (F.col(b) if b else F.lit(None).cast("string")).alias("b"),
+            ]
 
-        # --- ONE fused verify over both candidate families (cross-batch
-        # links tagged 'x', within-batch pairs tagged 'w'), persisted
-        batch_pairs = pairs_from_buckets(
-            bands.select("conv_id", "band_id", "band_hash"),
-            ["band_id", "band_hash"],
+        release: list = []
+        within = verify_pairs_sets(
+            pairs_from_buckets(
+                bands.select("conv_id", "band_id", "band_hash"),
+                ["band_id", "band_hash"],
+                cfg,
+                release=release,
+            ),
+            fresh_sets,
             cfg,
-        ).withColumn("src", F.lit("w"))
-        sets = fresh_sets
-        if idx_docs is not None and idx_bands is not None:
+        )
+        collected = fresh.select(*tagged("v", "conv_id")).unionByName(
+            within.select(*tagged("w", "a", "b"))
+        )
+        if idx_docs is not None:
+            # replay: fresh ids the index already stores are not re-appended
+            replayed = idx_docs.join(
+                F.broadcast(fresh.select("conv_id")), "conv_id", "left_semi"
+            )
+            collected = collected.unionByName(replayed.select(*tagged("s", "conv_id")))
+        if idx_bands is not None:
+            # bands are appended before docs, so stored docs imply stored bands
             cand = (
-                bands.select("conv_id", "band_id", "band_hash")
+                idx_bands.select(F.col("conv_id").alias("b"), "band_id", "band_hash")
                 .join(
-                    idx_bands.select(
-                        F.col("conv_id").alias("b"), "band_id", "band_hash"
+                    F.broadcast(
+                        bands.select(F.col("conv_id").alias("a"), "band_id", "band_hash")
                     ),
                     ["band_id", "band_hash"],
                 )
-                .select(F.col("conv_id").alias("a"), "b")
+                .select("a", "b")
                 .distinct()
-                .withColumn("src", F.lit("x"))
             )
-            batch_pairs = batch_pairs.unionByName(cand)
-            sets = fresh_sets.unionByName(
-                idx_docs.select("conv_id", "shingles")
-            )
-        verified = verify_pairs_sets(batch_pairs, sets, cfg).persist()
-        # released by process_docs after the clusters append — the remap
-        # join consumes `final`, whose lineage reads this cache
-        self._batch_persist = verified
-
-        links = None
-        if idx_docs is not None and idx_bands is not None:
-            # min stored cluster across all verified matches: deterministic
-            # under replay and under multi-match
-            links = (
-                verified.filter(F.col("src") == "x")
-                .join(
-                    idx_docs.select(
-                        F.col("conv_id").alias("b"),
-                        F.col("cluster_id").alias("idx_cluster"),
-                    ),
-                    "b",
-                )
-                .groupBy("a")
-                .agg(F.min("idx_cluster").alias("idx_link"))
-            )
-
-        # --- within-batch near-dup components among fresh canonicals
-        batch_edges = verified.filter(F.col("src") == "w").select("a", "b")
+            links = verify_pairs_sets(cand, fresh_sets, cfg, stored=idx_docs)
+            collected = collected.unionByName(links.select(*tagged("x", "a", "cluster_id")))
         t0 = time.perf_counter()
-        comp = connected_components(
-            batch_edges,
-            vertices=fresh_sets.select("conv_id"),
-            # the graph is bounded by the micro-batch size (and the LSH
-            # bucket caps): driver union-find, one Arrow collect
-            strategy="driver",
-        ).withColumnRenamed("cluster_id", "comp_label")
-        self.last_timings["cc"] = time.perf_counter() - t0
-
-        # --- anchor each component on the minimum stored cluster any member
-        # linked to; components with no stored link keep min batch conv_id
-        if links is not None:
-            with_links = comp.join(
-                links.withColumnRenamed("a", "conv_id"), "conv_id", "left"
-            )
-            anchors = with_links.groupBy("comp_label").agg(
-                F.min("idx_link").alias("anchor")
-            )
-            final = comp.join(anchors, "comp_label").select(
-                "conv_id",
-                F.coalesce("anchor", "comp_label").alias("final_cluster"),
-            )
-        else:
-            final = comp.select(
-                "conv_id", F.col("comp_label").alias("final_cluster")
-            )
-        # barrier: `final` feeds three consumers (two index appends + the
-        # remap mapping), each of which would otherwise replay the
-        # links/anchors join pipeline
-        t0 = time.perf_counter()
-        final = final.localCheckpoint(eager=True)
+        try:
+            batch_rows = collected.toPandas()
+        finally:
+            for df in release:
+                df.unpersist()
         self.last_timings["resolve"] = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        final = self.spark.createDataFrame(
+            resolve_batch(batch_rows),
+            "conv_id string, final_cluster string, indexed boolean",
+        )
+        self.last_timings["cc"] = time.perf_counter() - t0
 
         # --- append this batch's representatives to the index, labeled with
         # their FINAL cluster so future probes inherit through chains
         # (B~A stored as cluster A; later C~B links to A even if C !~ A).
-        # Anti-join on already-stored ids: a replay after a crash between
-        # the index append and the clusters append must not duplicate rows
-        # (duplicates would still resolve identically via min(), but the
-        # index should not bloat under retries). Write order matters:
-        # bands FIRST — a crash between the appends then leaves band rows
-        # whose doc rows are missing, and the replay (keyed on stored DOC
-        # conv_ids) re-appends both halves: at worst duplicate band rows,
-        # which the probe's .distinct() absorbs and compact_index removes.
-        # The docs-first order would instead leave reps permanently
-        # band-less (the replay would skip them) — a silent recall hole.
-        rep_docs = fresh_sets.join(final, "conv_id").select(
-            "conv_id", "shingles", F.col("final_cluster").alias("cluster_id")
-        )
-        if idx_docs is not None:
-            rep_docs = rep_docs.join(
-                idx_docs.select("conv_id"), "conv_id", "left_anti"
-            )
-        # rep_docs joins two checkpointed frames (sigs x final) — its two
-        # append consumers recompute that join more cheaply than one more
-        # eager checkpoint action costs
+        # Representatives the index already stores are skipped: a replay
+        # after a crash between the index append and the clusters append
+        # must not duplicate rows (duplicates would still resolve
+        # identically via min(), but the index should not bloat under
+        # retries). Write order matters: bands FIRST — a crash between the
+        # appends then leaves band rows whose doc rows are missing, and the
+        # replay (keyed on stored DOC conv_ids) re-appends both halves: at
+        # worst duplicate band rows, which the probe's .distinct() absorbs
+        # and compact_index removes. The docs-first order would instead
+        # leave reps permanently band-less (the replay would skip them) —
+        # a silent recall hole.
+        new = F.broadcast(final.filter(~F.col("indexed")))
         t0 = time.perf_counter()
-        bands.join(rep_docs.select("conv_id"), "conv_id", "left_semi").write.mode(
+        bands.join(new.select("conv_id"), "conv_id", "left_semi").write.mode(
             "append"
         ).parquet(os.path.join(self.near_index_dir, "bands"))
-        rep_docs.select("conv_id", "shingles", "cluster_id").write.mode(
-            "append"
-        ).parquet(os.path.join(self.near_index_dir, "docs"))
+        fresh_sets.join(new, "conv_id").select(
+            "conv_id", "shingles", F.col("final_cluster").alias("cluster_id")
+        ).write.mode("append").parquet(os.path.join(self.near_index_dir, "docs"))
         self.last_timings["index_append"] = time.perf_counter() - t0
 
         # --- remap the exact tier's assignments through the near links
-        mapping = final.select(
-            F.col("conv_id").alias("m_canon"), "final_cluster"
+        mapping = F.broadcast(
+            final.select(F.col("conv_id").alias("m_canon"), "final_cluster")
         )
-        return (
-            out.join(mapping, out["cluster_id"] == F.col("m_canon"), "left")
-            .select(
-                "conv_id",
-                "n_turns",
-                "doc_len",
-                "md5",
-                "xxh64",
-                F.coalesce("final_cluster", "cluster_id").alias("cluster_id"),
-            )
+        return out.join(mapping, out["cluster_id"] == F.col("m_canon"), "left").withColumn(
+            "cluster_id", F.coalesce("final_cluster", "cluster_id")
         )
 
     def compact_index(self) -> dict[str, int] | None:
@@ -487,15 +449,17 @@ class IncrementalDedup:
         ``__compact``) and the index readers fall back through all three —
         stored representatives are never silently lost. Returns
         ``{"docs_before", "docs_after", "bands_before", "bands_after"}``
-        row counts (None when no index exists)."""
+        row counts, read from the part files' footers (None when no index
+        exists)."""
         import shutil
 
-        idx_docs = self._read_index("docs")
-        if idx_docs is None:
+        docs_path = self._index_dir("docs")
+        if docs_path is None:
             return None
-        idx_bands = self._read_index("bands")
-        docs_before = idx_docs.count()
-        bands_before = idx_bands.count() if idx_bands is not None else 0
+        idx_docs = self._read_state(docs_path, "docs")
+        bands_path = self._index_dir("bands")
+        docs_before = _footer_rows(docs_path)
+        bands_before = _footer_rows(bands_path) if bands_path is not None else 0
 
         one_per_conv = idx_docs.groupBy("conv_id").agg(
             F.min("cluster_id").alias("cluster_id"),
@@ -514,8 +478,7 @@ class IncrementalDedup:
         docs_tmp, bands_tmp = docs_dir + "__compact", bands_dir + "__compact"
         docs.write.mode("overwrite").parquet(docs_tmp)
         bands.write.mode("overwrite").parquet(bands_tmp)
-        n_docs = self._read_state(docs_tmp, "docs").count()
-        n_bands = self._read_state(bands_tmp, "bands").count()
+        n_docs, n_bands = _footer_rows(docs_tmp), _footer_rows(bands_tmp)
         # swap: move the LIVE dir aside first, then promote the compacted
         # one, then delete the old — a crash at any point leaves either the
         # live dir, the __old dir, or the fully-built __compact dir on disk,
@@ -550,8 +513,9 @@ class IncrementalDedup:
         Spark replays uncommitted batches; process_batch's anti-join makes
         replays idempotent). ``max_files_per_trigger`` sets the batching
         granularity: larger batches amortize the per-micro-batch fixed
-        cost (probe plans + index appends), 1 forces one batch per file
-        (the worst-case latency shape; the benchmark's stream_incremental
+        cost (six actions and their broadcasts with the near tier, and
+        scans of the stored tables), 1 forces one batch per file (the
+        worst-case latency shape; the benchmark's stream_incremental
         workload drains its micro-batches that way)."""
         stream = (
             self.spark.readStream.schema(TURNS_SCHEMA)
@@ -600,6 +564,47 @@ class IncrementalDedup:
             .trigger(availableNow=True)
             .start()
         )
+
+
+def resolve_batch(rows):
+    """The near tier's driver resolve over a batch's one collect.
+
+    ``rows`` is a pandas frame of ``(kind, a, b)`` string rows: ``v`` names
+    a fresh canonical ``a``; ``w`` a verified within-batch edge ``a - b``;
+    ``x`` a verified link of fresh ``a`` to the stored cluster ``b``; ``s``
+    a fresh ``a`` the index already stores. Duplicate rows are harmless.
+
+    Returns ``(conv_id, final_cluster, indexed)``, one row per fresh
+    canonical in conv_id order. A component of the ``w`` graph anchors on
+    the minimum stored cluster any member links to, else on its minimum
+    conv_id (first match wins across time, min within a batch);
+    ``indexed`` marks the ``s`` ids."""
+    import numpy as np
+    import pandas as pd
+
+    kind = rows["kind"].to_numpy()
+    fresh = rows["a"].to_numpy()[kind == "v"]
+    edges = rows[kind == "w"]
+    # self-edges make every fresh canonical a vertex
+    ids, comp = min_labels(
+        np.concatenate([fresh, edges["a"].to_numpy()]),
+        np.concatenate([fresh, edges["b"].to_numpy()]),
+    )
+    comp_of = pd.Series(comp, index=ids)
+    links = rows[kind == "x"]
+    anchor = (
+        pd.Series(links["b"].to_numpy(), index=comp_of.loc[links["a"]].to_numpy())
+        .groupby(level=0)
+        .min()
+    )
+    final = pd.Series(comp).map(anchor)
+    return pd.DataFrame(
+        {
+            "conv_id": ids,
+            "final_cluster": final.where(final.notna(), pd.Series(comp)),
+            "indexed": np.isin(ids, rows["a"].to_numpy()[kind == "s"]),
+        }
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -21,10 +21,12 @@ min-of-K runs per leg; wall time measures the job, not JVM boot.
 
 Two data sizes (``--rehearsal``), the 10x scale rehearsal: per-stage
 scaling slopes. Runs the stage ladder on two fixtures whose sizes differ
-by 10x (default 40k vs 400k conversations) on a local[32] session and
-reports per-stage wall seconds plus slope = t_big / t_small (data ratio
-10). A data-linear stage lands near 10 (fixed overheads push small-stage
-slopes BELOW 10); anything above 13 (1.3x data-linear) is flagged. Each
+by 10x (default 40k vs 400k conversations) on a ``local[cores]`` session
+sized to the host's cores (warmed with ``cores x 4`` tasks, as ``--run``
+warms) and reports per-stage wall seconds plus slope = t_big / t_small
+(data ratio 10). A data-linear stage lands near 10 (fixed overheads push
+small-stage slopes BELOW 10); anything above 13 (1.3x data-linear) is
+flagged. Each
 cascade stage is materialized in its own lap, then the SimHash screen
 runs in its AUTO form (the escalation valve picks pairs or triples from
 n_reps) and its FORCED-pair form, so the valve's saving is a measured
@@ -193,8 +195,9 @@ def run_stages(num_convs: int) -> dict:
     from cpdd_spark.signatures import compute_signatures
 
     cfg = DedupConfig(exact_verify="fingerprint")
+    cores = len(os.sched_getaffinity(0))
     spark = get_spark(
-        master="local[32]",
+        master=f"local[{cores}]",
         app_name=f"rehearsal_{num_convs}",
         shuffle_partitions=64,
     )
@@ -202,7 +205,7 @@ def run_stages(num_convs: int) -> dict:
         os.path.join(fixture_dir(num_convs), "transcripts.parquet")
     )
     n_turns = turns.count()
-    warm_python_workers(spark, 128)
+    warm_python_workers(spark, cores * 4)
 
     laps: dict[str, float] = {}
 
@@ -256,6 +259,7 @@ def run_stages(num_convs: int) -> dict:
         )
     out = {
         "num_convs": num_convs,
+        "cores": cores,
         "turns": n_turns,
         "n_reps": n_reps,
         "stages": laps,

@@ -5,6 +5,8 @@ stay correct."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from cpdd_spark.assemble import assemble_documents
@@ -313,3 +315,112 @@ def test_record_builds_its_rows_in_the_jvm(spark, tmp_path, monkeypatch):
     metrics = {r["stage"]: (r["rows"], r["t_start"], r["t_end"], r["seconds"])
                for r in pipe.io.read("metrics").collect()}
     assert metrics == {"documents": (7, 1.0, 2.5, 1.5), "clusters": (7, 2.5, 4.0, 1.5)}
+
+
+def _plan_paths(node, above=()):
+    """``(node, ancestors)`` for every node of a physical plan, through AQE
+    wrappers and query stages."""
+    yield node, above
+    name, above = node.nodeName(), above + (node,)
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_paths(node.executedPlan(), above)
+    elif name.endswith("QueryStage"):
+        yield from _plan_paths(node.plan(), above)
+    else:
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from _plan_paths(kids.apply(i), above)
+
+
+def test_stream_index_docs_meet_the_batch_by_broadcast(spark, tmp_path, monkeypatch):
+    """The stream's near tier reads the stored index docs (the shingle
+    sets) only as the streamed side of broadcast joins: in the batch's one
+    collect, every scan of the docs directory has a BroadcastHashJoin above
+    it and no exchange or broadcast, so no stored set is repartitioned and
+    per-batch shuffle does not grow with the index. Automatic broadcast is
+    off, the plan a large index gets: the batch side's hints decide."""
+    from cpdd_spark.streaming import IncrementalDedup
+
+    def turns(batch):
+        return spark.createDataFrame(
+            [(c, 0, "user", " ".join(f"tok{i}" for i in range(s, s + n)), "", None)
+             for c, s, n in batch],
+            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        )
+
+    index = str(tmp_path / "nearidx")
+    dedup = IncrementalDedup(spark, str(tmp_path / "clusters"), near_index_dir=index)
+    dedup.process_batch(turns([("a1", 0, 60), ("u1", 500, 40)]), 0)
+    collected = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    to_pandas = frame.toPandas
+
+    def capture(self):
+        collected.append(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame, "toPandas", capture)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        dedup.process_batch(turns([("b1", 0, 52), ("v1", 900, 40)]), 1)
+    finally:
+        spark.conf.set(key, old)
+    assert len(collected) == 1
+    plan = collected[0]._jdf.queryExecution().executedPlan()
+    docs_dir = os.path.join(index, "docs")
+    scans = [
+        (list(node.requiredSchema().fieldNames()), [a.nodeName() for a in above])
+        for node, above in _plan_paths(plan)
+        if node.nodeName().startswith("Scan parquet")
+        and node.relation().location().rootPaths().apply(0).toUri().getPath() == docs_dir
+    ]
+    assert any("shingles" in cols for cols, _ in scans), scans
+    for scan, above in scans:
+        assert "BroadcastHashJoin" in above, (scan, above)
+        banned = {"Exchange", "ShuffleQueryStage", "AQEShuffleRead", "BroadcastExchange",
+                  "BroadcastQueryStage"}
+        assert not banned & set(above), (scan, above)
+
+
+def test_stream_hot_stored_bucket_broadcasts_no_set_per_pair(spark, tmp_path, monkeypatch):
+    """A family of near duplicates stored as many representatives shares
+    its band buckets, so one new member pairs with all of them. The batch
+    side of that verify is broadcast as thin ``(a, b)`` pairs and, apart,
+    the fresh shingle sets: no broadcast carries a set per pair. The new
+    member still links to the family's cluster."""
+    from cpdd_spark.streaming import IncrementalDedup
+
+    def turns(batch):
+        return spark.createDataFrame(
+            [(c, 0, "user", " ".join(f"tok{i}" for i in range(n)), "", None) for c, n in batch],
+            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        )
+
+    clusters = str(tmp_path / "clusters")
+    dedup = IncrementalDedup(spark, clusters, near_index_dir=str(tmp_path / "nearidx"))
+    # prefixes of one token run: each pair is above tau, so all 20 are
+    # stored representatives of one cluster
+    dedup.process_batch(turns([(f"f{i:02d}", 60 + i) for i in range(20)]), 0)
+    collected = []
+    frame = type(spark.range(1))
+    to_pandas = frame.toPandas
+
+    def capture(self):
+        collected.append(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame, "toPandas", capture)
+    dedup.process_batch(turns([("g1", 85)]), 1)  # new content, near f05..f19
+    assert len(collected) == 1
+    plan = collected[0]._jdf.queryExecution().executedPlan()
+    broadcast = []
+    for node, _ in _plan_paths(plan):
+        if node.nodeName() == "BroadcastExchange":
+            out = node.output()
+            broadcast.append({out.apply(i).name() for i in range(out.size())})
+    assert any("sh_a" in cols for cols in broadcast), broadcast
+    assert not [cols for cols in broadcast if {"b", "sh_a"} <= cols], broadcast
+    got = {r["conv_id"]: r["cluster_id"] for r in spark.read.parquet(clusters).collect()}
+    assert got["g1"] == "f00" and set(got.values()) == {"f00"}, got
